@@ -22,16 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
-    "q6_forecast_revenue", "a1_group_rollup", "a2_count_by_value",
-    "w1_topk_per_group", "w5_lag_lead_context", "j3_topk_cosine",
-    "v4_hybrid_blend", "v1_chunk_words", "dedup_exact_groups",
-    "dedup_ngram_jaccard", "dedup_minhash_lsh", "ta_quality_features",
-    "ta_language_id", "i1_windowed_counts", "cc_components",
-    "graph_label_prop", "sketch_count_min", "train_dsir_importance",
-    "emb_centroid_drift",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:
@@ -45,12 +36,11 @@ def main() -> None:
     names = HEADLINE if "--all-headline" in flags else args
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from cdrc_semantic_search_spark.plans.catalog_queries import REGISTRY
     from cdrc_semantic_search_spark.session import get_spark
 
-    spark = get_spark(app_name="cdrc-bench-extra", parallelism=cpus)
+    spark = get_spark(app_name="cdrc-bench-extra", parallelism=None)
     spark.sparkContext.setLogLevel("ERROR")
     for t in ("lineitem", "embeddings", "documents"):
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()

@@ -1,11 +1,20 @@
-"""Spark mention/relation extraction over transcript turns.
+"""Spark mention/relation extraction and entity linking over transcript turns.
 
-``mapInPandas`` operators wrapping the pure extraction core
-(operators/extraction_core.py).  The entity catalogue is broadcast once
-(``sc.broadcast``) and each Python worker builds the alias automaton a
-single time per broadcast epoch, then streams Arrow batches through it —
-no per-row Python dispatch, no per-batch setup cost
-(BASELINE.json input_hint: "vectorized pandas/Arrow UDFs throughout").
+One ``mapInArrow`` family wrapping the pure extraction core
+(operators/extraction_core.py).  The entity catalogue and the entity index
+are broadcast once (``sc.broadcast``); each Python worker builds the alias
+automaton a single time per broadcast epoch, then streams Arrow batches
+through it.  Both operators share one worker-side linker (:class:`_Linker`):
+exact alias hits first, then a per-broadcast-epoch cache of embedding
+links filled by one batched ``_topk_blend`` call per batch for the
+surfaces it has not seen.  The Python boundary is crossed once per batch,
+with no pandas on either side of the worker.
+
+The plan is map-only: extraction, alias linking and the embedding fallback
+all run inside one Arrow stage against broadcast-only state, so the fact
+table never shuffles.  Linking by joins instead (broadcast alias join,
+``distinct`` over unresolved surfaces, join back) costs four exchanges and
+runs the extraction UDF twice per plan.
 
 Reference analog: the reference has no sub-chunk extraction (whole chunks
 are the retrieval unit); this is the KG graft's D6 operator (SURVEY §2.11).
@@ -13,17 +22,17 @@ are the retrieval unit); this is the KG graft's D6 operator (SURVEY §2.11).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from cdrc_semantic_search_spark.encoder import normalize_surface
 from cdrc_semantic_search_spark.functions.scale import fan_in
 from cdrc_semantic_search_spark.operators.extraction_core import (
     AliasMatcher,
     extract_turn,
 )
+from cdrc_semantic_search_spark.operators.linking import _topk_blend
 
 # worker-side matcher cache, keyed by a per-broadcast token: the automaton is
 # built once per python worker per broadcast epoch, then reused across tasks
@@ -53,87 +62,156 @@ def broadcast_catalogue(spark, entities_pdf: pd.DataFrame):
 
 MENTIONS_SCHEMA = (
     "conv_id string, turn_idx int, ts timestamp, mention_idx int, surface string, "
-    "start int, end int, exact boolean"
+    "start int, end int, exact boolean, "
+    "entity_id string, link_score double, link_method string"
 )
-
-CANDIDATES_SCHEMA = (
-    "conv_id string, turn_idx int, ts timestamp, rel_idx int, pred string, "
-    "subj_surface string, subj_exact boolean, "
-    "obj_surface string, obj_exact boolean"
-)
-
-
-def extract_mentions(transcripts: DataFrame, bc_catalogue) -> DataFrame:
-    """transcripts → mentions(conv_id, turn_idx, mention_idx, surface, start, end, exact)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = _get_matcher(bc_catalogue)
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, ts, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["ts"], pdf["text"]
-            ):
-                mentions, _ = extract_turn(text or "", matcher)
-                for mi, m in enumerate(mentions):
-                    rows.append(
-                        (conv_id, turn_idx, ts, mi, m.surface, m.start, m.end, m.exact)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "ts", "mention_idx", "surface",
-                    "start", "end", "exact",
-                ],
-            )
-
-    return fan_in(transcripts.select("conv_id", "turn_idx", "ts", "text")).mapInPandas(
-        run, schema=MENTIONS_SCHEMA
-    )
-
-
-def extract_candidates(transcripts: DataFrame, bc_catalogue) -> DataFrame:
-    """transcripts → relation candidates with surface forms (pre-linking)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = _get_matcher(bc_catalogue)
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, ts, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["ts"], pdf["text"]
-            ):
-                _, relations = extract_turn(text or "", matcher)
-                for ri, (pred, subj, obj) in enumerate(relations):
-                    rows.append(
-                        (
-                            conv_id, turn_idx, ts, ri, pred,
-                            subj.surface, subj.exact,
-                            obj.surface, obj.exact,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "ts", "rel_idx", "pred",
-                    "subj_surface", "subj_exact", "obj_surface", "obj_exact",
-                ],
-            )
-
-    return fan_in(transcripts.select("conv_id", "turn_idx", "ts", "text")).mapInPandas(
-        run, schema=CANDIDATES_SCHEMA
-    )
-
-
-# ---------------------------------------------------------------------------
-# Fused extraction + linking (the map-only production plan)
-# ---------------------------------------------------------------------------
 
 TRIPLES_SCHEMA = (
     "conv_id string, turn_idx int, ts timestamp, "
     "subj_entity_id string, pred string, obj_entity_id string, score double"
 )
 
-# per-worker link cache: normalized surface → (entity_id|None, score)
-_LINK_CACHE: dict[str, dict] = {}
+# per-worker embedding-link cache, keyed by (index broadcast token, link
+# settings): normalized surface → (entity_id|None, score). Below-threshold
+# surfaces keep their top-1 score with a None id; an empty candidate list
+# stores NaN.
+_LINK_CACHE: dict[tuple, dict[str, tuple[str | None, float]]] = {}
+
+
+class _Linker:
+    """Worker-side linker shared by both fused operators.
+
+    ``links(keys)`` maps each normalized surface to ``(entity_id|None,
+    score, link_method|None)``: alias hits are ``(id, 1.0, "alias")``,
+    embedding links carry the top-1 blended score and ``"embed"``, and
+    unlinked surfaces have a None id and method.  Surfaces repeat heavily
+    (hot entities), so the embedding fallback only runs for keys missing
+    from the cache, as one batched encode + top-k.
+    """
+
+    def __init__(self, bc_catalogue, bc_index, alpha, link_threshold, query_mode):
+        self.matcher = _get_matcher(bc_catalogue)
+        token, self.index = bc_index.value
+        key = (token, alpha, link_threshold, query_mode)
+        if key not in _LINK_CACHE:  # new broadcast epoch: drop stale caches
+            _LINK_CACHE.clear()
+            _LINK_CACHE[key] = {}
+        self.cache = _LINK_CACHE[key]
+        self.alias = self.matcher.alias_to_entity
+        self.alpha, self.threshold, self.mode = alpha, link_threshold, query_mode
+
+    def links(self, keys: set[str]) -> dict[str, tuple[str | None, float, str | None]]:
+        cache, alias = self.cache, self.alias
+        unknown = sorted(k for k in keys if k not in alias and k not in cache)
+        if unknown:
+            ranked = _topk_blend(
+                self.index, unknown, k=1, alpha=self.alpha, mode=self.mode
+            )
+            for form, r in zip(unknown, ranked):
+                if not r:
+                    cache[form] = (None, float("nan"))
+                elif r[0][1] >= self.threshold:
+                    cache[form] = r[0]
+                else:
+                    cache[form] = (None, r[0][1])
+        out = {}
+        for k in keys:
+            eid = alias.get(k)
+            if eid is not None:
+                out[k] = (eid, 1.0, "alias")
+            else:
+                eid, score = cache[k]
+                out[k] = (eid, score, None if eid is None else "embed")
+        return out
+
+
+def _turn_columns(batch: pa.RecordBatch, idxs: list[int]) -> list[pa.Array]:
+    """(conv_id, turn_idx, ts) of the input rows ``idxs``, in order."""
+    take = pa.array(idxs, type=pa.int32())
+    return [
+        batch.column("conv_id").take(take).cast(pa.string()),
+        batch.column("turn_idx").take(take).cast(pa.int32()),
+        batch.column("ts").take(take),
+    ]
+
+
+def _triples_batch(batch: pa.RecordBatch, linker: _Linker) -> pa.RecordBatch:
+    pending = []  # (row, pred, subj key, obj key)
+    keys: set[str] = set()
+    for i, t in enumerate(batch.column("text").to_pylist()):
+        _, relations = extract_turn(t or "", linker.matcher)
+        for pred, subj, obj in relations:
+            s_key = normalize_surface(subj.surface)
+            o_key = normalize_surface(obj.surface)
+            keys.add(s_key)
+            keys.add(o_key)
+            pending.append((i, pred, s_key, o_key))
+    links = linker.links(keys)
+
+    idxs, c_s, c_p, c_o, c_sc = [], [], [], [], []
+    for i, pred, s_key, o_key in pending:
+        s_id, s_score, _ = links[s_key]
+        o_id, o_score, _ = links[o_key]
+        if s_id is not None and o_id is not None and s_id != o_id:
+            idxs.append(i)
+            c_s.append(s_id)
+            c_p.append(pred)
+            c_o.append(o_id)
+            c_sc.append(s_score if s_score < o_score else o_score)
+    return pa.RecordBatch.from_arrays(
+        [
+            *_turn_columns(batch, idxs),
+            pa.array(c_s, type=pa.string()),
+            pa.array(c_p, type=pa.string()),
+            pa.array(c_o, type=pa.string()),
+            pa.array(c_sc, type=pa.float64()),
+        ],
+        names=["conv_id", "turn_idx", "ts", "subj_entity_id", "pred", "obj_entity_id", "score"],
+    )
+
+
+def _mentions_batch(batch: pa.RecordBatch, linker: _Linker) -> pa.RecordBatch:
+    idxs, c_mi, c_surf, c_start, c_end, c_exact, c_key = [], [], [], [], [], [], []
+    for i, t in enumerate(batch.column("text").to_pylist()):
+        mentions, _ = extract_turn(t or "", linker.matcher)
+        for mi, m in enumerate(mentions):
+            idxs.append(i)
+            c_mi.append(mi)
+            c_surf.append(m.surface)
+            c_start.append(m.start)
+            c_end.append(m.end)
+            c_exact.append(m.exact)
+            c_key.append(normalize_surface(m.surface))
+    links = linker.links(set(c_key))
+    linked = [links[k] for k in c_key]
+    return pa.RecordBatch.from_arrays(
+        [
+            *_turn_columns(batch, idxs),
+            pa.array(c_mi, type=pa.int32()),
+            pa.array(c_surf, type=pa.string()),
+            pa.array(c_start, type=pa.int32()),
+            pa.array(c_end, type=pa.int32()),
+            pa.array(c_exact, type=pa.bool_()),
+            pa.array([e for e, _, _ in linked], type=pa.string()),
+            pa.array([s for _, s, _ in linked], type=pa.float64()),
+            pa.array([m for _, _, m in linked], type=pa.string()),
+        ],
+        names=[
+            "conv_id", "turn_idx", "ts", "mention_idx", "surface", "start", "end",
+            "exact", "entity_id", "link_score", "link_method",
+        ],
+    )
+
+
+def _fused(body, schema, transcripts, bc_catalogue, bc_index, alpha, link_threshold, query_mode):
+    def run(batches):
+        linker = _Linker(bc_catalogue, bc_index, alpha, link_threshold, query_mode)
+        for batch in batches:
+            yield body(batch, linker)
+
+    return fan_in(transcripts.select("conv_id", "turn_idx", "ts", "text")).mapInArrow(
+        run, schema=schema
+    )
 
 
 def extract_linked_triples(
@@ -144,98 +222,16 @@ def extract_linked_triples(
     link_threshold: float,
     query_mode: str = "hybrid",
 ) -> DataFrame:
-    """transcripts → fully linked triples in ONE mapInPandas pass.
-
-    The scale-defining plan shape: extraction, exact alias linking and the
-    embedding fallback all run inside one Arrow batch against
-    broadcast-only state (alias automaton + entity index) — a map-only
-    stage with ZERO shuffles on the fact table.  The join-based
-    formulation (plans/kg_pipeline.triples_joined) is semantically
-    identical (tested) but pays four shuffle stages; at 10^12 turns the
-    difference is the whole game.
-
-    Worker-side memoization: surfaces repeat heavily (hot entities), so
-    embedding fallbacks hit a per-worker cache keyed by normalized form.
-    """
-    from cdrc_semantic_search_spark.encoder import normalize_surface
-    from cdrc_semantic_search_spark.operators.linking import _topk_blend
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = _get_matcher(bc_catalogue)
-        token, index = bc_index.value
-        cache = _LINK_CACHE.setdefault(token, {})
-        if len(_LINK_CACHE) > 1:  # new broadcast epoch: drop stale caches
-            for k in [k for k in _LINK_CACHE if k != token]:
-                del _LINK_CACHE[k]
-        alias_map = matcher.alias_to_entity
-
-        for pdf in batches:
-            pending: list[tuple] = []  # (conv, turn, ts, pred, s_key, o_key)
-            unknown: set[str] = set()
-            # plain-list iteration: pandas Series iteration pays per-item
-            # overhead that dominates at ~20 us/turn of real work
-            for conv_id, turn_idx, ts, text in zip(
-                pdf["conv_id"].tolist(),
-                pdf["turn_idx"].tolist(),
-                pdf["ts"].tolist(),
-                pdf["text"].tolist(),
-            ):
-                _, relations = extract_turn(text or "", matcher)
-                for pred, subj, obj in relations:
-                    s_key = normalize_surface(subj.surface)
-                    o_key = normalize_surface(obj.surface)
-                    for key in (s_key, o_key):
-                        if key not in alias_map and key not in cache:
-                            unknown.add(key)
-                    pending.append((conv_id, turn_idx, ts, pred, s_key, o_key))
-
-            if unknown:  # one batched encode+top-k for all new surfaces
-                forms = sorted(unknown)
-                ranked = _topk_blend(index, forms, k=1, alpha=alpha, mode=query_mode)
-                for form, r in zip(forms, ranked):
-                    if r and r[0][1] >= link_threshold:
-                        cache[form] = (r[0][0], r[0][1])
-                    else:
-                        cache[form] = (None, float("nan"))
-
-            # column-wise assembly: DataFrame-from-dict-of-lists avoids the
-            # per-row tuple boxing of DataFrame-from-records
-            c_conv, c_turn, c_ts, c_s, c_p, c_o, c_sc = [], [], [], [], [], [], []
-            for conv_id, turn_idx, ts, pred, s_key, o_key in pending:
-                s_id, s_score = (
-                    (alias_map[s_key], 1.0) if s_key in alias_map else cache[s_key]
-                )
-                o_id, o_score = (
-                    (alias_map[o_key], 1.0) if o_key in alias_map else cache[o_key]
-                )
-                if s_id is not None and o_id is not None and s_id != o_id:
-                    c_conv.append(conv_id)
-                    c_turn.append(turn_idx)
-                    c_ts.append(ts)
-                    c_s.append(s_id)
-                    c_p.append(pred)
-                    c_o.append(o_id)
-                    c_sc.append(s_score if s_score < o_score else o_score)
-            # explicit dtypes: an all-empty batch would otherwise default
-            # every column to float64, which Arrow can't cast to timestamp
-            yield pd.DataFrame(
-                {
-                    "conv_id": pd.Series(c_conv, dtype="object"),
-                    "turn_idx": pd.Series(c_turn, dtype="int32"),
-                    "ts": pd.Series(c_ts, dtype="datetime64[us]"),
-                    "subj_entity_id": pd.Series(c_s, dtype="object"),
-                    "pred": pd.Series(c_p, dtype="object"),
-                    "obj_entity_id": pd.Series(c_o, dtype="object"),
-                    "score": pd.Series(c_sc, dtype="float64"),
-                }
-            )
-
-    return fan_in(transcripts.select("conv_id", "turn_idx", "ts", "text")).mapInPandas(
-        run, schema=TRIPLES_SCHEMA
+    """transcripts → fully linked triples (``TRIPLES_SCHEMA``) in one
+    ``mapInArrow`` pass.  A relation is kept when both arguments link to
+    different entities; its score is the weaker of the two link scores."""
+    return _fused(
+        _triples_batch, TRIPLES_SCHEMA, transcripts, bc_catalogue, bc_index,
+        alpha, link_threshold, query_mode,
     )
 
 
-def extract_linked_triples_arrow(
+def extract_linked_mentions(
     transcripts: DataFrame,
     bc_catalogue,
     bc_index,
@@ -243,89 +239,10 @@ def extract_linked_triples_arrow(
     link_threshold: float,
     query_mode: str = "hybrid",
 ) -> DataFrame:
-    """``mapInArrow`` twin of :func:`extract_linked_triples`.
-
-    Skips the pandas materialization on BOTH sides of the worker: inputs
-    come as pyarrow RecordBatches (string column → one ``to_pylist``
-    call, no pandas object-array construction), outputs are built as
-    pyarrow arrays directly. Same semantics bit-for-bit (tested); ~the
-    serde share of task time is roughly equal to the extraction compute,
-    so shaving it matters at 10^12 turns.
-    """
-    import pyarrow as pa
-
-    from cdrc_semantic_search_spark.encoder import normalize_surface
-    from cdrc_semantic_search_spark.operators.linking import _topk_blend
-
-    def run(batches):
-        matcher = _get_matcher(bc_catalogue)
-        token, index = bc_index.value
-        cache = _LINK_CACHE.setdefault(token, {})
-        if len(_LINK_CACHE) > 1:
-            for k in [k for k in _LINK_CACHE if k != token]:
-                del _LINK_CACHE[k]
-        alias_map = matcher.alias_to_entity
-
-        for batch in batches:
-            conv = batch.column("conv_id").to_pylist()
-            turn = batch.column("turn_idx").to_pylist()
-            ts = batch.column("ts")
-            text = batch.column("text").to_pylist()
-            ts_type = ts.type
-
-            pending = []
-            unknown: set[str] = set()
-            for i, t in enumerate(text):
-                _, relations = extract_turn(t or "", matcher)
-                for pred, subj, obj in relations:
-                    s_key = normalize_surface(subj.surface)
-                    o_key = normalize_surface(obj.surface)
-                    for key in (s_key, o_key):
-                        if key not in alias_map and key not in cache:
-                            unknown.add(key)
-                    pending.append((i, pred, s_key, o_key))
-
-            if unknown:
-                forms = sorted(unknown)
-                ranked = _topk_blend(index, forms, k=1, alpha=alpha, mode=query_mode)
-                for form, r in zip(forms, ranked):
-                    if r and r[0][1] >= link_threshold:
-                        cache[form] = (r[0][0], r[0][1])
-                    else:
-                        cache[form] = (None, float("nan"))
-
-            idxs, c_s, c_p, c_o, c_sc = [], [], [], [], []
-            for i, pred, s_key, o_key in pending:
-                s_id, s_score = (
-                    (alias_map[s_key], 1.0) if s_key in alias_map else cache[s_key]
-                )
-                o_id, o_score = (
-                    (alias_map[o_key], 1.0) if o_key in alias_map else cache[o_key]
-                )
-                if s_id is not None and o_id is not None and s_id != o_id:
-                    idxs.append(i)
-                    c_s.append(s_id)
-                    c_p.append(pred)
-                    c_o.append(o_id)
-                    c_sc.append(s_score if s_score < o_score else o_score)
-
-            take = pa.array(idxs, type=pa.int32())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([conv[i] for i in idxs], type=pa.string()),
-                    pa.array([turn[i] for i in idxs], type=pa.int32()),
-                    ts.take(take),
-                    pa.array(c_s, type=pa.string()),
-                    pa.array(c_p, type=pa.string()),
-                    pa.array(c_o, type=pa.string()),
-                    pa.array(c_sc, type=pa.float64()),
-                ],
-                names=[
-                    "conv_id", "turn_idx", "ts",
-                    "subj_entity_id", "pred", "obj_entity_id", "score",
-                ],
-            )
-
-    return fan_in(transcripts.select("conv_id", "turn_idx", "ts", "text")).mapInArrow(
-        run, schema=TRIPLES_SCHEMA
+    """transcripts → linked mentions (``MENTIONS_SCHEMA``) in one
+    ``mapInArrow`` pass: one row per extracted mention, unlinked ones
+    included (NULL ``entity_id`` and ``link_method``)."""
+    return _fused(
+        _mentions_batch, MENTIONS_SCHEMA, transcripts, bc_catalogue, bc_index,
+        alpha, link_threshold, query_mode,
     )

@@ -1,6 +1,6 @@
 """Pure-Python mention/relation extraction core.
 
-Shared verbatim by the Spark operator (inside ``mapInPandas`` batches,
+Shared verbatim by the Spark operators (inside ``mapInArrow`` batches,
 operators/extraction.py) and the single-process oracle (oracle.py), so the
 distributed pipeline and the reference-semantics oracle agree by
 construction on extraction behavior; parity against generator ground

@@ -1,4 +1,4 @@
-"""Entity linking: broadcast alias join + top-k cosine over a broadcast index.
+"""Entity linking: alias lookup + top-k cosine over a broadcast entity index.
 
 This is the re-expression of the reference's retrieval core:
 
@@ -7,17 +7,20 @@ This is the re-expression of the reference's retrieval core:
   canonical name + alias form) broadcast to executors.
 * hybrid dense+sparse top-k query, α-blended
   (/root/reference/src/model.py:73-79, config/config.toml:13-15) →
-  NumPy BLAS matmul + ``argpartition`` top-k inside a ``mapInPandas``
-  batch, blended with a token-Jaccard sparse score:
+  NumPy BLAS matmul + ``argpartition`` top-k inside one Arrow batch,
+  blended with a token-Jaccard sparse score:
   ``score = α·cosine + (1−α)·jaccard``.
 * top-k tie-break: (score desc, entity_id asc) — FIXTURES.md §3.
 
 Physical strategy (100-TB reasoning): the mention side is huge, the
-entity side is small (thousands) — so the big side NEVER shuffles for the
-join.  Exact alias resolution is a **broadcast hash equi-join** on the
-normalized surface (J1/J2 pattern, /root/reference/src/datastore.py:28-42);
-only the *distinct unresolved surfaces* (a tiny set after exact matching)
-flow through the Python embedding path, and results re-join broadcast.
+entity side is small (thousands) — so the big side NEVER shuffles for
+linking.  Per-mention linking runs inside the fused extraction stage
+(operators/extraction): an exact alias lookup on the normalized surface,
+then ``_topk_blend`` over the broadcast index for the surfaces a worker
+has not seen yet, cached per broadcast epoch — no join touches the facts.
+The multi-candidate paths below (:func:`candidate_entities`,
+:func:`collective_link_mentions`) run over DISTINCT surfaces and join back
+broadcast.
 """
 
 from __future__ import annotations
@@ -27,14 +30,11 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cdrc_semantic_search_spark.config import Settings
 from cdrc_semantic_search_spark.encoder import encode_texts, normalize_surface
-
-_TOKEN_SPLIT = "[^a-z0-9]+"
-
 
 @dataclass
 class EntityIndex:
@@ -93,14 +93,6 @@ def build_entity_index(entities_pdf: pd.DataFrame, settings: Settings) -> Entity
 def norm_surface_col(col):
     """Catalyst twin of encoder.normalize_surface (lower, collapse ws, trim)."""
     return F.trim(F.regexp_replace(F.lower(col), "\\s+", " "))
-
-
-def alias_map_df(spark: SparkSession, index: EntityIndex) -> DataFrame:
-    """(norm_surface, entity_id) dimension table for the exact-path join."""
-    pdf = pd.DataFrame(
-        {"norm_surface": index.forms, "entity_id": list(index.entity_ids)}
-    )
-    return spark.createDataFrame(pdf)
 
 
 def _topk_blend(
@@ -188,103 +180,13 @@ def _topk_blend(
     return out
 
 
-def embed_link_surfaces(
-    surfaces_df: DataFrame, bc_index, settings: Settings
-) -> DataFrame:
-    """distinct surfaces → top-1 embedding link: (surface, entity_id, link_score).
-
-    ``bc_index`` is ``sc.broadcast(EntityIndex)``; links below
-    ``retrieval.link_threshold`` come back with NULL entity_id.
-    """
-    alpha = settings.retrieval.alpha
-    mode = settings.retrieval.query_mode
-    thr = settings.retrieval.link_threshold
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _token, index = bc_index.value  # (token, EntityIndex) broadcast
-        for pdf in batches:
-            surfaces = pdf["surface"].fillna("").tolist()
-            ranked = _topk_blend(index, surfaces, k=1, alpha=alpha, mode=mode)
-            ids, scores = [], []
-            for r in ranked:
-                if r and r[0][1] >= thr:
-                    ids.append(r[0][0])
-                    scores.append(r[0][1])
-                else:
-                    ids.append(None)
-                    scores.append(float(r[0][1]) if r else float("nan"))
-            yield pd.DataFrame(
-                {"surface": pdf["surface"], "entity_id": ids, "link_score": scores}
-            )
-
-    return surfaces_df.select("surface").mapInPandas(
-        run, schema="surface string, entity_id string, link_score double"
-    )
-
-
-def link_surfaces(
-    spark: SparkSession,
-    df: DataFrame,
-    surface_col: str,
-    index: EntityIndex,
-    bc_index,
-    settings: Settings,
-    out_prefix: str = "",
-) -> DataFrame:
-    """Attach ``{out_prefix}entity_id`` / ``{out_prefix}link_score`` /
-    ``{out_prefix}link_method`` for a surface column.
-
-    Plan shape: broadcast equi-join for the exact path; the embedding
-    fallback runs only over DISTINCT unresolved surfaces and re-joins
-    broadcast — the big fact side is never shuffled.
-    """
-    eid = f"{out_prefix}entity_id"
-    escore = f"{out_prefix}link_score"
-    emethod = f"{out_prefix}link_method"
-    norm = f"__norm_{out_prefix or 'surface'}"
-
-    amap = alias_map_df(spark, index).withColumnRenamed("entity_id", "__alias_eid")
-    with_norm = df.withColumn(norm, norm_surface_col(F.col(surface_col)))
-    joined = with_norm.join(
-        F.broadcast(amap), with_norm[norm] == amap["norm_surface"], "left"
-    ).drop("norm_surface")
-
-    unresolved = (
-        joined.filter(F.col("__alias_eid").isNull())
-        .select(F.col(norm).alias("surface"))
-        .distinct()
-    )
-    fallback = embed_link_surfaces(unresolved, bc_index, settings).select(
-        F.col("surface").alias(norm),
-        F.col("entity_id").alias("__fb_eid"),
-        F.col("link_score").alias("__fb_score"),
-    )
-    out = joined.join(F.broadcast(fallback), norm, "left")
-    return (
-        out.withColumn(eid, F.coalesce(F.col("__alias_eid"), F.col("__fb_eid")))
-        .withColumn(
-            escore,
-            F.when(F.col("__alias_eid").isNotNull(), F.lit(1.0)).otherwise(
-                F.col("__fb_score")
-            ),
-        )
-        .withColumn(
-            emethod,
-            F.when(F.col("__alias_eid").isNotNull(), F.lit("alias"))
-            .when(F.col("__fb_eid").isNotNull(), F.lit("embed"))
-            .otherwise(F.lit(None).cast("string")),
-        )
-        .drop("__alias_eid", "__fb_eid", "__fb_score", norm)
-    )
-
-
 def candidate_entities(
     surfaces_df: DataFrame, bc_index, settings: Settings, k: int = 3
 ) -> DataFrame:
     """distinct surfaces → TOP-K candidate links (surface, entity_id,
     score), one row per (surface, candidate) — the multi-candidate
-    sibling of :func:`embed_link_surfaces` (which keeps only the argmax).
-    Scores are rounded to 4 digits to absorb float32 batch-composition
+    sibling of the fused linker in operators/extraction (which keeps
+    only the argmax).  Scores are rounded to 4 digits to absorb float32 batch-composition
     noise in the BLAS matmul (same mitigation as the fused triple linker;
     every fixture margin is ≥ 1e-5 from a boundary, noise is ~1e-7)."""
     alpha = settings.retrieval.alpha

@@ -40,9 +40,20 @@ def _link(
         alpha=settings.retrieval.alpha,
         mode=settings.retrieval.query_mode,
     )[0]
-    if ranked and ranked[0][1] >= settings.retrieval.link_threshold:
+    if not ranked:
+        return None, float("nan")
+    if ranked[0][1] >= settings.retrieval.link_threshold:
         return ranked[0][0], ranked[0][1]
-    return None, float("nan")
+    return None, ranked[0][1]  # unlinked: keeps its top-1 score
+
+
+def _matcher_and_index(
+    entities: pd.DataFrame, settings: Settings
+) -> tuple[AliasMatcher, EntityIndex]:
+    matcher = AliasMatcher(
+        [(r.entity_id, [r.canonical_name, *list(r.aliases)]) for r in entities.itertuples()]
+    )
+    return matcher, build_entity_index(entities, settings)
 
 
 def oracle_triples(
@@ -52,10 +63,7 @@ def oracle_triples(
 ) -> pd.DataFrame:
     """→ (conv_id, turn_idx, subj_entity_id, pred, obj_entity_id, score)."""
     settings = settings or Settings()
-    matcher = AliasMatcher(
-        [(r.entity_id, [r.canonical_name, *list(r.aliases)]) for r in entities.itertuples()]
-    )
-    index = build_entity_index(entities, settings)
+    matcher, index = _matcher_and_index(entities, settings)
     rows = []
     ordered = transcripts.sort_values(["conv_id", "turn_idx"], kind="mergesort")
     for r in ordered.itertuples():
@@ -70,6 +78,36 @@ def oracle_triples(
     return pd.DataFrame(
         rows,
         columns=["conv_id", "turn_idx", "subj_entity_id", "pred", "obj_entity_id", "score"],
+    )
+
+
+def oracle_mentions(
+    transcripts: pd.DataFrame,
+    entities: pd.DataFrame,
+    settings: Settings | None = None,
+) -> pd.DataFrame:
+    """→ (conv_id, turn_idx, mention_idx, surface, entity_id, link_score,
+    link_method): one row per extracted mention, unlinked ones included."""
+    settings = settings or Settings()
+    matcher, index = _matcher_and_index(entities, settings)
+    rows = []
+    for r in transcripts.itertuples():
+        mentions, _ = extract_turn(r.text or "", matcher)
+        for mi, m in enumerate(mentions):
+            eid, score = _link(m.surface, index, settings)
+            if eid is None:
+                method = None
+            elif normalize_surface(m.surface) in matcher.alias_to_entity:
+                method = "alias"
+            else:
+                method = "embed"
+            rows.append((r.conv_id, r.turn_idx, mi, m.surface, eid, score, method))
+    return pd.DataFrame(
+        rows,
+        columns=[
+            "conv_id", "turn_idx", "mention_idx", "surface",
+            "entity_id", "link_score", "link_method",
+        ],
     )
 
 

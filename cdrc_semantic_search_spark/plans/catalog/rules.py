@@ -247,19 +247,11 @@ def kg_linking_ambiguity(spark, sf_dir):
     over the linked mention stream; the mode is a max-of-struct
     aggregate, not a window sort."""
     from cdrc_semantic_search_spark import fixtures
-    from cdrc_semantic_search_spark.operators.extraction import extract_mentions
-    from cdrc_semantic_search_spark.operators.linking import (
-        collective_link_mentions,
-    )
     from cdrc_semantic_search_spark.plans.kg_pipeline import KGPipeline
 
     fx = fixtures.generate(seed=42, n_conversations=40, n_entities=100)
     tdf, _ = fixtures.to_spark(spark, fx)
-    pipe = KGPipeline(spark, fx.entities)
-    raw = extract_mentions(tdf, pipe.bc_catalogue)
-    linked = collective_link_mentions(
-        raw, pipe.bc_index, pipe.settings, k=3, beta=0.25
-    )
+    linked = KGPipeline(spark, fx.entities).collective_mentions(tdf)
     per_ent = linked.groupBy("surface", "entity_id").agg(
         F.count(F.lit(1)).alias("c")
     )

@@ -258,19 +258,11 @@ def kg_collective_linking(spark, sf_dir):
     specification kernel, re-deriving mention extraction, support counts
     and the exact double arithmetic independently."""
     from cdrc_semantic_search_spark import fixtures
-    from cdrc_semantic_search_spark.operators.extraction import extract_mentions
-    from cdrc_semantic_search_spark.operators.linking import (
-        collective_link_mentions,
-    )
     from cdrc_semantic_search_spark.plans.kg_pipeline import KGPipeline
 
     fx = fixtures.generate(seed=42, n_conversations=40, n_entities=100)
     tdf, _ = fixtures.to_spark(spark, fx)
-    pipe = KGPipeline(spark, fx.entities)
-    raw = extract_mentions(tdf, pipe.bc_catalogue)
-    return collective_link_mentions(
-        raw, pipe.bc_index, pipe.settings, k=3, beta=0.25
-    )
+    return KGPipeline(spark, fx.entities).collective_mentions(tdf)
 
 
 # =====================================================================

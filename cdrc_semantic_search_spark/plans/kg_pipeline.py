@@ -7,11 +7,12 @@ per-partition ledger commits for idempotent resume.
 
 Plan-shape invariants (the 100-TB contract):
 * the transcripts fact table is read once, never shuffled before
-  extraction (mapInPandas is partition-local; salting only spreads rows);
-* every join touching the fact side is BROADCAST (alias map, fallback
-  links, entity dim) — zero fact-side shuffles until the final
-  aggregations, which group on (entity, pred, entity) — a space orders of
-  magnitude smaller than the input;
+  extraction (mapInArrow is partition-local; salting only spreads rows);
+* triples and mentions each come from ONE map-only Arrow stage that
+  extracts and links against broadcast state (alias automaton + entity
+  index) — zero fact-side shuffles until the final aggregations, which
+  group on (entity, pred, entity) — a space orders of magnitude smaller
+  than the input; the entity-dim enrich join of kg_nodes broadcasts;
 * kg_edges aggregation is a plain groupBy → partial (map-side) aggregation
   halves shuffle volume for free; hot-entity skew is AQE's problem
   (skew-join on) plus the salted two-stage option in operators/assembly.
@@ -28,13 +29,10 @@ from pyspark.sql import functions as F
 from cdrc_semantic_search_spark.config import Settings
 from cdrc_semantic_search_spark.operators.extraction import (
     broadcast_catalogue,
-    extract_candidates,
-    extract_mentions,
+    extract_linked_mentions,
+    extract_linked_triples,
 )
-from cdrc_semantic_search_spark.operators.linking import (
-    build_entity_index,
-    link_surfaces,
-)
+from cdrc_semantic_search_spark.operators.linking import build_entity_index
 from cdrc_semantic_search_spark.sources.catalog import ParquetTableCatalog
 
 log = logging.getLogger(__name__)
@@ -50,84 +48,47 @@ class KGPipeline:
         self.settings = settings or Settings()
         self.entities_pdf = entities_pdf
         self.bc_catalogue = broadcast_catalogue(spark, entities_pdf)
-        self.index = build_entity_index(entities_pdf, self.settings)
-        self.bc_index = spark.sparkContext.broadcast((uuid.uuid4().hex, self.index))
+        index = build_entity_index(entities_pdf, self.settings)
+        self.bc_index = spark.sparkContext.broadcast((uuid.uuid4().hex, index))
 
     # ------------------------------------------------------------------ core
-    def mentions(self, transcripts: DataFrame) -> DataFrame:
-        """Linked mentions table (FIXTURES.md §3 `mentions` shape)."""
-        raw = extract_mentions(transcripts, self.bc_catalogue)
-        return link_surfaces(
-            self.spark, raw, "surface", self.index, self.bc_index, self.settings
+    def _extract(self, op, transcripts: DataFrame) -> DataFrame:
+        r = self.settings.retrieval
+        return op(
+            transcripts,
+            self.bc_catalogue,
+            self.bc_index,
+            alpha=r.alpha,
+            link_threshold=r.link_threshold,
+            query_mode=r.query_mode,
         )
 
-    def triples(self, transcripts: DataFrame, impl: str = "arrow") -> DataFrame:
-        """(conv_id, turn_idx, subj_entity_id, pred, obj_entity_id, score).
+    def mentions(self, transcripts: DataFrame) -> DataFrame:
+        """Linked mentions table (FIXTURES.md §3 `mentions` shape): one row
+        per extracted mention, unlinked ones included, from the same fused
+        map-only Arrow stage as :meth:`triples`
+        (operators/extraction.extract_linked_mentions)."""
+        return self._extract(extract_linked_mentions, transcripts)
 
-        Production plan: fused map-only extraction+linking — one
-        mapInArrow stage against broadcast state, zero shuffles on the
-        fact table (operators/extraction.extract_linked_triples_arrow;
-        measured ~1.8× the mapInPandas twin at 930k turns — pandas
-        materialization was roughly half of worker time). ``impl="pandas"``
-        keeps the bit-equal mapInPandas twin (tested in test_kg_parity).
+    def triples(self, transcripts: DataFrame) -> DataFrame:
+        """(conv_id, turn_idx, ts, subj_entity_id, pred, obj_entity_id, score).
+
+        Fused map-only extraction+linking: one mapInArrow stage against
+        broadcast state, zero shuffles on the fact table
+        (operators/extraction.extract_linked_triples).
         score = min(subj link score, obj link score) — the weakest link
         bounds triple confidence (alias hits score 1.0; embedding-fallback
         links carry their hybrid α·dense+(1−α)·sparse score, the
         reference's blend from config.toml:14-15 / model.py:74-78).
         """
-        from cdrc_semantic_search_spark.operators.extraction import (
-            extract_linked_triples,
-            extract_linked_triples_arrow,
-        )
-
-        fused = extract_linked_triples_arrow if impl == "arrow" else extract_linked_triples
-        return fused(
-            transcripts,
-            self.bc_catalogue,
-            self.bc_index,
-            alpha=self.settings.retrieval.alpha,
-            link_threshold=self.settings.retrieval.link_threshold,
-            query_mode=self.settings.retrieval.query_mode,
-        )
-
-    def triples_joined(self, transcripts: DataFrame) -> DataFrame:
-        """The join-based formulation of ``triples`` (broadcast alias
-        equi-join + distinct-surface embedding fallback).  Semantically
-        identical to the fused plan (tested in test_kg_parity) but pays
-        four shuffle stages — kept as the didactic/verification twin.
-        """
-        cand = extract_candidates(transcripts, self.bc_catalogue)
-        linked = link_surfaces(
-            self.spark, cand, "subj_surface", self.index, self.bc_index,
-            self.settings, out_prefix="subj_",
-        )
-        linked = link_surfaces(
-            self.spark, linked, "obj_surface", self.index, self.bc_index,
-            self.settings, out_prefix="obj_",
-        )
-        return (
-            linked.filter(
-                F.col("subj_entity_id").isNotNull()
-                & F.col("obj_entity_id").isNotNull()
-                & (F.col("subj_entity_id") != F.col("obj_entity_id"))
-            )
-            .select(
-                "conv_id",
-                "turn_idx",
-                "ts",
-                "subj_entity_id",
-                "pred",
-                "obj_entity_id",
-                F.least("subj_link_score", "obj_link_score").alias("score"),
-            )
-        )
+        return self._extract(extract_linked_triples, transcripts)
 
     def collective_mentions(
         self, transcripts: DataFrame, k: int = 3, beta: float = 0.25
     ) -> DataFrame:
         """Coherence-reranked mention disambiguation
-        (operators/linking.collective_link_mentions over
-        extract_mentions): each mention's top-k candidates are rescored
+        (operators/linking.collective_link_mentions over :meth:`mentions`):
+        each mention's top-k candidates are rescored
         by within-conversation candidate support before the argmax — the
         collective-linking alternative to the per-mention ``mentions()``
         path when conversations are topically coherent. Same broadcast
@@ -137,9 +98,8 @@ class KGPipeline:
             collective_link_mentions,
         )
 
-        raw = extract_mentions(transcripts, self.bc_catalogue)
         return collective_link_mentions(
-            raw, self.bc_index, self.settings, k=k, beta=beta
+            self.mentions(transcripts), self.bc_index, self.settings, k=k, beta=beta
         )
 
     def entity_communities(

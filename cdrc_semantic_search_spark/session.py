@@ -13,6 +13,7 @@ Every knob here is a 100-TB lever, not a test convenience:
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import tempfile
@@ -48,7 +49,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if parallelism is None:
-        parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        parallelism = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     if shuffle_partitions is None:
         shuffle_partitions = max(parallelism * 2, 8)
 
@@ -138,6 +139,6 @@ def _warm_python_workers(spark) -> None:
         # later pandas/Arrow stage
         spark.sparkContext.parallelize(range(par), par).map(_init).count()
     except Exception:  # pragma: no cover — init best-effort, never fatal
-        pass
+        logging.warning("python worker pre-fork failed", exc_info=True)
     finally:
         spark.sparkContext.setJobDescription(None)

@@ -7,10 +7,15 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from cdrc_semantic_search_spark.config import Settings
-from cdrc_semantic_search_spark.oracle import oracle_triples, precision_recall
+from cdrc_semantic_search_spark.oracle import (
+    oracle_mentions,
+    oracle_triples,
+    precision_recall,
+)
 from cdrc_semantic_search_spark.plans.kg_pipeline import KGPipeline
 
 KEY = ["conv_id", "turn_idx", "subj_entity_id", "pred", "obj_entity_id"]
+MENTION_KEY = ["conv_id", "turn_idx", "mention_idx", "surface", "entity_id", "link_method"]
 
 
 def test_oracle_matches_ground_truth(fixture):
@@ -41,15 +46,31 @@ def test_spark_triples_equal_oracle_exactly(spark, fixture, spark_fixture):
     assert got_set == want_set
 
 
+def _mention_rows(df: pd.DataFrame) -> dict:
+    """(conv, turn, mention_idx, surface, entity_id, method) → link_score,
+    with NaN mapped to None so that NaN compares equal to NaN."""
+    df = df.astype(object).where(df.notna(), None)
+    return {
+        tuple(r[c] for c in MENTION_KEY): r["link_score"] for _, r in df.iterrows()
+    }
+
+
 def test_spark_equals_oracle_per_mode(spark, fixture, spark_fixture):
     """Spark ≡ oracle for EVERY query_mode of the reference enum
     (utils.py:30) — guards the mode plumbing end-to-end (the round-1 oracle
-    silently stayed hybrid; ADVICE.md)."""
+    silently stayed hybrid; ADVICE.md). Covers both fused outputs: the
+    triple sets, and every mention with its link and exact link score.
+    The last case raises the link threshold so that some embedding links
+    fall below it and stay unlinked with their top-1 score."""
     from cdrc_semantic_search_spark.config import RetrievalSettings
 
     tdf, _ = spark_fixture
-    for mode in ("default", "sparse", "hybrid"):
-        settings = Settings(retrieval=RetrievalSettings(query_mode=mode))
+    cases = [RetrievalSettings(query_mode=m) for m in ("default", "sparse", "hybrid")]
+    cases.append(RetrievalSettings(query_mode="hybrid", link_threshold=0.78))
+    seen = set()
+    for retrieval in cases:
+        mode = (retrieval.query_mode, retrieval.link_threshold)
+        settings = Settings(retrieval=retrieval)
         pipe = KGPipeline(spark, fixture.entities, settings)
         got = pipe.triples(tdf).toPandas()
         want = oracle_triples(fixture.transcripts, fixture.entities, settings)
@@ -57,15 +78,36 @@ def test_spark_equals_oracle_per_mode(spark, fixture, spark_fixture):
         want_set = {tuple(t) for t in want[KEY].itertuples(index=False)}
         assert got_set == want_set, f"mode={mode}: spark/oracle triple sets differ"
 
+        got_m = pipe.mentions(tdf).select(*MENTION_KEY, "link_score").toPandas()
+        want_m = oracle_mentions(fixture.transcripts, fixture.entities, settings)
+        assert len(got_m) == len(want_m), f"mode={mode}: mention counts differ"
+        assert _mention_rows(got_m) == _mention_rows(want_m), (
+            f"mode={mode}: spark/oracle mentions differ"
+        )
+        seen |= set(want_m["link_method"].fillna("unlinked"))
+        if want_m.loc[want_m["entity_id"].isna(), "link_score"].notna().any():
+            seen.add("unlinked with score")
+    # the cases reach every link outcome
+    assert seen == {"alias", "embed", "unlinked", "unlinked with score"}
 
-def test_fused_equals_joined_plan(spark, fixture, spark_fixture):
-    """The map-only fused plan and the broadcast-join plan must emit the
-    same triple set — the plans differ only physically."""
+
+def test_fused_outputs_empty_input(spark, fixture, spark_fixture):
+    """An input with no rows gives empty triples and mentions frames that
+    still carry their declared schemas."""
+    from cdrc_semantic_search_spark.operators.extraction import (
+        MENTIONS_SCHEMA,
+        TRIPLES_SCHEMA,
+    )
+
     tdf, _ = spark_fixture
     pipe = KGPipeline(spark, fixture.entities, Settings())
-    fused = {tuple(r) for r in pipe.triples(tdf).select(*KEY).collect()}
-    joined = {tuple(r) for r in pipe.triples_joined(tdf).select(*KEY).collect()}
-    assert fused == joined
+    empty = tdf.filter("conv_id = 'nope'")
+    for df, ddl in ((pipe.triples(empty), TRIPLES_SCHEMA), (pipe.mentions(empty), MENTIONS_SCHEMA)):
+        want = spark.createDataFrame([], ddl).schema
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in want
+        ]
+        assert df.count() == 0
 
 
 def test_per_turn_text_equality_under_stable_ordering(spark, fixture, spark_fixture):
@@ -89,22 +131,6 @@ def test_per_turn_text_equality_under_stable_ordering(spark, fixture, spark_fixt
     pd.testing.assert_frame_equal(out[["conv_id", "turn_idx", "text"]], src)
     # rn is dense and equals turn_idx + 1 (turn_idx is 0-based dense)
     assert (out["rn"] == out["turn_idx"] + 1).all()
-
-
-def test_arrow_variant_equals_pandas_fused(spark, fixture, spark_fixture):
-    """mapInArrow and mapInPandas fused operators are bit-equal twins
-    (measured same-speed at 1.2M turns; kept for the pyarrow-native path)."""
-    from cdrc_semantic_search_spark.operators.extraction import (
-        extract_linked_triples,
-        extract_linked_triples_arrow,
-    )
-
-    tdf, _ = spark_fixture
-    pipe = KGPipeline(spark, fixture.entities, Settings())
-    a = extract_linked_triples(tdf, pipe.bc_catalogue, pipe.bc_index, 0.75, 0.0)
-    b = extract_linked_triples_arrow(tdf, pipe.bc_catalogue, pipe.bc_index, 0.75, 0.0)
-    assert a.select(*KEY).exceptAll(b.select(*KEY)).count() == 0
-    assert b.select(*KEY).exceptAll(a.select(*KEY)).count() == 0
 
 
 def test_parity_at_canonical_fixture_size(spark):

@@ -44,20 +44,18 @@ def test_dim_join_is_broadcast(spark):
 
 
 def test_fused_triples_plan_is_map_only(spark, fixture, spark_fixture):
-    """The production triples plan must contain NO exchange (shuffle) —
-    scan → project → one fused map operator, nothing else (mapInArrow by
-    default; the mapInPandas twin must keep the same shape)."""
+    """The triples and mentions plans must contain NO exchange (shuffle) —
+    scan → project → one fused mapInArrow operator, nothing else."""
     from cdrc_semantic_search_spark.config import Settings
     from cdrc_semantic_search_spark.plans.kg_pipeline import KGPipeline
 
     tdf, _ = spark_fixture
     pipe = KGPipeline(spark, fixture.entities, Settings())
-    plan = plan_of(pipe.triples(tdf))
-    assert "MapInArrow" in plan or "PythonMapInArrow" in plan
-    assert "Exchange" not in plan, f"unexpected shuffle in fused plan:\n{plan}"
-    plan_pd = plan_of(pipe.triples(tdf, impl="pandas"))
-    assert "MapInPandas" in plan_pd
-    assert "Exchange" not in plan_pd, f"unexpected shuffle in fused plan:\n{plan_pd}"
+    for df in (pipe.triples(tdf), pipe.mentions(tdf)):
+        plan = plan_of(df)
+        assert "MapInArrow" in plan
+        assert "MapInPandas" not in plan
+        assert "Exchange" not in plan, f"unexpected shuffle in fused plan:\n{plan}"
 
 
 def test_kg_edges_aggregation_is_partial_then_final(spark, fixture, spark_fixture):
@@ -71,19 +69,6 @@ def test_kg_edges_aggregation_is_partial_then_final(spark, fixture, spark_fixtur
     plan = plan_of(pipe.kg_edges(pipe.triples(tdf)))
     assert plan.count("HashAggregate") >= 2
     assert plan.count("Exchange") == 1
-
-
-def test_linking_exact_path_is_broadcast_join(spark, fixture, spark_fixture):
-    """The joined formulation's alias map must broadcast — the fact side
-    never shuffles for linking."""
-    from cdrc_semantic_search_spark.config import Settings
-    from cdrc_semantic_search_spark.plans.kg_pipeline import KGPipeline
-
-    tdf, _ = spark_fixture
-    pipe = KGPipeline(spark, fixture.entities, Settings())
-    plan = plan_of(pipe.triples_joined(tdf))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_chunk_words_is_jvm_only(spark):

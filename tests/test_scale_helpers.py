@@ -84,8 +84,8 @@ def test_fan_in_leaves_non_starved_partitions_alone(spark):
 def test_fused_extraction_results_unchanged_by_input_partitioning(
     spark, fixture, spark_fixture
 ):
-    # the fan_in inside the fused extraction operator must not change
-    # the triple multiset, whatever the input partitioning
+    # the fan_in inside the fused extraction operators must not change
+    # the triple or mention multiset, whatever the input partitioning
     from cdrc_semantic_search_spark.config import Settings
     from cdrc_semantic_search_spark.plans.kg_pipeline import KGPipeline
 
@@ -93,6 +93,5 @@ def test_fused_extraction_results_unchanged_by_input_partitioning(
     pipe = KGPipeline(spark, fixture.entities, Settings())
     par = spark.sparkContext.defaultParallelism
     wide = tdf.repartition(par * 4).localCheckpoint()
-    a = _rows(pipe.triples(tdf))
-    b = _rows(pipe.triples(wide))
-    assert a == b
+    for op in (pipe.triples, pipe.mentions):
+        assert _rows(op(tdf)) == _rows(op(wide))
