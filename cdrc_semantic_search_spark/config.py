@@ -5,9 +5,11 @@ Re-expresses the reference's pydantic settings layer
 (``embed_dim`` ∈ (0, 10000], ``top_k`` ∈ (0, 100]), the retrieval-mode
 enum {default, sparse, hybrid} (``utils.py:30``) and the bounded hybrid
 blend ``alpha`` ∈ (0, 1] (``utils.py:31``), chunking knobs
-(``config/config.toml:8-9``: chunk_size=256, chunk_overlap=32) and the
-index overwrite flag (``config.toml:10``).  Implemented as plain
-dataclasses (no pydantic in the sandbox) with the same range checks.
+(``config/config.toml:8-9``: chunk_size=256, chunk_overlap=32).  The
+reference's index overwrite flag (``config.toml:10``) has no setting here:
+catalog writes are always full-table replaces or idempotent partition
+overwrites.  Implemented as plain dataclasses (pydantic is not a
+dependency) with the same range checks.
 """
 
 from __future__ import annotations
@@ -80,10 +82,6 @@ class PipelineSettings:
     # number of conv_id hash buckets = unit of commit/resume (Iceberg
     # bucket(N, conv_id) analog)
     num_buckets: int = 16
-    # conversations with > skew_turn_threshold turns get salted repartitioning
-    skew_turn_threshold: int = 512
-    skew_salt: int = 8
-    overwrite: bool = True
     # canonicalization LSH bucket space: each band hashes surfaces into
     # 2^(canon_n_planes / canon_n_bands) buckets and candidate generation
     # is quadratic IN THE BUCKET — size planes/band to ~log2(n_surfaces /
@@ -95,7 +93,6 @@ class PipelineSettings:
 
     def __post_init__(self) -> None:
         _check(self.num_buckets > 0, "num_buckets must be > 0")
-        _check(self.skew_salt > 0, "skew_salt must be > 0")
         _check(
             self.canon_n_planes > 0
             and self.canon_n_bands > 0

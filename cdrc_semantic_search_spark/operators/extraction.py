@@ -27,7 +27,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from cdrc_semantic_search_spark.encoder import normalize_surface
-from cdrc_semantic_search_spark.functions.scale import fan_in
 from cdrc_semantic_search_spark.operators.extraction_core import (
     AliasMatcher,
     extract_turn,
@@ -209,9 +208,7 @@ def _fused(body, schema, transcripts, bc_catalogue, bc_index, alpha, link_thresh
         for batch in batches:
             yield body(batch, linker)
 
-    return fan_in(transcripts.select("conv_id", "turn_idx", "ts", "text")).mapInArrow(
-        run, schema=schema
-    )
+    return transcripts.select("conv_id", "turn_idx", "ts", "text").mapInArrow(run, schema=schema)
 
 
 def extract_linked_triples(

@@ -91,8 +91,13 @@ def build_entity_index(entities_pdf: pd.DataFrame, settings: Settings) -> Entity
 
 
 def norm_surface_col(col):
-    """Catalyst twin of encoder.normalize_surface (lower, collapse ws, trim)."""
-    return F.trim(F.regexp_replace(F.lower(col), "\\s+", " "))
+    """Catalyst twin of encoder.normalize_surface (lower, collapse ws, trim).
+
+    Python's ``str.split()`` splits on Unicode whitespace plus the four
+    ASCII separators U+001C-U+001F. Java's default ``\\s`` is ASCII-only;
+    under ``(?U)`` it is Unicode ``White_Space``, which lacks just those
+    four, so the class adds them."""
+    return F.trim(F.regexp_replace(F.lower(col), r"(?U)[\s\x1c-\x1f]+", " "))
 
 
 def _topk_blend(

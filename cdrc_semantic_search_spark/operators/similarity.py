@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from cdrc_semantic_search_spark.functions import vector as V
 from cdrc_semantic_search_spark.functions.names import internal_col
-from cdrc_semantic_search_spark.functions.scale import fan_out
 
 
 def _two_stage_topk(scored: DataFrame, q_id: str, c_id: str, k: int) -> DataFrame:
@@ -84,13 +83,9 @@ def topk_cosine_exact(
     nq = internal_col(taken, "__qnorm")
     nc = internal_col(taken | {nq}, "__cnorm")
     q = queries.select(F.col(q_id), F.col(q_vec)).withColumn(nq, V.norm(F.col(q_vec)))
-    # fan_out the PROBE side: the broadcast join's output parallelism is
-    # the corpus scan's, which is 1 for a single-row-group file — the
-    # whole |q|·|c| scoring pass would run on one core (guide §2.5);
-    # no-op when the corpus scan already splits
-    c = fan_out(corpus.select(F.col(c_id), F.col(c_vec))).withColumn(
-        nc, V.norm(F.col(c_vec))
-    )
+    # the corpus is the probe side: the broadcast join runs at the corpus
+    # scan's parallelism, and AQE plans the top-k exchange after it
+    c = corpus.select(F.col(c_id), F.col(c_vec)).withColumn(nc, V.norm(F.col(c_vec)))
     scored = F.broadcast(q).crossJoin(c).select(
         q_id,
         c_id,

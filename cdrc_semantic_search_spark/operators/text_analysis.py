@@ -13,7 +13,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cdrc_semantic_search_spark.functions.scale import fan_out
 from cdrc_semantic_search_spark.functions.text import tokens
 
 # tiny per-language stopword lists: enough signal for an n-gram heuristic
@@ -493,7 +492,7 @@ def bigram_cross_entropy(
     coincidence, the ROUND(6) tolerance class the registry already
     accepts (catalog_queries.py module doc).
     """
-    doc_bi = _bigrams(fan_out(df.select(id_col, text_col)), id_col, text_col)
+    doc_bi = _bigrams(df, id_col, text_col)
     cb, cu, vocab = _bigram_lm(ref, id_col, text_col)
     scored = (
         doc_bi.join(F.broadcast(cb), ["w1", "w2"], "left")
@@ -578,7 +577,7 @@ def dsir_importance(
     form, so ce/importance values are unchanged — the driver oracle
     hash-checks this.)
     """
-    doc_bi = _bigrams(fan_out(df.select(id_col, text_col)), id_col, text_col)
+    doc_bi = _bigrams(df, id_col, text_col)
     tcb, tcu, tv = _bigram_lm(target_ref, id_col, text_col)
     scb, scu, sv = _bigram_lm(source_ref, id_col, text_col)
     scored = (

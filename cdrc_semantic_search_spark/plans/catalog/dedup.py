@@ -16,7 +16,6 @@ from pyspark.sql import Window  # noqa: F401
 
 from cdrc_semantic_search_spark.functions import text as T  # noqa: F401
 from cdrc_semantic_search_spark.functions import vector as V  # noqa: F401
-from cdrc_semantic_search_spark.functions.scale import fan_out  # noqa: F401
 from cdrc_semantic_search_spark.plans import value_oracles  # noqa: F401
 from cdrc_semantic_search_spark.plans.catalog._core import (  # noqa: F401
     _SQL_SW_DE,

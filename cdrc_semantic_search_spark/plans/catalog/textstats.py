@@ -16,7 +16,6 @@ from pyspark.sql import Window  # noqa: F401
 
 from cdrc_semantic_search_spark.functions import text as T  # noqa: F401
 from cdrc_semantic_search_spark.functions import vector as V  # noqa: F401
-from cdrc_semantic_search_spark.functions.scale import fan_out  # noqa: F401
 from cdrc_semantic_search_spark.plans import value_oracles  # noqa: F401
 from cdrc_semantic_search_spark.plans.catalog._core import (  # noqa: F401
     _SQL_SW_DE,
@@ -104,10 +103,10 @@ def ta_language_id(spark, sf_dir):
     from cdrc_semantic_search_spark.operators.text_analysis import detect_language
 
     d = load(spark, sf_dir, "documents")
-    # fan_out: the tokenize+4-ratio codegen chain is the whole cost and
-    # runs single-task on a single-row-group file (guide §2.5)
+    # the tokenize+4-ratio codegen chain is the whole cost; it runs at
+    # the documents scan's parallelism, ahead of the one aggregation
     return (
-        detect_language(fan_out(d.select("text")), "text")
+        detect_language(d.select("text"), "text")
         .groupBy("lang_guess")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     )

@@ -9,11 +9,14 @@ Every knob here is a 100-TB lever, not a test convenience:
   host zone, required for oracle parity.
 * shuffle partitions default to 2× parallelism locally; on a real cluster
   AQE coalescing makes the initial number mostly irrelevant.
+
+``get_spark`` runs no Spark job: the Python worker pool forks on the first
+Arrow stage, and ``spark.python.worker.reuse`` (the default) keeps it for
+every later one.
 """
 
 from __future__ import annotations
 
-import logging
 import os
 import shutil
 import tempfile
@@ -96,49 +99,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.addPyFile(package_zip())
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _WARMED:
-        _WARMED.add(app_id)
-        _warm_python_workers(spark)
     return spark
-
-
-# sessions whose python worker pool has been pre-forked (keyed by app id:
-# getOrCreate may hand the same live session back to later callers)
-_WARMED: set[str] = set()
-
-
-def _warm_python_workers(spark) -> None:
-    """Pre-fork the Python worker pool at session creation.
-
-    The first Arrow/pandas stage of a fresh session pays worker process
-    spin-up (~0.5 s for a 32-slot pool) on top of its own work; with
-    ``spark.python.worker.reuse`` (the default) the forked pool then
-    serves every later stage. Production executors amortize this across
-    hours — a short-lived driver session should pay it at init, not
-    inside whichever query happens to hit Python first. This computes
-    nothing from any input table (a range→identity round trip), so it is
-    process-pool initialization, not result precomputation.
-    """
-    par = spark.sparkContext.defaultParallelism
-
-    def _init(x: int) -> int:
-        # pre-import the heavy per-worker modules too: the first Arrow
-        # stage otherwise pays a simultaneous pandas/pyarrow/numpy import
-        # in every worker (measured as 1-5 s of first-query jitter)
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-        import pyarrow  # noqa: F401
-
-        return x
-
-    try:
-        spark.sparkContext.setJobDescription("session init: python worker pool")
-        # one python task per slot; the pyspark.daemon forks one reusable
-        # worker per concurrent task, and that same pool serves every
-        # later pandas/Arrow stage
-        spark.sparkContext.parallelize(range(par), par).map(_init).count()
-    except Exception:  # pragma: no cover — init best-effort, never fatal
-        logging.warning("python worker pre-fork failed", exc_info=True)
-    finally:
-        spark.sparkContext.setJobDescription(None)

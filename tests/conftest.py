@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import contextlib
+import io
+
 import pytest
 
 from cdrc_semantic_search_spark import fixtures
@@ -23,3 +26,18 @@ def fixture():
 def spark_fixture(spark, fixture):
     tdf, edf = fixtures.to_spark(spark, fixture)
     return tdf, edf
+
+
+@pytest.fixture(scope="session")
+def plan_of():
+    """Physical plan text of a DataFrame, read through the public
+    ``explain()``. A frame that has been collected shows its final
+    adaptive plan."""
+
+    def _plan(df) -> str:
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            df.explain()
+        return out.getvalue()
+
+    return _plan

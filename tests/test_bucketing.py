@@ -35,7 +35,7 @@ def bucketed_tables(spark, tmp_path_factory):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
+def test_bucketed_join_has_no_exchange(spark, bucketed_tables, plan_of):
     """Joining two tables bucketed on the join key with matching bucket
     counts must not shuffle EITHER side."""
     li_t, ord_t = bucketed_tables
@@ -47,7 +47,7 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
             spark.table(ord_t),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
+        plan = plan_of(joined)
         assert "SortMergeJoin" in plan
         assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan}"
         # and it returns the same rows as the shuffling plan
@@ -65,15 +65,15 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", orig_threshold)
 
 
-def test_bucketed_aggregation_has_no_exchange(spark, bucketed_tables):
+def test_bucketed_aggregation_has_no_exchange(spark, bucketed_tables, plan_of):
     """groupBy on the bucketing key also rides the existing layout."""
     li_t, _ = bucketed_tables
     agg = spark.table(li_t).groupBy("l_orderkey").agg(F.sum("l_quantity"))
-    plan = agg._jdf.queryExecution().executedPlan().toString()
+    plan = plan_of(agg)
     assert "Exchange" not in plan, f"bucketed groupBy still shuffles:\n{plan}"
 
 
-def test_bucketed_fanout_pagerank_iteration_skips_edge_exchange(spark, tmp_path_factory):
+def test_bucketed_fanout_pagerank_iteration_skips_edge_exchange(spark, tmp_path_factory, plan_of):
     """The repeated-join pipeline consumer of bucketing: with the
     PageRank fanout written bucketed by src, the per-iteration
     fanout⋈ranks join must NOT exchange the edge side (only the rank
@@ -116,7 +116,7 @@ def test_bucketed_fanout_pagerank_iteration_skips_edge_exchange(spark, tmp_path_
             .groupBy("id")
             .agg(F.sum("c").alias("contrib"))
         )
-        plan = one_iter._jdf.queryExecution().executedPlan().toString()
+        plan = plan_of(one_iter)
         assert "SortMergeJoin" in plan
         # at most the rank-vector exchange + the dst-keyed agg exchange;
         # NONE on the bucketed fanout scan (here the rank vector itself
@@ -142,7 +142,7 @@ def test_bucketed_fanout_pagerank_iteration_skips_edge_exchange(spark, tmp_path_
         spark.sql("DROP TABLE IF EXISTS pr_fanout_bkt")
 
 
-def test_recheck_bucketed_base_no_exchange(spark, tmp_path_factory):
+def test_recheck_bucketed_base_no_exchange(spark, tmp_path_factory, plan_of):
     """Dedup's exact-cosine re-check join over a base stored bucketed by
     id must not exchange the base on EITHER side-join (alias-aware output
     partitioning carries the bucket layout through the id_a/id_b renames);
@@ -177,7 +177,7 @@ def test_recheck_bucketed_base_no_exchange(spark, tmp_path_factory):
         bucketed = exact_recheck(
             spark.table("recheck_base_bkt"), cand, "doc_id", "vec"
         )
-        plan = bucketed._jdf.queryExecution().executedPlan().toString()
+        plan = plan_of(bucketed)
         assert "SortMergeJoin" in plan
         # bucketed pays only the candidate side: cand by id_a, then the
         # scored rows by id_b. Count DATA exchanges — Spark may inject a

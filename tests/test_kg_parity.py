@@ -110,6 +110,22 @@ def test_fused_outputs_empty_input(spark, fixture, spark_fixture):
         assert df.count() == 0
 
 
+def test_fused_extraction_results_unchanged_by_input_partitioning(
+    spark, fixture, spark_fixture
+):
+    # the fused extraction operators run one mapInArrow over whatever
+    # partitioning they are given: the triple and mention multisets must
+    # not depend on it
+    tdf, _ = spark_fixture
+    pipe = KGPipeline(spark, fixture.entities, Settings())
+    par = spark.sparkContext.defaultParallelism
+    wide = tdf.repartition(par * 4).localCheckpoint()
+    for op in (pipe.triples, pipe.mentions):
+        assert sorted(map(tuple, op(tdf).collect())) == sorted(
+            map(tuple, op(wide).collect())
+        )
+
+
 def test_per_turn_text_equality_under_stable_ordering(spark, fixture, spark_fixture):
     """input_hint invariant: after flowing through the engine's window
     ordering, every (conv_id, turn_idx) carries byte-identical text."""

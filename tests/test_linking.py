@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import unicodedata
+
 import pandas as pd
 
 from cdrc_semantic_search_spark.config import Settings
@@ -128,3 +130,35 @@ def test_collective_link_coherence_flips_ambiguous_mention(spark):
         mentions.repartition(4), bc, settings, k=3, beta=0.25
     )
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, out2.collect()))
+
+
+def test_norm_surface_col_matches_normalize_surface_on_separators(spark):
+    """The Catalyst surface normalization collapses exactly the whitespace
+    the Python one does, over every space, separator, control and format
+    code point."""
+    from pyspark.sql import functions as F
+
+    from cdrc_semantic_search_spark.encoder import normalize_surface
+    from cdrc_semantic_search_spark.operators.linking import norm_surface_col
+
+    texts = [
+        f" A{chr(c)}B{chr(c)}"
+        for c in range(0x110000)
+        if not 0xD800 <= c <= 0xDFFF
+        and (
+            chr(c).isspace()
+            or unicodedata.category(chr(c)) in ("Zs", "Zl", "Zp", "Cc", "Cf")
+        )
+    ]
+    got = (
+        spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+        .select("i", norm_surface_col(F.col("t")).alias("n"))
+        .collect()
+    )
+    mismatched = [
+        hex(ord(texts[r["i"]][2]))
+        for r in got
+        if r["n"] != normalize_surface(texts[r["i"]])
+    ]
+    assert len(got) == len(texts)
+    assert not mismatched, f"{len(mismatched)} mismatched: {mismatched}"

@@ -8,17 +8,7 @@ from pyspark.sql import functions as F
 SF = "/root/testdata/sf0.001"
 
 
-def plan_of(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def formatted(df) -> str:
-    return df._sc._jvm.PySparkSQLUtils.explainString(  # pragma: no cover
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def test_filter_pushdown_reaches_parquet_scan(spark):
+def test_filter_pushdown_reaches_parquet_scan(spark, plan_of):
     df = (
         spark.read.parquet(f"{SF}/lineitem.parquet")
         .filter(F.col("l_shipdate") > "1996-01-01")
@@ -28,13 +18,13 @@ def test_filter_pushdown_reaches_parquet_scan(spark):
     assert "PushedFilters: [IsNotNull(l_shipdate), GreaterThan(l_shipdate" in plan
 
 
-def test_column_pruning_reaches_scan(spark):
+def test_column_pruning_reaches_scan(spark, plan_of):
     df = spark.read.parquet(f"{SF}/lineitem.parquet").select("l_orderkey")
     plan = plan_of(df)
     assert "ReadSchema: struct<l_orderkey:bigint>" in plan
 
 
-def test_dim_join_is_broadcast(spark):
+def test_dim_join_is_broadcast(spark, plan_of):
     c = spark.read.parquet(f"{SF}/customer.parquet")
     n = spark.read.parquet(f"{SF}/nation.parquet")
     joined = c.join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
@@ -43,7 +33,7 @@ def test_dim_join_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_fused_triples_plan_is_map_only(spark, fixture, spark_fixture):
+def test_fused_triples_plan_is_map_only(spark, fixture, spark_fixture, plan_of):
     """The triples and mentions plans must contain NO exchange (shuffle) —
     scan → project → one fused mapInArrow operator, nothing else."""
     from cdrc_semantic_search_spark.config import Settings
@@ -58,7 +48,7 @@ def test_fused_triples_plan_is_map_only(spark, fixture, spark_fixture):
         assert "Exchange" not in plan, f"unexpected shuffle in fused plan:\n{plan}"
 
 
-def test_kg_edges_aggregation_is_partial_then_final(spark, fixture, spark_fixture):
+def test_kg_edges_aggregation_is_partial_then_final(spark, fixture, spark_fixture, plan_of):
     """Edge rollup must show map-side partial aggregation (two HashAggregate
     levels around one Exchange) — shuffle volume is pre-reduced."""
     from cdrc_semantic_search_spark.config import Settings
@@ -71,7 +61,7 @@ def test_kg_edges_aggregation_is_partial_then_final(spark, fixture, spark_fixtur
     assert plan.count("Exchange") == 1
 
 
-def test_chunk_words_is_jvm_only(spark):
+def test_chunk_words_is_jvm_only(spark, plan_of):
     """Catalyst-only chunking: Generate+higher-order funcs, zero Python
     eval nodes (Generate itself doesn't participate in codegen)."""
     from cdrc_semantic_search_spark.operators.chunker import chunk_words
@@ -83,7 +73,7 @@ def test_chunk_words_is_jvm_only(spark):
         assert py_node not in plan
 
 
-def test_topk_exact_query_side_broadcasts(spark):
+def test_topk_exact_query_side_broadcasts(spark, plan_of):
     from cdrc_semantic_search_spark.operators.similarity import topk_cosine_exact
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -95,7 +85,7 @@ def test_topk_exact_query_side_broadcasts(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_decontamination_probe_is_broadcast(spark):
+def test_decontamination_probe_is_broadcast(spark, plan_of):
     """cross_split_contamination's 100-TB claim: the holdout shingle set
     broadcasts; the train posting table is never sort-merge joined."""
     from cdrc_semantic_search_spark.operators.dedup import cross_split_contamination
@@ -109,7 +99,7 @@ def test_decontamination_probe_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_lsh_candidate_exchange_carries_ids_only(spark):
+def test_lsh_candidate_exchange_carries_ids_only(spark, plan_of):
     """cosine_pairs_lsh's slim-shuffle claim: no exchange in the candidate
     self-join carries the embedding column — vectors re-join after the
     pair dedup (round-3 fix: previously vec_a/vec_b rode the (band,bucket)
@@ -129,7 +119,7 @@ def test_lsh_candidate_exchange_carries_ids_only(spark):
     assert re.search(r"Exchange hashpartitioning\(id_a[^\n]*id_b", plan)
 
 
-def test_bucketed_table_join_skips_exchange(spark):
+def test_bucketed_table_join_skips_exchange(spark, plan_of):
     """Bucketed writes are the repeated-self-join scale lever: two scans of
     a table bucketed+sorted on the join key sort-merge-join with ZERO
     Exchange (co-located by bucket id), while the plain parquet twin pays
@@ -165,7 +155,7 @@ def test_bucketed_table_join_skips_exchange(spark):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_q19_disjunction_pushes_single_side_conjuncts(spark):
+def test_q19_disjunction_pushes_single_side_conjuncts(spark, plan_of):
     """The factored single-side conjuncts of the OR-of-AND predicate must
     reach both parquet scans as pushed filters, and the filtered part
     side must broadcast."""
@@ -179,7 +169,7 @@ def test_q19_disjunction_pushes_single_side_conjuncts(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_q15_max_is_broadcast_not_global_window(spark):
+def test_q15_max_is_broadcast_not_global_window(spark, plan_of):
     """The scalar MAX must come back as a broadcast join, never a global
     single-partition window sort."""
     from cdrc_semantic_search_spark.plans.catalog_queries import REGISTRY
@@ -189,7 +179,7 @@ def test_q15_max_is_broadcast_not_global_window(spark):
     assert "Window" not in plan
 
 
-def test_collective_linking_candidates_broadcast(spark):
+def test_collective_linking_candidates_broadcast(spark, plan_of):
     """collective_link_mentions must broadcast the distinct-surface
     candidate frame into the mention facts (the facts never shuffle for
     linking) and contain no cartesian product."""
@@ -220,7 +210,7 @@ def test_collective_linking_candidates_broadcast(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_repeated_spans_shuffles_hash_not_span_text(spark):
+def test_repeated_spans_shuffles_hash_not_span_text(spark, plan_of):
     """The span-dedup aggregate must key its exchange on xxhash64(span)
     (8 bytes), with the span text entering the aggregate only as the
     min() representative — never as the grouping key."""
@@ -237,7 +227,7 @@ def test_repeated_spans_shuffles_hash_not_span_text(spark):
     assert all(not _re.search(r"hashpartitioning\(span#", ln) for ln in exch)
 
 
-def test_hard_negatives_filter_precedes_rank_windows(spark):
+def test_hard_negatives_filter_precedes_rank_windows(spark, plan_of):
     """The label-mismatch predicate must sit BELOW the two-stage rank
     windows (fused into the broadcast join), so same-label pairs never
     enter a sort."""
@@ -264,7 +254,7 @@ def test_hard_negatives_filter_precedes_rank_windows(spark):
     assert join_pos > win_pos  # executed plans print consumers first
 
 
-def test_composition_rules_no_cartesian(spark, spark_fixture):
+def test_composition_rules_no_cartesian(spark, spark_fixture, plan_of):
     """Rule mining is equi-joins + predicate-keyed aggregates — no
     cartesian product may appear for any input."""
     from cdrc_semantic_search_spark.operators.rules import (
@@ -283,7 +273,7 @@ def test_composition_rules_no_cartesian(spark, spark_fixture):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_hyperball_state_is_register_rows_not_pairs(spark):
+def test_hyperball_state_is_register_rows_not_pairs(spark, plan_of):
     """The HyperBall loop's per-round aggregate keys on (v, j) —
     register rows — never on reached-pair sets; the plan must show the
     (v, j) exchange and no pair-set distinct."""

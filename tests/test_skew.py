@@ -42,7 +42,7 @@ def test_salted_repartition_balances_hot_conversations(spark, spark_fixture):
     assert max_partition_fraction(salted) < 3.0 / 16
 
 
-def test_aqe_splits_skewed_join(spark, spark_fixture):
+def test_aqe_splits_skewed_join(spark, spark_fixture, plan_of):
     """Force a skewed sort-merge join and assert AQE's skew-split marker
     appears in the final adaptive plan (SURVEY §4.1 backstop)."""
     tdf, _ = spark_fixture
@@ -81,17 +81,17 @@ def test_aqe_splits_skewed_join(spark, spark_fixture):
         # coalescing would merge the small partitions and mask the skew
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
         joined = fact.join(dim, "k")
-        # collect() executes THIS queryExecution (count() would plan anew
+        # collect() executes THIS frame's plan (count() would plan anew
         # and leave this one isFinalPlan=false)
         assert len(joined.collect()) > 0
-        final_plan = joined._jdf.queryExecution().executedPlan().toString()
+        final_plan = plan_of(joined)
         assert "skew=true" in final_plan, f"no skew split in:\n{final_plan[:2000]}"
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
 
 
-def test_salted_join_matches_plain_join_and_spreads_lanes(spark):
+def test_salted_join_matches_plain_join_and_spreads_lanes(spark, plan_of):
     """Row multiset identical to the plain join for every supported join
     type; the exchange partitions on (key, lane); a hot key actually
     occupies every lane; bad args raise."""
@@ -120,8 +120,7 @@ def test_salted_join_matches_plain_join_and_spreads_lanes(spark):
     )
     assert lanes == 8  # the hot key spreads over every lane
 
-    plan = salted_join(fact, dim, ["k"], 8, ["row_id"])._jdf.queryExecution(
-    ).executedPlan().toString()
+    plan = plan_of(salted_join(fact, dim, ["k"], 8, ["row_id"]))
     assert "__lane" in plan
 
     with _pytest.raises(ValueError):
