@@ -34,8 +34,3 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def unit_normalize(a: Column) -> Column:
-    n = norm(a)
-    return F.transform(a.cast("array<double>"), lambda x: x / n)

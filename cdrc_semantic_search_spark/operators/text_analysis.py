@@ -33,11 +33,6 @@ def stopword_ratio_from_tokens(toks: Column, lang: str = "en") -> Column:
     return F.when(n > 0, hits.cast("double") / n).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(text_col: Column, lang: str = "en") -> Column:
-    """fraction of tokens that are stopwords of ``lang``."""
-    return stopword_ratio_from_tokens(tokens(text_col), lang)
-
-
 def detect_language_from_tokens(toks: Column) -> Column:
     """argmax over per-language stopword ratios; 'und' when all zero.
 

@@ -102,12 +102,8 @@ def p6_json_flatten(spark, sf_dir):
 def p7_id_parse(spark, sf_dir):
     """P7/F7 doc_id split('-', maxsplit=1) (datastore.py:25)."""
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 1000)
-    parts = F.split("o_orderpriority", "-", 2)
-    return o.select(
-        "o_orderkey",
-        F.element_at(parts, 1).alias("prio_code"),
-        F.element_at(parts, 2).alias("prio_name"),
-    )
+    code, name = T.doc_id_parts(F.col("o_orderpriority"))
+    return o.select("o_orderkey", code.alias("prio_code"), name.alias("prio_name"))
 
 
 # =====================================================================

@@ -7,7 +7,8 @@ per-partition ledger commits for idempotent resume.
 
 Plan-shape invariants (the 100-TB contract):
 * the transcripts fact table is read once, never shuffled before
-  extraction (mapInArrow is partition-local; salting only spreads rows);
+  extraction (mapInArrow is partition-local, so nothing repartitions
+  its input);
 * triples and mentions each come from ONE map-only Arrow stage that
   extracts and links against broadcast state (alias automaton + entity
   index) — zero fact-side shuffles until the final aggregations, which
@@ -876,7 +877,9 @@ class KGPipeline:
         equals surface_clusters over the union of the source batches.  A
         compacted BASE (if any) contributes its (surface, entity_id)
         rows to the distinct set before clustering — min is
-        union-compatible, so generations compose."""
+        union-compatible, so generations compose.  With no live delta
+        over a base clustered under the current parameters, the base
+        rows are the answer as they stand."""
         self._check_readable(catalog)
         parts = []
         try:
@@ -887,6 +890,7 @@ class KGPipeline:
             )
         except FileNotFoundError:
             pass
+        live = bool(parts)
         base = self._base_table(self.spark, catalog, "surface_clusters")
         if base is not None:
             parts.append(base.select("surface", "entity_id"))
@@ -921,6 +925,10 @@ class KGPipeline:
                 self._canon_fingerprint(),
             )
             return self._cluster_surfaces(distinct)
+        if not live:
+            # no new surface: the incremental patch would hand back the
+            # base labels unchanged
+            return base.select("surface", "canonical_surface", "entity_id")
         return self._cluster_surfaces_incremental(base, distinct)
 
     def _cluster_surfaces_incremental(

@@ -417,5 +417,5 @@ def compacted_daily_counts(
     batches accumulates, bit-equal to a batch rollup of the union).
     Feed to operators/temporal.burst_flags for streamed ≡ batch bursts.
     """
-    deltas = catalog.read_table(spark, table)
+    deltas = catalog.read_committed(spark, table)
     return deltas.groupBy("key", "day").agg(F.sum("cnt").alias("cnt"))

@@ -19,16 +19,10 @@ Results: JSON to stdout + scripts/.ann_bench.json + a BENCH.md section
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
-
 import numpy as np
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from _harness import publish, session, timed
 
-ANN_JSON = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".ann_bench.json")
 N_VECS = 500_000
 DIM = 64
 N_QUERIES = 64
@@ -75,10 +69,7 @@ def main() -> None:
         train_centroids,
         train_pq_codebooks,
     )
-    from cdrc_semantic_search_spark.session import get_spark
-
-    spark = get_spark(app_name="ann-bench", parallelism=16)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("ann-bench")
 
     corpus = build_corpus(spark)
     path = "/tmp/ann_bench_corpus"
@@ -119,13 +110,15 @@ def main() -> None:
     ids = np.array([r["c_id"] for r in rows])
     mat = np.stack([np.asarray(r["c_vec"], dtype=np.float32) for r in rows])
 
-    def run(label, fn):
-        fn().count()  # warmup (codegen + python workers + page cache)
-        t0 = time.time()
+    def hits(fn):
         out = {r["q_id"]: set() for r in q.select("q_id").collect()}
         for r in fn().collect():
             out[r["q_id"]].add(r["c_id"])
-        sec = round(time.time() - t0, 2)
+        return out
+
+    def run(label, fn):
+        fn().count()  # warmup (codegen + python workers + page cache)
+        out, sec = timed(lambda: hits(fn))
         print(f"  {label}: {sec}s", flush=True)
         return sec, out
 
@@ -172,15 +165,7 @@ def main() -> None:
             },
         ],
     }
-    print(json.dumps(out))
-    with open(ANN_JSON, "w") as f:
-        json.dump(out, f)
-
-    from bench_sections import replace_section
-
-    # shared splice: replaces ONLY this bench's section — the previous
-    # truncate-to-EOF here deleted every section after the ANN one
-    replace_section("## ANN scan at ", "\n" + render_section(out))
+    publish("ann_bench", out, "## ANN scan at ", "\n" + render_section(out))
     spark.stop()
 
 

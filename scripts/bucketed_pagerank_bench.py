@@ -16,43 +16,28 @@ hub-skewed 2^21-edge graph:
   the buckets in place; only the |V|-sized rank vector shuffles.
 
 The per-variant metric deltas (wall sec + total shuffle-write bytes from
-the UI REST API) quantify the conversion of a recurring |E| shuffle into
-a one-time write-side sort. autoBroadcastJoinThreshold=-1 keeps the rank
-vector out of broadcast, as it would be at real scale (|V| ≫ threshold).
+the driver's status store) quantify the conversion of a recurring |E|
+shuffle into a one-time write-side sort. autoBroadcastJoinThreshold=-1
+keeps the rank vector out of broadcast, as it would be at real scale
+(|V| ≫ threshold).
 
 Results: JSON to stdout + scripts/.pr_bucket_bench.json + a BENCH.md
-section (same contract as cc_bench.py).
+section (replace-by-heading; scripts/scaling_bench.py re-appends it).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import sys
 import tempfile
-import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from _harness import publish, session, stages, timed
 
-PR_JSON = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), ".pr_bucket_bench.json"
-)
 N_EDGES = 1 << 21
 N_VERTICES = 400_000
 N_ITER = 5
 N_BUCKETS = 32
-
-
-def shuffle_write_bytes(spark) -> int:
-    """Total shuffle-write bytes across all completed stages so far."""
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app_id}/stages?status=COMPLETE"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        stages = json.load(r)
-    return sum(s.get("shuffleWriteBytes", 0) for s in stages)
+MARKER = "## Bucketed fanout vs re-shuffle"
 
 
 def build_zipf_edges(spark):
@@ -70,15 +55,14 @@ def build_zipf_edges(spark):
     )
 
 
-def timed_pagerank(spark, fanout=None, edges=None, label="") -> dict:
+def timed_pagerank(spark, seen: set, fanout=None, edges=None, label="") -> dict:
     from cdrc_semantic_search_spark.operators.graph import pagerank_fixed
 
-    b0 = shuffle_write_bytes(spark)
-    t0 = time.time()
-    ranks = pagerank_fixed(edges=edges, fanout=fanout, n_iter=N_ITER)
-    n = ranks.count()
-    sec = round(time.time() - t0, 2)
-    shuffle_mb = round((shuffle_write_bytes(spark) - b0) / 1e6, 1)
+    stages(spark, seen)
+    n, sec = timed(
+        lambda: pagerank_fixed(edges=edges, fanout=fanout, n_iter=N_ITER).count()
+    )
+    shuffle_mb = round(sum(s["shuffle_write_bytes"] for s in stages(spark, seen)) / 1e6, 1)
     print(f"  {label}: {sec}s, shuffle-write {shuffle_mb} MB, {n} ranks",
           flush=True)
     return {"variant": label, "sec": sec, "shuffle_write_mb": shuffle_mb,
@@ -86,26 +70,18 @@ def timed_pagerank(spark, fanout=None, edges=None, label="") -> dict:
 
 
 def main() -> None:
-    from cdrc_semantic_search_spark.session import get_spark
     from cdrc_semantic_search_spark.operators.graph import (
         build_pagerank_fanout,
         pagerank_fixed,
     )
 
     work = tempfile.mkdtemp(prefix="pr_bucket_bench_")
-    spark = get_spark(
-        app_name="pr-bucket-bench",
-        parallelism=16,
+    spark = session(
+        "pr-bucket-bench",
+        work=work,
         shuffle_partitions=N_BUCKETS,
-        extra_conf={
-            "spark.ui.enabled": "true",  # REST API is the metrics source
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-            "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-            "spark.driver.extraJavaOptions":
-                f"-Dderby.system.home={os.path.join(work, 'derby')}",
-        },
+        extra_conf={"spark.sql.autoBroadcastJoinThreshold": "-1"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     fanout_plan = build_pagerank_fanout(build_zipf_edges(spark))
     plain_path = os.path.join(work, "fanout_plain")
@@ -123,35 +99,23 @@ def main() -> None:
     # warmup (codegen + python worker pool), untimed
     pagerank_fixed(fanout=spark.read.parquet(plain_path), n_iter=1).count()
 
+    seen: set = set()
     results = [
         timed_pagerank(
-            spark, edges=spark.read.parquet(plain_path).select("src", "dst"),
+            spark, seen, edges=spark.read.parquet(plain_path).select("src", "dst"),
             label="persisted (memory cache)",
         ),
         timed_pagerank(
-            spark, fanout=spark.read.parquet(plain_path),
+            spark, seen, fanout=spark.read.parquet(plain_path),
             label="plain parquet, no persist",
         ),
         timed_pagerank(
-            spark, fanout=spark.table("pr_bench_fanout_bkt"),
+            spark, seen, fanout=spark.table("pr_bench_fanout_bkt"),
             label=f"bucketed table ({N_BUCKETS} buckets), no persist",
         ),
     ]
     out = {"n_edges": n_edges, "n_iter": N_ITER, "variants": results}
-    print(json.dumps(out))
-    with open(PR_JSON, "w") as f:
-        json.dump(out, f)
-
-    section = render_section(out)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    bench_md = os.path.join(repo_root, "BENCH.md")
-    if os.path.exists(bench_md):
-        text = open(bench_md).read()
-        marker = "## Bucketed fanout vs re-shuffle"
-        if marker in text:
-            text = text[: text.index(marker)].rstrip() + "\n"
-        with open(bench_md, "w") as f:
-            f.write(text.rstrip() + "\n\n" + section)
+    publish("pr_bucket_bench", out, MARKER, "\n" + render_section(out))
 
     spark.sql("DROP TABLE IF EXISTS pr_bench_fanout_bkt")
     spark.stop()
@@ -160,8 +124,7 @@ def main() -> None:
 
 def render_section(out: dict) -> str:
     lines = [
-        "## Bucketed fanout vs re-shuffle (5-iteration PageRank, "
-        f"{out['n_edges']:,} edges)\n",
+        f"{MARKER} (5-iteration PageRank, {out['n_edges']:,} edges)\n",
         "| fanout storage | shuffle-write MB | wall sec |",
         "|---|---|---|",
     ]
@@ -179,7 +142,8 @@ def render_section(out: dict) -> str:
         "(plan-pinned in test_bucketing) — the 100-TB strategy, where "
         "shuffle is network+disk and the memory-cache variant is impossible "
         "outright. Methodology: same loop, same session, "
-        "autoBroadcastJoinThreshold=-1, metrics from the UI REST API.\n"
+        "autoBroadcastJoinThreshold=-1, metrics from the driver's status "
+        "store.\n"
     )
     return "\n".join(lines)
 

@@ -14,28 +14,23 @@ operators/canonicalize.py) against classic 1-hop label propagation:
   low ids (hub vertices ~ hot entities in a mention graph) — the skew
   stress case; most mass is one giant component.
 
-Results: JSON to stdout + scripts/.cc_bench.json (scaling_bench.py
-re-appends the section whenever it rewrites BENCH.md) + the section
-appended to BENCH.md if present.
+Results: JSON to stdout + scripts/.cc_bench.json + a BENCH.md section
+(replace-by-heading; scripts/scaling_bench.py re-appends it whenever it
+rewrites BENCH.md).
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
+from _harness import publish, session, timed
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-CC_JSON = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cc_bench.json")
+MARKER = "## Connected components at 10⁶-edge scale"
 
 
 def label_propagation_1hop(edges, max_iter: int = 2000):
     """Classic 1-hop min-label propagation (the textbook baseline):
     every round, each vertex takes the min label among itself and its
     neighbors. O(diameter) rounds — kept here (not in the library) as
-    the comparison strawman."""
+    the comparison strawman. Returns (component count, rounds)."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
     import uuid
@@ -75,7 +70,7 @@ def label_propagation_1hop(edges, max_iter: int = 2000):
         labels = new_labels.drop("__chg")
         if (obs.get["chg"] or 0) == 0:
             break
-    return labels, rounds
+    return labels.select("component").distinct().count(), rounds
 
 
 def build_path_graph(spark, n_paths: int, path_len: int):
@@ -119,11 +114,11 @@ def run_case(spark, name, edges, run_baseline: bool):
     # warmup (JVM/codegen) on a slice, untimed
     connected_components(edges.limit(10_000), src="src", dst="dst")
 
-    t0 = time.time()
     stats: dict = {}
-    labels = connected_components(edges, src="src", dst="dst", max_iter=60, stats=stats)
-    n_comp = labels.select("component").distinct().count()
-    contraction_sec = round(time.time() - t0, 2)
+    n_comp, contraction_sec = timed(
+        lambda: connected_components(edges, src="src", dst="dst", max_iter=60, stats=stats)
+        .select("component").distinct().count()
+    )
 
     out = {
         "fixture": name,
@@ -133,11 +128,9 @@ def run_case(spark, name, edges, run_baseline: bool):
         "contraction_sec": contraction_sec,
     }
     if run_baseline:
-        t0 = time.time()
-        lp_labels, lp_rounds = label_propagation_1hop(edges)
-        lp_comp = lp_labels.select("component").distinct().count()
-        out["lp1hop_rounds"] = lp_rounds
-        out["lp1hop_sec"] = round(time.time() - t0, 2)
+        (lp_comp, out["lp1hop_rounds"]), out["lp1hop_sec"] = timed(
+            lambda: label_propagation_1hop(edges)
+        )
         assert lp_comp == n_comp, f"algorithms disagree: {lp_comp} vs {n_comp}"
     return out
 
@@ -156,7 +149,7 @@ def render_section(results: list[dict]) -> str:
         )
     body = "\n".join(rows)
     return f"""
-## Connected components at 10⁶-edge scale (scripts/cc_bench.py)
+{MARKER} (scripts/cc_bench.py)
 
 Driver-headline CC fixtures are hundreds of edges — pure job-submission
 latency, where no algorithm is distinguishable. These graphs are big
@@ -178,10 +171,7 @@ the diameter allows; the path fixture is the O(log d) vs O(d) argument.
 
 
 def main() -> None:
-    from cdrc_semantic_search_spark.session import get_spark
-
-    spark = get_spark(app_name="cc-bench", parallelism=16)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("cc-bench")
 
     results = [
         run_case(
@@ -195,18 +185,7 @@ def main() -> None:
             run_baseline=True,
         ),
     ]
-    print(json.dumps(results))
-    with open(CC_JSON, "w") as f:
-        json.dump(results, f)
-    section = render_section(results)
-    bench_md = "/root/repo/BENCH.md"
-    if os.path.exists(bench_md):
-        text = open(bench_md).read()
-        marker = "## Connected components at 10⁶-edge scale"
-        if marker in text:
-            text = text[: text.index(marker)].rstrip() + "\n"
-        with open(bench_md, "w") as f:
-            f.write(text + section)
+    publish("cc_bench", results, MARKER, render_section(results))
     spark.stop()
 
 

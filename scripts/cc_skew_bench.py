@@ -16,8 +16,8 @@ connected_components call:
 * **uniform** — the same vertices in 10-vertex chains; no component
   exceeds 10 vertices. The no-skew control.
 
-For every stage the CC run executes, the UI REST API yields per-task
-quantiles. Reported per graph:
+For every stage the CC run executes, the driver's status store yields
+per-task quantiles. Reported per graph:
 
 * agg-exchange records: total shuffle-WRITE records of the run — with
   map-side combine this tracks #components x #partitions, not edge
@@ -36,57 +36,10 @@ whenever it rewrites BENCH.md).
 
 from __future__ import annotations
 
-import json
-import os
-import sys
-import time
-import urllib.request
+from _harness import publish, session, stages, timed
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-SKEW_JSON = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), ".cc_skew_bench.json"
-)
 N_VERTICES = 400_000
 MARKER = "## Hot-component skew in connected components"
-
-
-def _get(url: str):
-    with urllib.request.urlopen(url, timeout=30) as r:
-        return json.load(r)
-
-
-def stage_metrics(spark, seen: set) -> list[dict]:
-    """Per-stage metrics for stages not in ``seen``; updates ``seen``."""
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    stages = _get(f"{base}/api/v1/applications/{app}/stages?status=COMPLETE")
-    out = []
-    for s in stages:
-        key = (s["stageId"], s["attemptId"])
-        if key in seen:
-            continue
-        seen.add(key)
-        m = {
-            "stage": s["stageId"],
-            "tasks": s.get("numCompleteTasks", 0),
-            "shuffle_write_records": s.get("shuffleWriteRecords", 0),
-            "shuffle_read_records": s.get("shuffleReadRecords", 0),
-        }
-        if m["tasks"] >= 2:
-            try:
-                q = _get(
-                    f"{base}/api/v1/applications/{app}/stages/{s['stageId']}/"
-                    f"{s['attemptId']}/taskSummary?quantiles=0.5,1.0"
-                )
-                run = q.get("executorRunTime", [0, 0])
-                rr = q.get("shuffleReadMetrics", {}).get("readRecords", [0, 0])
-                m["task_ms_median"], m["task_ms_max"] = run[0], run[1]
-                m["task_read_rec_median"], m["task_read_rec_max"] = rr[0], rr[1]
-            except Exception:
-                pass
-        out.append(m)
-    return out
 
 
 def build_star(spark):
@@ -121,14 +74,15 @@ def run_case(spark, name: str, edges, seen: set) -> dict:
     )
 
     edges = edges.localCheckpoint()  # materialize input outside the timing
-    stage_metrics(spark, seen)  # absorb generation stages
+    stages(spark, seen)  # absorb generation stages
     stats: dict = {}
-    t0 = time.time()
-    labels = connected_components(edges, stats=stats)
-    n_comp = labels.select("component").distinct().count()
-    sec = round(time.time() - t0, 2)
-    stages = stage_metrics(spark, seen)
-    big = [s for s in stages if "task_ms_max" in s and s["tasks"] >= 8]
+    n_comp, sec = timed(
+        lambda: connected_components(edges, stats=stats)
+        .select("component").distinct().count()
+    )
+    run = stages(spark, seen)
+    multi = [s for s in run if "task_ms_max" in s and s["tasks"] >= 2]
+    big = [s for s in multi if s["tasks"] >= 8]
     straggler = max(
         (s["task_ms_max"] / max(s["task_ms_median"], 1.0) for s in big),
         default=0.0,
@@ -138,9 +92,9 @@ def run_case(spark, name: str, edges, seen: set) -> dict:
         "sec": sec,
         "rounds": stats.get("rounds"),
         "components": n_comp,
-        "shuffle_write_records": sum(s["shuffle_write_records"] for s in stages),
+        "shuffle_write_records": sum(s["shuffle_write_records"] for s in run),
         "max_task_read_records": max(
-            (s.get("task_read_rec_max", 0) for s in stages), default=0
+            (s["task_read_rec_max"] for s in multi), default=0
         ),
         "straggler_ratio": round(straggler, 2),
     }
@@ -158,7 +112,7 @@ def render_section(results: list[dict]) -> str:
 Same vertex/edge count, same `connected_components` call; star-90 puts
 90% of all vertices in ONE component (hub key carries {n_star_rows:,}
 edge rows), uniform caps components at 10 vertices. Stage metrics from
-the UI REST API over every stage of each run:
+the driver's status store over every stage of each run:
 
 | graph | rounds | wall sec | shuffle-write records | max rows into one task | straggler ratio (max/median task time) |
 |---|---|---|---|---|---|
@@ -178,14 +132,7 @@ Reproduce: `python scripts/cc_skew_bench.py`.
 
 
 def main() -> None:
-    from cdrc_semantic_search_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="cc-skew-bench",
-        parallelism=16,
-        extra_conf={"spark.ui.enabled": "true"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("cc-skew-bench")
     seen: set = set()
     # warmup: JVM/codegen init shouldn't bill the first case
     run_case(spark, "warmup", build_uniform(spark), seen)
@@ -193,12 +140,7 @@ def main() -> None:
         run_case(spark, "star-90", build_star(spark), seen),
         run_case(spark, "uniform", build_uniform(spark), seen),
     ]
-    print(json.dumps(results))
-    with open(SKEW_JSON, "w") as f:
-        json.dump(results, f)
-    from bench_sections import replace_section
-
-    replace_section(MARKER, render_section(results))
+    publish("cc_skew_bench", results, MARKER, render_section(results))
     spark.stop()
 
 

@@ -18,8 +18,9 @@ re-check exchanges it:
   iterative joins, applied to the dedup pipeline's one expensive join.
 
 autoBroadcastJoinThreshold=-1 models real scale, where the base is far
-beyond broadcast. Metrics (shuffle-write bytes/records via the UI REST
-API) are deterministic; wall seconds on this host ride the page cache.
+beyond broadcast. Metrics (shuffle-write bytes/records from the driver's
+status store) are deterministic; wall seconds on this host ride the page
+cache.
 
 Results: JSON to stdout + scripts/.dedup_bucket_bench.json + a BENCH.md
 section (replace-by-heading; scripts/scaling_bench.py re-appends it when
@@ -28,37 +29,17 @@ it rewrites BENCH.md).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import sys
 import tempfile
-import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from _harness import publish, session, stages, timed
 
-DB_JSON = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), ".dedup_bucket_bench.json"
-)
 N_VECS = 500_000
 DIM = 64
 N_PAIRS = 200_000
 N_BUCKETS = 32
 MARKER = "## Bucketed embedding base for the dedup re-check join"
-
-
-def shuffle_totals(spark) -> tuple[int, int]:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app}/stages?status=COMPLETE", timeout=30
-    ) as r:
-        stages = json.load(r)
-    return (
-        sum(s.get("shuffleWriteBytes", 0) for s in stages),
-        sum(s.get("shuffleWriteRecords", 0) for s in stages),
-    )
 
 
 def build_base(spark):
@@ -93,7 +74,7 @@ def build_pairs(spark):
     )
 
 
-def run_case(spark, label: str, base_df, cand_df) -> dict:
+def run_case(spark, label: str, base_df, cand_df, seen: set) -> dict:
     from cdrc_semantic_search_spark.operators.similarity import exact_recheck
 
     from pyspark.sql import functions as F
@@ -105,18 +86,15 @@ def run_case(spark, label: str, base_df, cand_df) -> dict:
     agg = scored.agg(
         F.sum("score").alias("s"), F.count(F.lit(1)).alias("n")
     )
-    b0, r0 = shuffle_totals(spark)
-    t0 = time.time()
-    row = agg.collect()[0]
-    n = row["n"]
-    sec = round(time.time() - t0, 2)
-    b1, r1 = shuffle_totals(spark)
+    stages(spark, seen)
+    rows, sec = timed(agg.collect)
+    run = stages(spark, seen)
     res = {
         "variant": label,
         "sec": sec,
-        "shuffle_write_mb": round((b1 - b0) / 1e6, 1),
-        "shuffle_write_records": r1 - r0,
-        "pairs_scored": n,
+        "shuffle_write_mb": round(sum(s["shuffle_write_bytes"] for s in run) / 1e6, 1),
+        "shuffle_write_records": sum(s["shuffle_write_records"] for s in run),
+        "pairs_scored": rows[0]["n"],
     }
     print(f"  {label}: {res}", flush=True)
     return res
@@ -153,22 +131,13 @@ Reproduce: `python scripts/dedup_bucket_bench.py`.
 
 
 def main() -> None:
-    from cdrc_semantic_search_spark.session import get_spark
-
     work = tempfile.mkdtemp(prefix="dedup_bucket_bench_")
-    spark = get_spark(
-        app_name="dedup-bucket-bench",
-        parallelism=16,
+    spark = session(
+        "dedup-bucket-bench",
+        work=work,
         shuffle_partitions=N_BUCKETS,
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-            "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-            "spark.driver.extraJavaOptions":
-                f"-Dderby.system.home={os.path.join(work, 'derby')}",
-        },
+        extra_conf={"spark.sql.autoBroadcastJoinThreshold": "-1"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     plain_path = os.path.join(work, "base_plain")
     build_base(spark).write.mode("overwrite").parquet(plain_path)
@@ -183,19 +152,15 @@ def main() -> None:
     build_pairs(spark).write.mode("overwrite").parquet(pairs_path)
     cand = spark.read.parquet(pairs_path)
 
+    seen: set = set()
     # untimed warmup on a slice
-    run_case(spark, "warmup", spark.read.parquet(plain_path).limit(1000), cand.limit(100))
+    run_case(spark, "warmup", spark.read.parquet(plain_path).limit(1000), cand.limit(100), seen)
 
     results = [
-        run_case(spark, "plain parquet", spark.read.parquet(plain_path), cand),
-        run_case(spark, "bucketed table", spark.table("dedup_bench_base_bkt"), cand),
+        run_case(spark, "plain parquet", spark.read.parquet(plain_path), cand, seen),
+        run_case(spark, "bucketed table", spark.table("dedup_bench_base_bkt"), cand, seen),
     ]
-    print(json.dumps(results))
-    with open(DB_JSON, "w") as f:
-        json.dump(results, f)
-    from bench_sections import replace_section
-
-    replace_section(MARKER, render_section(results))
+    publish("dedup_bucket_bench", results, MARKER, render_section(results))
     spark.stop()
     shutil.rmtree(work, ignore_errors=True)
 

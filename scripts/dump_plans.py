@@ -7,10 +7,11 @@ properties are ASSERTED in tests/test_plans.py; this file is for reading.
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
-import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from _harness import REPO_ROOT, session
 
 SF = "/root/testdata/sf0.001"
 
@@ -24,19 +25,18 @@ def main() -> None:
     from cdrc_semantic_search_spark import fixtures
     from cdrc_semantic_search_spark.config import Settings
     from cdrc_semantic_search_spark.plans.kg_pipeline import KGPipeline
-    from cdrc_semantic_search_spark.session import get_spark
 
-    spark = get_spark(parallelism=8)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("dump-plans")
 
     fx = fixtures.generate(seed=42, n_conversations=20, n_entities=50)
     tdf, _ = fixtures.to_spark(spark, fx)
     pipe = KGPipeline(spark, fx.entities, Settings())
 
     def fmt(df) -> str:
-        return df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            df.explain(mode="formatted")
+        return out.getvalue()[:-1]  # explain() prints: drop print's newline
 
     sections = []
 
@@ -85,8 +85,9 @@ def main() -> None:
         )
     )
 
-    os.makedirs("/root/repo/docs", exist_ok=True)
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    docs = os.path.join(REPO_ROOT, "docs")
+    os.makedirs(docs, exist_ok=True)
+    with open(os.path.join(docs, "PLANS.md"), "w") as f:
         f.write("# Physical plans of the key operators\n\n")
         f.write(
             "Generated by `scripts/dump_plans.py`; the properties shown here "

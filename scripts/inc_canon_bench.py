@@ -26,16 +26,11 @@ section (replace-by-heading; scripts/scaling_bench.py re-appends it).
 
 from __future__ import annotations
 
-import json
 import os
-import sys
-import time
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from _harness import publish, session, timed
 
-IC_JSON = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), ".inc_canon_bench.json"
-)
 S_BASE = 40_000
 M_DELTA = 2_000
 DIM = 64
@@ -150,12 +145,7 @@ Reproduce: `python scripts/inc_canon_bench.py`.
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from cdrc_semantic_search_spark.session import get_spark
-
-    spark = get_spark(app_name="inc-canon-bench", parallelism=16)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import tempfile
+    spark = session("inc-canon-bench")
 
     work = tempfile.mkdtemp(prefix="inc_canon_")
     results = []
@@ -175,9 +165,7 @@ def main() -> None:
         new = surfaces(spark, hi - M_DELTA, hi).localCheckpoint()
         all_surf = surfaces(spark, 0, hi).localCheckpoint()
 
-        t0 = time.time()
-        full = full_recluster(all_surf).localCheckpoint()
-        full_sec = round(time.time() - t0, 2)
+        full, full_sec = timed(lambda: full_recluster(all_surf).localCheckpoint())
 
         if labels is None:
             # generation 0 base labels: one full cluster of the base set
@@ -185,9 +173,9 @@ def main() -> None:
                 F.col("id"), F.col("canonical_id").alias("component")
             ).localCheckpoint()
 
-        t0 = time.time()
-        patched, n_pairs = incremental_patch(labels, all_surf, new)
-        inc_sec = round(time.time() - t0, 2)
+        (patched, n_pairs), inc_sec = timed(
+            lambda: incremental_patch(labels, all_surf, new)
+        )
 
         got = {
             (r.surface, r.canonical_surface)
@@ -218,12 +206,7 @@ def main() -> None:
         labels = spark.read.parquet(lp)
 
     assert all(r["equal"] for r in results), "incremental != full rebuild"
-    print(json.dumps(results))
-    with open(IC_JSON, "w") as f:
-        json.dump(results, f)
-    from bench_sections import replace_section
-
-    replace_section(MARKER, render_section(results))
+    publish("inc_canon_bench", results, MARKER, render_section(results))
     spark.stop()
 
 

@@ -40,7 +40,7 @@ def main() -> None:
         help="also commit per-bucket edge/node deltas (log-structured "
         "graph maintenance; read via compacted_edges/compacted_nodes)",
     )
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, help="local slots (default: SPARK_GRAFT_CPUS or all CPUs)")
     args = ap.parse_args()
     if args.with_graph and not args.partitioned:
         ap.error("--with-graph requires --partitioned (delta commits are "

@@ -2,8 +2,9 @@
 
 Generates a deterministic ~KX (default 10x) replica of the driver's sf0.1
 table set — same schemas, same per-copy distributions — and runs the
-bench.py HEADLINE suite at both scales on the same local[32] session,
-reporting the warm-median wall-time ratio per query. Near-linear ratios
+bench.py HEADLINE suite at both scales in one session (one local slot
+per CPU, from ``SPARK_GRAFT_CPUS`` or the machine), reporting the
+warm-median wall-time ratio per query. Near-linear ratios
 (<= ~K with fixed overheads amortized) turn the "plans survive 100x"
 argument from plan-reading into measurement; a superlinear query is a
 found bug.
@@ -47,11 +48,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO_ROOT)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from bench_sections import replace_section  # noqa: E402
+from _harness import REPO_ROOT, replace_section, session
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -224,11 +221,9 @@ def kg_main() -> None:
     from cdrc_semantic_search_spark import fixtures
     from cdrc_semantic_search_spark.config import Settings
     from cdrc_semantic_search_spark.plans.kg_pipeline import KGPipeline
-    from cdrc_semantic_search_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app_name="cdrc-kg-scaleup", parallelism=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("cdrc-kg-scaleup")
+    cpus = spark.sparkContext.defaultParallelism
 
     rows = []
     for n_conv in (2000, 20000):
@@ -249,7 +244,7 @@ def kg_main() -> None:
     lines = [
         "## KG pipeline scale-up: 1x -> 10x turns (fixed cluster)",
         "",
-        "Same local[32] session, transcript fixture at two volumes, warm "
+        f"Same local[{cpus}] session, transcript fixture at two volumes, warm "
         "median of 3 `triples()` runs. Complements the N->4N cluster-size "
         "bench (which fixes the input): here the input grows 10x on fixed "
         "cores, so constant turns/s = linear scaling.",
@@ -279,14 +274,11 @@ def main() -> None:
         generate(out_dir, k)
         print(f"generated {k}x set in {time.time() - t0:.1f}s -> {out_dir}")
 
-    from bench import HEADLINE  # noqa: E402
+    from bench import HEADLINE
 
     from cdrc_semantic_search_spark.plans.catalog_queries import REGISTRY
-    from cdrc_semantic_search_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app_name="cdrc-scaleup-bench", parallelism=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("cdrc-scaleup-bench")
 
     for t in ("lineitem", "embeddings", "documents"):
         spark.read.parquet(f"{out_dir}/{t}.parquet").count()
@@ -308,7 +300,8 @@ def main() -> None:
         f"Deterministic {k}x replica of the driver's sf0.1 set (key-offset "
         "copies; per-copy token-suffixed documents so dedup pair counts "
         f"scale exactly {k}x; sign-decorrelated embeddings — see "
-        "scripts/scaleup_bench.py). Same local[32] session, warm medians "
+        "scripts/scaleup_bench.py). Same "
+        f"local[{spark.sparkContext.defaultParallelism}] session, warm medians "
         f"of 3 interleaved passes at each scale. `ratio` = {k}x-warm / "
         f"sf0.1-warm; linear scaling at fixed cores => ratio <= {k}; "
         "fixed per-query overheads (planning, small dims) pull it below.",
@@ -359,11 +352,8 @@ def graph_main() -> None:
         connected_components,
     )
     from cdrc_semantic_search_spark.operators.graph import label_propagation
-    from cdrc_semantic_search_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app_name="cdrc-graph-scaleup", parallelism=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("cdrc-graph-scaleup")
 
     def edges_of(sf_dir: str):
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -397,7 +387,8 @@ def graph_main() -> None:
         "section measures the same iterative kernels over the FULL "
         "supplier→part bipartite edge list, which grows with the input "
         "(10x replica = 10 disjoint copies: 10x nodes, 10x edges, same "
-        "per-copy structure). Same local[32] session, warm median of 3 "
+        "per-copy structure). Same "
+        f"local[{spark.sparkContext.defaultParallelism}] session, warm median of 3 "
         "interleaved passes; edge materialization off the clock.",
         "",
         "| kernel | edges 1x | wall 1x s | edges 10x | wall 10x s | ratio |",

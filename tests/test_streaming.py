@@ -202,6 +202,35 @@ def test_compaction_canon_param_mismatch_falls_back_to_full(
     }
 
 
+def test_compacted_surface_clusters_without_live_delta_reads_base(
+    spark, fixture, spark_fixture, tmp_path, monkeypatch
+):
+    """Right after a compaction no surface delta is live: the compacted
+    read returns the base table's rows without clustering anything."""
+    tdf, _ = spark_fixture
+    pipe = KGPipeline(spark, fixture.entities, Settings())
+    cat = ParquetTableCatalog(str(tmp_path / "nd_cat"))
+    src = str(tmp_path / "nd_src")
+    tdf.repartition(4).write.mode("append").parquet(src)
+    incremental.stream_triples(
+        spark, pipe, src, cat, str(tmp_path / "nd_ckpt"), with_graph=True
+    )
+    pipe.compact_graph(cat)
+    assert cat.committed_partitions("surface_deltas") == set()
+
+    def boom(*_a, **_k):
+        raise AssertionError("re-clustered with no live surface delta")
+
+    monkeypatch.setattr(KGPipeline, "_cluster_surfaces_incremental", boom)
+    monkeypatch.setattr(KGPipeline, "_cluster_surfaces", boom)
+    got = pipe.compacted_surface_clusters(cat)
+    assert got.columns == ["surface", "canonical_surface", "entity_id"]
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, cat.read_table(spark, "surface_clusters")
+            .select(*got.columns).collect())
+    )
+
+
 def test_stream_stream_join_bounded_state(spark, spark_fixture, transcript_dir, tmp_path):
     """Turns join their conversation's registration event within the lag
     bound; a registration far in the past joins nothing (the event-time
@@ -664,3 +693,14 @@ def test_streamed_daily_counts_equal_batch_bursts(spark, tmp_path):
     assert {tuple(r) for r in burst_flags(
         incremental.compacted_daily_counts(spark, cat)
     ).collect()} == batch
+
+    # a partition whose data landed but whose marker did not is invisible
+    counts = {tuple(r) for r in incremental.compacted_daily_counts(spark, cat).collect()}
+    first = sorted(cat.committed_partitions("daily_count_deltas"))[0]
+    cat.read_partition(spark, "daily_count_deltas", first).write.parquet(
+        cat._partition_path("daily_count_deltas", "999")
+    )
+    assert "999" not in cat.committed_partitions("daily_count_deltas")
+    assert {
+        tuple(r) for r in incremental.compacted_daily_counts(spark, cat).collect()
+    } == counts
