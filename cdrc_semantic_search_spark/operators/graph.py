@@ -10,7 +10,7 @@ fixed-iteration PageRank.
 out-degree-annotated edge list with the current rank vector, one
 map-side-combined sum per destination, one broadcast-size rank update —
 no all-pairs anything; ``localCheckpoint`` truncates lineage so iteration
-N never re-optimizes 1..N-1 (same discipline as connected_components).
+N never re-optimizes 1..N-1.
 """
 
 from __future__ import annotations
@@ -232,8 +232,7 @@ def bfs_distances(
     symmetrized edge list, anti-joins the visited set, and checkpoints —
     one key-partitioned join + one anti-join per round, never a full
     transitive closure.  Rounds = graph diameter (bounded by
-    ``max_depth``), with early exit when a frontier empties; the same
-    shuffle/lineage discipline as connected_components.
+    ``max_depth``), with early exit when a frontier empties.
 
     ``sources`` is a one-column DataFrame of start vertex ids named
     ``id``.  Cross-checked by a DuckDB recursive-CTE oracle
@@ -247,7 +246,7 @@ def bfs_distances(
     barrier). Fine for the small-world graphs KG/entity work produces
     (diameter ≲ 20); a 10⁴-deep path graph would crawl and blow
     ``max_depth`` long before. For deep chains use a pointer-doubling
-    formulation (connected_components' contraction for reachability,
+    formulation (connected_components' union-find for undirected reachability,
     :func:`tree_depth_doubling` for single-parent depth/layering) —
     O(log depth) rounds at O(|V|·log depth) total join work.
     """
@@ -510,10 +509,9 @@ def k_core(
     Rounds = peeling depth (bounded by the degeneracy ordering length,
     typically ≪ |V|); each round is two key-partitioned joins + one
     aggregation, checkpointed so round N never re-optimizes 1..N-1.
-    The convergence probe rides the checkpoint action's count — the same
-    no-extra-job discipline as connected_components.  Unlike
-    connected_components, an early exit on ``max_rounds`` cannot return a
-    wrong answer silently — it raises.
+    The convergence probe rides the checkpoint action's count — no extra
+    job.  An early exit on ``max_rounds`` cannot return a wrong answer
+    silently — it raises.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -786,8 +784,7 @@ def strongly_connected_components(
     leave the graph and the remainder iterates.
 
     100-TB shape: each flood round is one edge⋈label equi-join + one
-    dst-keyed min groupBy (map-side partials absorb hub skew, as
-    measured for connected_components in BENCH.md) + a label-sized
+    dst-keyed min groupBy (map-side partials absorb hub skew) + a label-sized
     update join; localCheckpoint truncates lineage every round. Rounds
     scale with log(diameter) × SCC-condensation nesting depth, not
     graph size.
@@ -998,8 +995,7 @@ def tree_depth_doubling(
     Self-pointer rows (r → r) are accepted as explicit root
     declarations. NOTE: this operator is EAGER — the doubling loop (and
     the single-parent validation) runs Spark jobs at call time and the
-    returned frame is materialized state, same contract as
-    connected_components.
+    returned frame is materialized state.
 
     Exact oracle: DuckDB recursive CTE walking parent pointers
     (graph_tree_depth query).
@@ -1128,8 +1124,7 @@ def label_propagation(
     ``self_weight`` vote keeps the oscillation damping. Integer weights
     keep the update rule exact — no float enters the comparison.
 
-    NOTE: EAGER — each round localCheckpoints the |V|-row label frame
-    (the same lineage-truncation contract as connected_components), so
+    NOTE: EAGER — each round localCheckpoints the |V|-row label frame, so
     n_rounds Spark jobs run at call time; total materialized state is
     O(n_rounds · |V|), never O(|E|).
 
@@ -1210,7 +1205,7 @@ def label_propagation(
         # jobs into one action-driven cascade. Measured on the bench
         # graph: warm 2.61 → ~1.0 s, identical labels (integer update
         # rule is materialization-independent). Kernels WITH a
-        # convergence probe (connected_components, SCC, BFS) must stay
+        # convergence probe (SCC, BFS) must stay
         # eager — their loop condition reads each round's Observation.
         if rnd % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1 or rnd == n_rounds - 1:
             lab = lab.localCheckpoint(eager=False)
@@ -1815,8 +1810,7 @@ def khop_ball_sizes(
     shows the register algebra) keeps state O(|V|·register_width). This
     operator is the exact small-k/medium-graph member and the oracle
     for that sketch path. k is bounded (ValueError > 4) as a footgun
-    guard; each round localCheckpoints (lineage discipline shared with
-    connected_components).
+    guard; each round localCheckpoints to truncate lineage.
     """
     if not 1 <= k <= 4:
         raise ValueError(f"k must be in [1, 4] (exact balls explode): {k}")

@@ -202,7 +202,10 @@ def lsh_assign(
 
     Rows with a NULL vector are DROPPED (they cannot be bucketed; their
     cosine is NULL and could never pass a threshold re-check anyway —
-    np.stack would otherwise crash the executor on them).
+    np.stack would otherwise crash the executor on them). They are
+    dropped inside the batch pass, not by a ``filter``: the optimizer
+    would push ``isnotnull(vec)`` below an upstream aggregation and run
+    a vector-producing UDF a second time, over the pre-aggregation rows.
     """
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
@@ -216,6 +219,7 @@ def lsh_assign(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            pdf = pdf[pdf[vec_col].notna()]
             if not len(pdf):
                 continue
             v = np.stack(pdf[vec_col].to_numpy())
@@ -225,7 +229,7 @@ def lsh_assign(
             out["bucket"] = buckets.reshape(-1)
             yield out
 
-    return df.filter(F.col(vec_col).isNotNull()).mapInPandas(run, schema=out_schema)
+    return df.mapInPandas(run, schema=out_schema)
 
 
 def cosine_pairs_lsh(
@@ -258,8 +262,10 @@ def cosine_pairs_lsh(
     (id, band, bucket) tag table (both self-join branches — the
     signature matmul would otherwise run twice). Pass a list as
     ``cache_handle`` to receive them and unpersist once the result is
-    consumed (canonicalize_embedded does); otherwise the ContextCleaner
-    reclaims the blocks when the frames are dropped.
+    consumed; otherwise the ContextCleaner reclaims the blocks when the
+    frames are dropped. For clustering, canonicalize.similarity_forest
+    keeps the vector through one bucket exchange instead and emits a
+    spanning forest, not the pair list.
     """
     base = df.select(F.col(id_col), F.col(vec_col)).persist()
     tagged = lsh_assign(
@@ -302,56 +308,6 @@ def exact_recheck(
         .select(
             "id_a", "id_b", V.cosine(F.col("vec_a"), F.col("vec_b")).alias("score")
         )
-    )
-
-
-def cosine_pairs_lsh_delta(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    threshold: float,
-    new_col: str,
-    n_planes: int = 16,
-    n_bands: int = 4,
-    seed: int = 42,
-    cache_handle: list | None = None,
-) -> DataFrame:
-    """:func:`cosine_pairs_lsh` restricted to pairs touching a NEW row:
-    ``df`` carries a boolean ``new_col``; only candidate pairs where at
-    least one side is new are generated and re-checked.
-
-    The maintenance twin of the full pair generator: when converged
-    component labels already cover the OLD rows (their pairwise edges
-    are folded into the labels), feeding these delta edges to
-    ``incremental_components`` reproduces the full rebuild exactly —
-    pair-generation cost tracks the BATCH, not the corpus. Every
-    qualifying pair has a new member, so the join's LEFT side is the
-    new rows alone: per-bucket fan-out is |new in bucket| × |bucket|,
-    never |bucket|² — old-old pairs are never generated, not generated-
-    then-filtered. Pairs are normalized least/greatest and deduped.
-    """
-    base = df.select(F.col(id_col), F.col(vec_col), F.col(new_col)).persist()
-    tagged = lsh_assign(
-        base, vec_col, dim, n_planes, n_bands, seed, drop_vec=True
-    ).persist()
-    if cache_handle is not None:
-        cache_handle.extend([base, tagged])
-    a = tagged.filter(F.col(new_col)).select(
-        "band", "bucket", F.col(id_col).alias("__id_n")
-    )
-    b = tagged.select("band", "bucket", F.col(id_col).alias("__id_o"))
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("__id_n") != F.col("__id_o"))
-        .select(
-            F.least("__id_n", "__id_o").alias("id_a"),
-            F.greatest("__id_n", "__id_o").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return exact_recheck(base, cand, id_col, vec_col).filter(
-        F.col("score") >= threshold
     )
 
 

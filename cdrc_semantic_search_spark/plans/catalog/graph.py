@@ -50,7 +50,8 @@ from cdrc_semantic_search_spark.plans.catalog._core import (  # noqa: F401
     """,
 )
 def cc_components(spark, sf_dir):
-    """Connected components by iterative min-label propagation vs a DuckDB
+    """Connected components by a per-partition union-find forest and a
+    one-task union-find finish (component = min reachable id) vs a DuckDB
     recursive-CTE transitive closure — the canonicalization kernel
     (SURVEY §4.3) cross-checked exactly."""
     from cdrc_semantic_search_spark.operators.canonicalize import connected_components

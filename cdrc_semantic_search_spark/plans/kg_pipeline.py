@@ -349,9 +349,12 @@ class KGPipeline:
         )
 
     def _cluster_surfaces(self, distinct: DataFrame) -> DataFrame:
-        """Cluster a distinct (surface, entity_id) frame: encode → LSH
-        candidate pairs ≥ τ → connected components → canonical surface =
-        lexicographically smallest member."""
+        """Cluster a distinct (surface, entity_id) frame: encode → one
+        LSH-bucket pass that keeps a spanning forest of the pairs ≥ τ →
+        one-task union-find → canonical surface = lexicographically
+        smallest member. canonicalize_embedded carries entity_id through,
+        so the plan scans the surfaces once per branch and runs in a
+        fixed number of Spark jobs (6 on the perfbench kg_build input)."""
         from cdrc_semantic_search_spark.encoder import make_encoder_udf
         from cdrc_semantic_search_spark.operators.canonicalize import (
             canonicalize_embedded,
@@ -361,22 +364,23 @@ class KGPipeline:
         encode = make_encoder_udf(dim=enc.embed_dim, seed=enc.seed, ngram=enc.ngram)
         ps = self.settings.pipeline
         with_vec = distinct.withColumn("vec", encode(F.col("surface")))
-        clusters = canonicalize_embedded(
+        return canonicalize_embedded(
             with_vec, "surface", "vec", dim=enc.embed_dim,
             threshold=self.CANON_THRESHOLD,
             seed=enc.seed, n_planes=ps.canon_n_planes, n_bands=ps.canon_n_bands,
-        ).withColumnRenamed("id", "surface").withColumnRenamed(
-            "canonical_id", "canonical_surface"
-        )
-        return clusters.join(distinct, "surface", "left").select(
-            "surface", "canonical_surface", "entity_id"
+        ).select(
+            F.col("id").alias("surface"),
+            F.col("canonical_id").alias("canonical_surface"),
+            "entity_id",
         )
 
     def surface_clusters(self, mentions: DataFrame) -> DataFrame:
         """Canonicalization (north_rule stage 3): cluster distinct mention
-        surfaces by embedding similarity — LSH-bucketed candidate pairs ≥ τ,
-        then connected components (min-label propagation); canonical
-        surface = lexicographically smallest member.
+        surfaces by embedding similarity — LSH-bucketed pairs scored ≥ τ
+        into a per-partition spanning forest, then connected components
+        by a one-task union-find; canonical surface = lexicographically
+        smallest member. Equals the pure-Python specification twin
+        (value_oracles._fixture_surface_clusters) label for label.
 
         Reference analog: grouping near-identical chunks under one parent
         id (/root/reference/src/model.py:20-23), generalized to surface
@@ -943,27 +947,28 @@ class KGPipeline:
         Old-old similarity pairs are already folded into the base labels
         (canonical_surface = converged component minimum), so the only
         edges the union's component structure can add are pairs touching
-        a new surface: generate exactly those (cosine_pairs_lsh_delta —
-        same planes/bands/threshold as the full path, encoder is
-        deterministic) and fold them with incremental_components.
-        ``incremental_components(cc(E_old), E_new) ≡ cc(E_old ∪ E_new)``,
-        so the output hash-matches a from-scratch rebuild — pinned in
-        test_streaming's generation test (wave2 compacted over wave1's
-        base ≡ one-shot clustering of the union).
+        a new surface: score exactly those (similarity_forest with
+        ``new_col`` — same planes/bands/threshold as the full path,
+        encoder is deterministic), keep a spanning forest of the ones ≥ τ
+        and fold it with incremental_components. A forest has the pairs'
+        connectivity, and ``incremental_components(cc(E_old), E_new) ≡
+        cc(E_old ∪ E_new)``, so the output hash-matches a from-scratch
+        rebuild — pinned in test_streaming's generation test (wave2
+        compacted over wave1's base ≡ one-shot clustering of the union).
+        Nothing is cached or checkpointed: the plan runs once, inside
+        the caller's write.
 
-        What stays linear in |all surfaces|: the map-only re-encode +
-        LSH re-tag (no shuffle; at real scale persist (surface, band,
-        bucket) alongside the base and only the delta re-encodes) and
-        the label-patch join (one equi-join against the batch-sized
-        contracted mapping, which AQE broadcasts). What tracks the
-        DELTA: candidate generation, the cosine re-check, and the CC
+        What stays linear in |all surfaces|: the re-encode + LSH re-tag
+        and the one (band, bucket) exchange of the tagged rows (at real
+        scale persist (surface, band, bucket, vec) alongside the base
+        and only the delta re-encodes) and the label-patch join (one
+        equi-join against the batch-sized contracted mapping, which AQE
+        broadcasts). What tracks the DELTA: pair scoring and the CC
         itself — the superlinear pieces."""
         from cdrc_semantic_search_spark.encoder import make_encoder_udf
         from cdrc_semantic_search_spark.operators.canonicalize import (
             incremental_components,
-        )
-        from cdrc_semantic_search_spark.operators.similarity import (
-            cosine_pairs_lsh_delta,
+            similarity_forest,
         )
 
         base_labels = base.select(
@@ -979,23 +984,19 @@ class KGPipeline:
         )
         enc = self.settings.encoder
         encode = make_encoder_udf(dim=enc.embed_dim, seed=enc.seed, ngram=enc.ngram)
-        caches: list = []
         ps = self.settings.pipeline
-        new_pairs = cosine_pairs_lsh_delta(
+        new_forest = similarity_forest(
             flagged.withColumn("vec", encode(F.col("surface"))),
             "surface",
             "vec",
             dim=enc.embed_dim,
             threshold=self.CANON_THRESHOLD,
-            new_col="__is_new",
             seed=enc.seed,
             n_planes=ps.canon_n_planes,
             n_bands=ps.canon_n_bands,
-            cache_handle=caches,
+            new_col="__is_new",
         )
-        labels = incremental_components(base_labels, new_pairs).localCheckpoint()
-        for cached in caches:
-            cached.unpersist()
+        labels = incremental_components(base_labels, new_forest)
         return distinct.join(
             labels, distinct["surface"] == labels["id"], "left"
         ).select(

@@ -1,15 +1,15 @@
 """Connected-components bench on graphs big enough to see the algorithm.
 
 At driver-headline scale (hundreds of edges) cc_components is pure
-driver latency — one Spark job per round is the floor, and contraction's
-round advantage is invisible. This bench builds ≥10⁶-edge synthetic
-graphs distributed (no driver-side generation) and times the production
-operator (component-level min propagation + pointer jumping,
-operators/canonicalize.py) against classic 1-hop label propagation:
+driver latency. This bench builds ≥10⁶-edge synthetic graphs
+distributed (no driver-side generation) and times the production
+operator (a per-partition union-find forest, then a one-task union-find
+finish, operators/canonicalize.py) against classic 1-hop label
+propagation:
 
 * **path-1024**: 1,024 disjoint 1,025-vertex paths (2^20 edges) — the
-  diameter stress case; 1-hop propagation needs O(diameter) rounds,
-  contraction O(log diameter).
+  diameter stress case; 1-hop propagation needs O(diameter) rounds, the
+  production operator two stages whatever the diameter.
 * **zipf-hub**: 2^20 edges whose destinations are Zipf-skewed toward
   low ids (hub vertices ~ hot entities in a mention graph) — the skew
   stress case; most mass is one giant component.
@@ -114,9 +114,8 @@ def run_case(spark, name, edges, run_baseline: bool):
     # warmup (JVM/codegen) on a slice, untimed
     connected_components(edges.limit(10_000), src="src", dst="dst")
 
-    stats: dict = {}
-    n_comp, contraction_sec = timed(
-        lambda: connected_components(edges, src="src", dst="dst", max_iter=60, stats=stats)
+    n_comp, cc_sec = timed(
+        lambda: connected_components(edges, src="src", dst="dst")
         .select("component").distinct().count()
     )
 
@@ -124,8 +123,7 @@ def run_case(spark, name, edges, run_baseline: bool):
         "fixture": name,
         "edges": n_edges,
         "components": n_comp,
-        "contraction_rounds": stats["rounds"],
-        "contraction_sec": contraction_sec,
+        "cc_sec": cc_sec,
     }
     if run_baseline:
         (lp_comp, out["lp1hop_rounds"]), out["lp1hop_sec"] = timed(
@@ -145,7 +143,7 @@ def render_section(results: list[dict]) -> str:
         )
         rows.append(
             f"| {r['fixture']} | {r['edges']:,} | {r['components']:,} "
-            f"| {r['contraction_rounds']} / {r['contraction_sec']} s | {lp} |"
+            f"| {r['cc_sec']} s | {lp} |"
         )
     body = "\n".join(rows)
     return f"""
@@ -153,20 +151,20 @@ def render_section(results: list[dict]) -> str:
 
 Driver-headline CC fixtures are hundreds of edges — pure job-submission
 latency, where no algorithm is distinguishable. These graphs are big
-enough to show the CONTRACTION formulation's round bound (component-min
-propagation + pointer jumping, O(log diameter)) vs classic 1-hop label
-propagation (O(diameter)); both run identical per-round plan shapes
-(localCheckpoint + Observation convergence probe riding the checkpoint).
+enough to show the production operator's fixed stage count (a map-only
+union-find forest per partition, then a one-task union-find finish with
+the minimum id as root) against classic 1-hop label propagation
+(O(diameter) rounds, one localCheckpoint + Observation job per round).
 
-| fixture | edges | components | contraction rounds / wall | 1-hop LP rounds / wall |
+| fixture | edges | components | connected_components wall | 1-hop LP rounds / wall |
 |---|---|---|---|---|
 {body}
 
-Equal component counts assert both algorithms agree; rounds include the
-final zero-change confirmation round. On path-1024 (diameter 1024) 1-hop
-would need ~1,024 rounds (~an hour at the measured ~3.8 s/round) — it is
-run only on the low-diameter zipf graph, where a small round gap is all
-the diameter allows; the path fixture is the O(log d) vs O(d) argument.
+Equal component counts assert both algorithms agree; LP rounds include
+the final zero-change confirmation round. On path-1024 (diameter 1024)
+1-hop would need ~1,024 rounds (~an hour at the measured ~3.8 s/round) —
+it is run only on the low-diameter zipf graph; the path fixture shows
+that the production operator's cost does not follow the diameter.
 """
 
 

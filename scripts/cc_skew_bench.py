@@ -1,11 +1,12 @@
 """Hot-component skew evidence for connected_components.
 
-connected_components' docstring claims the per-component min groupBy is
-skew-safe: partial aggregation collapses every map partition to at most
-one row per component, so a component holding 90% of all vertices
-contributes <= #map-partitions rows to the exchange — not
-|hot component| rows. This bench PINS that claim with stage metrics
-instead of asserting it.
+connected_components contracts each input partition to a star forest in
+a map-only pass, then finishes in ONE task that receives at most one row
+per (input partition, vertex). Component shape should therefore not
+matter: a component holding 90% of all vertices sends the finish the
+same number of rows as the same vertices in 10-vertex chains, and no
+map task slows down on the hot component. This bench PINS that claim
+with stage metrics instead of asserting it.
 
 Two graphs, identical vertex/edge counts, run through the same
 connected_components call:
@@ -19,15 +20,15 @@ connected_components call:
 For every stage the CC run executes, the driver's status store yields
 per-task quantiles. Reported per graph:
 
-* agg-exchange records: total shuffle-WRITE records of the run — with
-  map-side combine this tracks #components x #partitions, not edge
-  multiplicity, so star-90 ~= uniform despite the 36x hot key;
+* shuffle-write records: total over the run — the forest rows the map
+  pass hands the finish, bounded by partitions x vertices whatever the
+  component shape, so star-90 ~= uniform despite the 36x hot key;
 * straggler ratio: max over stages (>= 8 tasks) of
-  task-runtime max / median — a hot reducer would push this to
-  ~|hot component| / |median component| (36x here); skew-safety means
-  it stays at scheduler-noise levels for BOTH graphs;
-* max single-task shuffle-READ records — the hot reducer's inbox; the
-  direct measurement that no task received a component-sized row set.
+  task-runtime max / median — a map task slowed by the hot component
+  would push this up; skew-safety means it stays at scheduler-noise
+  levels for BOTH graphs;
+* max single-task shuffle-READ records — the finish task's inbox, the
+  one place all forests meet.
 
 Results: JSON to stdout + scripts/.cc_skew_bench.json + a BENCH.md
 section (replace-by-heading; scripts/scaling_bench.py re-appends it
@@ -75,14 +76,12 @@ def run_case(spark, name: str, edges, seen: set) -> dict:
 
     edges = edges.localCheckpoint()  # materialize input outside the timing
     stages(spark, seen)  # absorb generation stages
-    stats: dict = {}
     n_comp, sec = timed(
-        lambda: connected_components(edges, stats=stats)
-        .select("component").distinct().count()
+        lambda: connected_components(edges).select("component").distinct().count()
     )
     run = stages(spark, seen)
-    multi = [s for s in run if "task_ms_max" in s and s["tasks"] >= 2]
-    big = [s for s in multi if s["tasks"] >= 8]
+    timed_stages = [s for s in run if "task_ms_max" in s]
+    big = [s for s in timed_stages if s["tasks"] >= 8]
     straggler = max(
         (s["task_ms_max"] / max(s["task_ms_median"], 1.0) for s in big),
         default=0.0,
@@ -90,11 +89,11 @@ def run_case(spark, name: str, edges, seen: set) -> dict:
     res = {
         "graph": name,
         "sec": sec,
-        "rounds": stats.get("rounds"),
         "components": n_comp,
         "shuffle_write_records": sum(s["shuffle_write_records"] for s in run),
         "max_task_read_records": max(
-            (s["task_read_rec_max"] for s in multi), default=0
+            # the one-task finish included: it is where all forests meet
+            (s["task_read_rec_max"] for s in timed_stages), default=0
         ),
         "straggler_ratio": round(straggler, 2),
     }
@@ -114,19 +113,18 @@ Same vertex/edge count, same `connected_components` call; star-90 puts
 edge rows), uniform caps components at 10 vertices. Stage metrics from
 the driver's status store over every stage of each run:
 
-| graph | rounds | wall sec | shuffle-write records | max rows into one task | straggler ratio (max/median task time) |
-|---|---|---|---|---|---|
-| star-90 | {s["rounds"]} | {s["sec"]} | {s["shuffle_write_records"]:,} | {s["max_task_read_records"]:,} | {s["straggler_ratio"]} |
-| uniform | {u["rounds"]} | {u["sec"]} | {u["shuffle_write_records"]:,} | {u["max_task_read_records"]:,} | {u["straggler_ratio"]} |
+| graph | wall sec | shuffle-write records | max rows into one task | straggler ratio (max/median task time) |
+|---|---|---|---|---|
+| star-90 | {s["sec"]} | {s["shuffle_write_records"]:,} | {s["max_task_read_records"]:,} | {s["straggler_ratio"]} |
+| uniform | {u["sec"]} | {u["shuffle_write_records"]:,} | {u["max_task_read_records"]:,} | {u["straggler_ratio"]} |
 
-The skew-safety claim, now measured: the giant component never lands on
-one reducer. Map-side partial aggregation collapses the hot component
-to <= 1 row per map partition before the exchange, so the largest
-single-task inbox under 90% skew stays ~|V|-proportional (relabel-join
-rows), never |hot component|² or a component-sized agg bucket, and the
-straggler ratio stays at scheduler-noise levels in both runs. At 100 TB
-the same plan shape holds: hot entities/conversations fatten map-side
-hash slots (bounded, spillable), not a single reducer.
+The skew-safety claim, measured: the map pass contracts every input
+partition to a star forest before the exchange, so the hot component
+costs about as many shuffle rows as the chains (one per vertex a
+partition sees) and the finish task's inbox stays bounded by
+partitions x vertices, never by edge multiplicity or component size;
+the straggler ratio stays at scheduler-noise levels in both runs. The finish is one task by design: it holds the forests
+(<= one row per partition and vertex), not the edge list.
 Reproduce: `python scripts/cc_skew_bench.py`.
 """
 

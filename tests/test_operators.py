@@ -1160,14 +1160,13 @@ def test_triangle_count_hub_skew(spark):
 
 def test_connected_components_long_path_converges(spark):
     """A 200-node path is the worst case for min-label flooding (diameter
-    199): contraction must still converge inside the round budget and
-    label every node with the path's minimum."""
+    199): every node must still get the path's minimum."""
     from cdrc_semantic_search_spark.operators.canonicalize import connected_components
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(199)], "id_a long, id_b long"
     )
-    out = connected_components(edges, max_iter=20).toPandas()
+    out = connected_components(edges).toPandas()
     assert len(out) == 200
     assert set(out["component"]) == {0}
 
@@ -1181,6 +1180,165 @@ def test_connected_components_chain_and_island(spark):
         for r in canonicalize.connected_components(edges).collect()
     )
     assert out == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+
+
+def _uf_components(edges) -> dict:
+    """Plain-Python union-find twin of connected_components: every
+    endpoint of a non-NULL edge → the minimum id of its component."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_connected_components_matches_union_find(spark, kind):
+    """Randomized graphs with duplicate and reversed edges and self-loops
+    (one vertex's only edge is a self-loop), over 1 and 7 input
+    partitions, against a plain-Python union-find."""
+    import random
+
+    from pyspark.sql.types import LongType, StringType
+
+    rng = random.Random(5 if kind == "long" else 6)
+    key = (lambda i: i) if kind == "long" else (lambda i: f"v{i:03d}")
+    for n, m in [(40, 30), (120, 150)]:
+        raw = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+        raw += [(b, a) for a, b in raw[:5]] + raw[5:10] + [(n + 7, n + 7)]
+        edges = [(key(a), key(b)) for a, b in raw]
+        want = _uf_components(edges)
+        df = spark.createDataFrame(edges, f"id_a {kind}, id_b {kind}")
+        for parts in (1, 7):
+            out = canonicalize.connected_components(df.repartition(parts))
+            got = {r.id: r.component for r in out.collect()}
+            assert got == want, (n, parts)
+    empty = canonicalize.connected_components(
+        spark.createDataFrame([], f"id_a {kind}, id_b {kind}")
+    )
+    want_type = LongType() if kind == "long" else StringType()
+    assert [f.dataType for f in empty.schema.fields] == [want_type, want_type]
+    assert empty.columns == ["id", "component"] and empty.count() == 0
+
+
+def _clustered_vectors(seed: int, n: int = 90, dim: int = 16):
+    """Unit-ish float32 vectors in tight groups around a few centres, so
+    the τ-graph has multi-member components and borderline pairs."""
+    rng = np.random.default_rng(seed)
+    centres = rng.standard_normal((12, dim)).astype(np.float32)
+    pick = rng.integers(0, len(centres), n)
+    noise = rng.standard_normal((n, dim)).astype(np.float32)
+    return centres[pick] + noise * np.float32(0.25)
+
+
+def test_similarity_forest_matches_lsh_pairs(spark):
+    """similarity_forest is a forest (per output partition: ≤ |V_p|−1
+    edges, no cycle; on one partition the whole output is) whose
+    components equal cosine_pairs_lsh's on the same input; with new_col,
+    those of the pairs touching a new row."""
+    mat = _clustered_vectors(11)
+    dim = mat.shape[1]
+    pdf = pd.DataFrame(
+        {
+            "vid": [f"s{i:03d}" for i in range(len(mat))],
+            "vec": [list(map(float, v)) for v in mat],
+            "new": [i % 5 == 0 for i in range(len(mat))],
+        }
+    )
+    df = spark.createDataFrame(pdf)
+    args = dict(dim=dim, threshold=0.9, n_planes=8, n_bands=4)
+    pairs = similarity.cosine_pairs_lsh(df, "vid", "vec", **args).collect()
+    new_ids = set(pdf.loc[pdf["new"], "vid"])
+    assert len(pairs) > 20  # the fixture has real clusters
+
+    def check_forest(rows):
+        by_part: dict = {}
+        for p, a, b in rows:
+            by_part.setdefault(p, []).append((a, b))
+        for edges in by_part.values():
+            verts = {v for e in edges for v in e}
+            assert len(edges) <= len(verts) - 1
+            # a forest: every edge joins two different components
+            comps = {v: v for v in verts}
+            for a, b in edges:
+                ca, cb = comps[a], comps[b]
+                assert ca != cb, "cycle"
+                for v, c in comps.items():
+                    if c == cb:
+                        comps[v] = ca
+
+    for new_col, want_pairs in [
+        (None, pairs),
+        ("new", [r for r in pairs if r.id_a in new_ids or r.id_b in new_ids]),
+    ]:
+        forest = canonicalize.similarity_forest(df, "vid", "vec", new_col=new_col, **args)
+        rows = forest.select(F.spark_partition_id(), "id_a", "id_b").collect()
+        check_forest(rows)
+        got = _uf_components([(a, b) for _, a, b in rows])
+        assert got == _uf_components([(r.id_a, r.id_b) for r in want_pairs])
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        one = canonicalize.similarity_forest(df, "vid", "vec", **args).collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    check_forest([(0, r.id_a, r.id_b) for r in one])
+    assert _uf_components([(r.id_a, r.id_b) for r in one]) == _uf_components(
+        [(r.id_a, r.id_b) for r in pairs]
+    )
+
+
+def test_canonicalize_embedded_carries_payload_columns(spark):
+    """Columns other than the id and the vector ride through; a row with
+    a NULL vector is kept as its own canonical."""
+    mat = _clustered_vectors(12, n=30)
+    rows = [(f"s{i:02d}", list(map(float, v)), i) for i, v in enumerate(mat)]
+    rows.append(("zz", None, 99))
+    df = spark.createDataFrame(rows, "sid string, vec array<float>, payload int")
+    out = canonicalize.canonicalize_embedded(
+        df, "sid", "vec", dim=mat.shape[1], threshold=0.9, n_planes=8
+    )
+    assert out.columns == ["id", "canonical_id", "payload"]
+    got = {r.id: (r.canonical_id, r.payload) for r in out.collect()}
+    assert got["zz"] == ("zz", 99)
+    assert {k: p for k, (_, p) in got.items()} == {r[0]: r[2] for r in rows}
+    assert len({c for c, _ in got.values()}) < len(got)
+
+
+def test_fold_cosine_pairs_bit_identical_to_oracle_fold():
+    """The vectorized fold equals value_oracles._fold_cosine bit for bit
+    on random float32 vectors, pairs within 1e-7 of τ included; a zero
+    vector gives NaN, which never passes ≥ τ."""
+    from cdrc_semantic_search_spark.plans.value_oracles import _fold_cosine
+
+    rng = np.random.default_rng(23)
+    mat = rng.standard_normal((200, 64)).astype(np.float32)
+    mat[150:] = mat[:50] + rng.standard_normal((50, 64)).astype(np.float32) * np.float32(0.05)
+    mat[7] = 0.0
+    cols = mat.astype(np.float64).T.copy()
+    norms = canonicalize._fold_norms(cols)
+    u = rng.integers(0, 200, 4000)
+    v = rng.integers(0, 200, 4000)
+    u[:50], v[:50] = np.arange(50), np.arange(150, 200)
+    u[50:60] = 7
+    got = canonicalize._fold_cosine_pairs(cols, norms, u, v)
+    want = np.array([_fold_cosine(mat[a], mat[b]) for a, b in zip(u, v)])
+    assert np.array_equal(got, want, equal_nan=True)
+    assert np.isnan(got[50:60]).all() and not (got[50:60] >= -1.0).any()
+    # thresholds placed within 1e-7 of real scores decide identically
+    near = want[:50]
+    for tau in (near - 1e-7, near, near + 1e-7, np.nextafter(near, 2.0)):
+        assert np.array_equal(got[:50] >= tau, near >= tau)
 
 
 def test_canonicalize_embedded_clusters_duplicates(spark):

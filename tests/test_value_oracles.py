@@ -129,3 +129,26 @@ def test_crc32_matches_spark(spark):
     ).collect()
     for r in rows:
         assert zlib.crc32(r["s"].encode()) == r["h"], f"mismatch on {r['s']!r}"
+
+
+@pytest.mark.parametrize("partitions", [1, 7])
+def test_surface_clusters_equal_specification_twin(spark, partitions):
+    """KGPipeline.surface_clusters gives every surface exactly the label
+    of the pure-Python specification twin (_fixture_surface_clusters:
+    LSH buckets, left-fold cosine ≥ τ, union-find with min canonical),
+    whatever the partitioning of the mentions."""
+    from cdrc_semantic_search_spark import fixtures
+    from cdrc_semantic_search_spark.config import Settings
+    from cdrc_semantic_search_spark.plans.kg_pipeline import KGPipeline
+
+    fx = fixtures.generate(seed=42, n_conversations=40, n_entities=100)
+    tdf, _ = fixtures.to_spark(spark, fx)
+    pipe = KGPipeline(spark, fx.entities, Settings())
+    mentions = pipe.mentions(tdf).repartition(partitions)
+    got = {
+        r.surface: r.canonical_surface
+        for r in pipe.surface_clusters(mentions).collect()
+    }
+    _gold, _counts, want = vo._fixture_surface_clusters()
+    assert len(want) > 100 and len(set(want.values())) < len(want)
+    assert got == want
