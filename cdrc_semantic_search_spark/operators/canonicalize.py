@@ -261,18 +261,26 @@ def similarity_forest(
     Bucket space sizing and NULL vectors follow ``lsh_assign``: NULL
     vectors are dropped, and pair work is quadratic in the bucket, so
     pick n_planes/n_bands as :func:`canonicalize_embedded` describes.
+    NULL ids are dropped too.
+
+    Every column of ``df`` rides into the bucket exchange, unread, so
+    column pruning leaves the plan below ``df`` as the caller built it: a
+    caller that reads ``df`` again (``canonicalize_embedded`` joins its
+    payload back) shares that plan's exchanges with this branch instead
+    of computing a pruned twin of them. Drop a wide column you do not
+    read again before calling.
     """
-    kept = [id_col, vec_col] + ([new_col] if new_col else [])
-    tagged = lsh_assign(
-        df.select(*kept).filter(F.col(id_col).isNotNull()),
-        vec_col, dim, n_planes, n_bands, seed,
-    )
+    tagged = lsh_assign(df, vec_col, dim, n_planes, n_bands, seed)
     id_type = df.schema[id_col].dataType
     schema = StructType([StructField("id_a", id_type), StructField("id_b", id_type)])
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         t = _partition(batches)
-        if t is None:
+        # NULL ids are dropped here, not by a filter the optimizer would
+        # push below the caller's aggregation (and out of the plan it
+        # shares)
+        t = None if t is None else t.filter(pc.is_valid(t.column(id_col)))
+        if t is None or not t.num_rows:
             return
         ids, (vidx,) = _vertex_index(t.column(id_col))
         # one row per vertex: the first of its (one per band) tag rows

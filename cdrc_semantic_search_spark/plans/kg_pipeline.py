@@ -22,8 +22,11 @@ Plan-shape invariants (the 100-TB contract):
 from __future__ import annotations
 
 import logging
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable
 
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,9 +37,26 @@ from cdrc_semantic_search_spark.operators.extraction import (
     extract_linked_triples,
 )
 from cdrc_semantic_search_spark.operators.linking import build_entity_index
-from cdrc_semantic_search_spark.sources.catalog import ParquetTableCatalog
+from cdrc_semantic_search_spark.sources.catalog import (
+    ParquetTableCatalog,
+    data_files,
+    footer_rows,
+)
 
 log = logging.getLogger(__name__)
+
+
+def _run_together(spark: SparkSession, *writes: Callable[[], None]) -> None:
+    """Run independent writes at the same time, one thread each, and
+    return once all have finished; the first failing write's exception
+    (in argument order) is re-raised. Each thread inherits the caller's
+    Spark local properties, so its jobs are filed under the caller's job
+    group. The writes' jobs share the scheduler, which fills the cores a
+    single small write leaves idle."""
+    with ThreadPoolExecutor(len(writes)) as pool:
+        done = [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]
+    for d in done:
+        d.result()
 
 
 class KGPipeline:
@@ -352,9 +372,11 @@ class KGPipeline:
         """Cluster a distinct (surface, entity_id) frame: encode → one
         LSH-bucket pass that keeps a spanning forest of the pairs ≥ τ →
         one-task union-find → canonical surface = lexicographically
-        smallest member. canonicalize_embedded carries entity_id through,
-        so the plan scans the surfaces once per branch and runs in a
-        fixed number of Spark jobs (6 on the perfbench kg_build input)."""
+        smallest member. canonicalize_embedded carries entity_id through
+        and similarity_forest keeps every column of its input, so the
+        forest branch and the payload join-back share one aggregation
+        exchange over the mentions, and the plan runs in a fixed number
+        of Spark jobs (5 on the perfbench kg_build input)."""
         from cdrc_semantic_search_spark.encoder import make_encoder_udf
         from cdrc_semantic_search_spark.operators.canonicalize import (
             canonicalize_embedded,
@@ -448,21 +470,32 @@ class KGPipeline:
     ) -> dict[str, int]:
         """Full graph materialization: triples + mentions + kg_nodes +
         kg_edges + surface_clusters written through the catalog (K1/K2
-        analog: create-or-replace node/edge tables,
-        /root/reference/src/datastore.py:80-95)."""
-        tri = self.triples(transcripts)
-        catalog.create_or_replace(tri, "triples")
+        analog: create-or-replace node/edge tables, the reference's
+        src/datastore.py:80-95).
+
+        Two rounds of writes that run at the same time: ``triples`` and
+        ``mentions``; then, over the written bytes, ``kg_edges``,
+        ``kg_nodes`` and ``surface_clusters``. A failed write re-raises
+        once its round has finished. Returns per-table row counts, read
+        from the written footers."""
+        def write(df: DataFrame, name: str) -> Callable[[], None]:
+            return lambda: catalog.create_or_replace(df, name)
+
+        _run_together(
+            self.spark,
+            write(self.triples(transcripts), "triples"),
+            write(self.mentions(transcripts), "mentions"),
+        )
         tri_c = catalog.read_table(self.spark, "triples")
-
-        men = self.mentions(transcripts)
-        catalog.create_or_replace(men, "mentions")
         men_c = catalog.read_table(self.spark, "mentions")
-
-        catalog.create_or_replace(self.kg_edges(tri_c), "kg_edges")
-        catalog.create_or_replace(self.kg_nodes(men_c), "kg_nodes")
-        catalog.create_or_replace(self.surface_clusters(men_c), "surface_clusters")
+        _run_together(
+            self.spark,
+            write(self.kg_edges(tri_c), "kg_edges"),
+            write(self.kg_nodes(men_c), "kg_nodes"),
+            write(self.surface_clusters(men_c), "surface_clusters"),
+        )
         return {
-            name: catalog.read_table(self.spark, name).count()
+            name: footer_rows(catalog.table_path(name))
             for name in ["triples", "mentions", "kg_edges", "kg_nodes", "surface_clusters"]
         }
 
@@ -655,11 +688,8 @@ class KGPipeline:
 
         if not os.path.exists(KGPipeline._gen_marker_path(catalog)):
             return None
-        path = catalog.table_path(name)
-        if os.path.isdir(path) and any(
-            f.endswith(".parquet") for f in os.listdir(path)
-        ):
-            return spark.read.parquet(path)
+        if data_files(catalog.table_path(name)):
+            return catalog.read_table(spark, name)
         return None
 
     @staticmethod
@@ -766,9 +796,12 @@ class KGPipeline:
         Protocol (single compactor at a time; roll-forward on crash):
         1. materialize all three merged views into ``.staging`` dirs
            (readers may merge an EXISTING base, so the write must not
-           replace a table it is reading — staged swap);
-        2. atomically record ``_compaction.json`` naming the delta
-           partitions being folded — the compaction commit point;
+           replace a table it is reading — staged swap); the three
+           writes run at the same time;
+        2. once all three staged writes have finished, atomically record
+           ``_compaction.json`` naming the delta partitions being
+           folded — the compaction commit point (a failed staged write
+           re-raises before it: bases and ledger stay as they were);
         3. swap staging → final, then retire the folded partitions
            (marker moves to the retired ledger; data deleted), bump the
            generation marker, remove the record.
@@ -778,7 +811,8 @@ class KGPipeline:
         Between (2) and the cleanup, compacted reads RAISE (the record's
         presence gates them) instead of serving a half-compacted state.
         No-op when there are no live deltas and a base generation already
-        exists.  Returns per-table row counts."""
+        exists.  Returns per-table row counts, read from the base
+        tables' footers."""
         import json
         import os
 
@@ -789,17 +823,18 @@ class KGPipeline:
         folded = {t: sorted(catalog.committed_partitions(t)) for t in self.DELTA_TABLES}
         if not any(folded.values()) and os.path.exists(self._gen_marker_path(catalog)):
             # nothing to fold — skip three full-table rewrite jobs
-            return {
-                n: catalog.read_table(self.spark, n).count()
-                for n in self.BASE_TABLES
-            }
+            return {n: footer_rows(catalog.table_path(n)) for n in self.BASE_TABLES}
         frames = {
             "kg_edges": self.compacted_edges(self.spark, catalog),
             "kg_nodes": self.compacted_nodes(catalog),
             "surface_clusters": self.compacted_surface_clusters(catalog),
         }
-        for name, df in frames.items():
-            df.write.mode("overwrite").parquet(catalog.table_path(name) + ".staging")
+
+        def stage(df: DataFrame, name: str) -> Callable[[], None]:
+            path = catalog.table_path(name) + ".staging"
+            return lambda: df.write.mode("overwrite").parquet(path)
+
+        _run_together(self.spark, *(stage(df, n) for n, df in frames.items()))
         tmp = record_path + ".tmp"
         with open(tmp, "w") as f:
             # the fingerprint travels IN the commit record: whoever rolls
@@ -812,10 +847,7 @@ class KGPipeline:
             )
         os.replace(tmp, record_path)  # the compaction commit point
         self._finish_compaction(catalog, record_path)
-        return {
-            n: catalog.read_table(self.spark, n).count()
-            for n in self.BASE_TABLES
-        }
+        return {n: footer_rows(catalog.table_path(n)) for n in self.BASE_TABLES}
 
     @classmethod
     def _finish_compaction(cls, catalog: ParquetTableCatalog, record_path: str) -> None:

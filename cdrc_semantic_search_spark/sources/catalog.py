@@ -16,6 +16,13 @@ Iceberg-manifest analog: one file per (table, partition) recording lineage
 (source snapshot, row/triple counts, timestamps); a partition is visible
 iff its marker exists, and re-running a partition atomically replaces data
 then marker — idempotent resume by construction.
+
+Like Iceberg's manifests, the files already hold the table metadata, so
+nothing scans data to learn it: Spark writes the frame's schema into
+every parquet footer, and the footer holds the row count. Reads take the
+schema from the first data file's footer (no schema-inference job), and
+commits count rows from the footers of the files just written (no
+read-back job).
 """
 
 from __future__ import annotations
@@ -28,9 +35,51 @@ import logging
 from dataclasses import dataclass, fields
 from typing import Any
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 log = logging.getLogger("cdrc_semantic_search_spark")
+
+#: footer key under which Spark's parquet writer stores the frame's schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def data_files(path: str) -> list[str]:
+    """The parquet data files directly under ``path``, sorted; files
+    under ``part=`` subdirectories are not listed, nor the ``_``/``.``
+    files (``_SUCCESS``, checksums) Spark's reader skips too."""
+    try:
+        names = os.listdir(path)
+    except (FileNotFoundError, NotADirectoryError):
+        return []
+    return sorted(
+        os.path.join(path, f)
+        for f in names
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without the schema-inference job:
+    the schema comes from the Spark schema in the first data file's
+    footer. A first path with no direct data file (a table partitioned
+    into ``part=`` subdirectories, whose partition column Spark must
+    discover) or a footer without Spark's schema (a file another writer
+    made) falls back to the plain read. Like Spark's own inference
+    without ``mergeSchema``, one file speaks for all ``paths``."""
+    files = data_files(paths[0])
+    meta = (pq.read_metadata(files[0]).metadata or {}) if files else {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        return spark.read.parquet(*paths)
+    schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def footer_rows(path: str) -> int:
+    """Rows in the data files directly under ``path``, summed from their
+    footers (exact: parquet records each row group's count)."""
+    return sum(pq.read_metadata(f).num_rows for f in data_files(path))
 
 
 @dataclass
@@ -258,10 +307,10 @@ class ParquetTableCatalog:
         path = self._partition_path(name, partition)
         # write FIRST, then count the written files: counting the input
         # DataFrame up front would execute the (possibly expensive) plan
-        # twice, while a count over freshly written parquet is satisfied
-        # from file metadata/footers
+        # twice, while the written files' footers hold the count — read
+        # on the driver, with no Spark job
         df.write.mode("overwrite").parquet(path)
-        row_count = df.sparkSession.read.parquet(path).count()
+        row_count = footer_rows(path)
         extra = dict(metrics_fn()) if metrics_fn is not None else {}
         rec = CommitRecord(
             table=name,
@@ -295,13 +344,13 @@ class ParquetTableCatalog:
 
     # ---- reads -----------------------------------------------------------
     def read_table(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(self.table_path(name))
+        return read_parquet(spark, self.table_path(name))
 
     def read_partition(self, spark: SparkSession, name: str, partition: str) -> DataFrame:
         """One partition's data, committed or not (caller checks the ledger
         when commit visibility matters — e.g. deriving downstream deltas
         from exactly the bytes a previous commit wrote)."""
-        return spark.read.parquet(self._partition_path(name, partition))
+        return read_parquet(spark, self._partition_path(name, partition))
 
     def read_committed(self, spark: SparkSession, name: str) -> DataFrame:
         """Union of committed partitions only (uncommitted data invisible)."""
@@ -309,7 +358,7 @@ class ParquetTableCatalog:
         paths = [self._partition_path(name, p) for p in parts]
         if not paths:
             raise FileNotFoundError(f"no committed partitions for {name}")
-        return spark.read.parquet(*paths)
+        return read_parquet(spark, *paths)
 
     # ---- ledger ----------------------------------------------------------
     def committed_partitions(self, name: str) -> set[str]:
@@ -429,8 +478,8 @@ class ParquetTableCatalog:
             raise FileNotFoundError(
                 f"no partitions of {name} were committed at {as_of}"
             )
-        return spark.read.parquet(
-            *[self._partition_path(name, p) for p in parts]
+        return read_parquet(
+            spark, *[self._partition_path(name, p) for p in parts]
         )
 
     def uncommitted(self, name: str, all_partitions: list[str]) -> list[str]:

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import contextlib
 import io
+import itertools
+import time
 
 import pytest
 
@@ -41,3 +43,40 @@ def plan_of():
         return out.getvalue()
 
     return _plan
+
+
+@pytest.fixture(scope="session")
+def jobs_of(spark):
+    """Run a call under a fresh Spark job group → (ids of the jobs filed
+    under that group, ids of every job started meanwhile). A fence job
+    runs before and after the call; the status listener handles events
+    in order, so once a fence shows, every earlier job shows too."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    names = itertools.count()
+
+    def in_group(fn) -> str:
+        group = f"jobs-of-{next(names)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return group
+
+    def fence() -> list[int]:
+        group = in_group(lambda: spark.range(1).collect())
+        deadline = time.monotonic() + 60
+        while not tracker.getJobIdsForGroup(group):
+            assert time.monotonic() < deadline, "fence job never showed"
+            time.sleep(0.05)
+        return tracker.getJobIdsForGroup(group)
+
+    def run(fn) -> tuple[list[int], list[int]]:
+        first = max(fence()) + 1
+        group = in_group(fn)
+        last = min(fence())
+        return sorted(tracker.getJobIdsForGroup(group)), list(range(first, last))
+
+    return run

@@ -1,10 +1,23 @@
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from cdrc_semantic_search_spark.config import Settings
 from cdrc_semantic_search_spark.plans.kg_pipeline import KGPipeline
-from cdrc_semantic_search_spark.sources.catalog import ParquetTableCatalog
+from cdrc_semantic_search_spark.sources.catalog import (
+    ParquetTableCatalog,
+    footer_rows,
+    read_parquet,
+)
+
+GRAPH_TABLES = ["triples", "mentions", "kg_edges", "kg_nodes", "surface_clusters"]
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
 
 
 def test_materialize_all_tables(spark, fixture, spark_fixture, tmp_path):
@@ -136,3 +149,112 @@ def test_merge_node_deltas_counts_add_and_dim_survives(spark):
         "E2": ("Python", "tool", 0),
         "E3": ("Footfall", "dataset", 7),
     }
+
+
+def test_footer_metadata_equals_spark_read(spark, fixture, spark_fixture, tmp_path, jobs_of):
+    """Every table materialize writes reads back through the footer
+    schema exactly as a plain ``spark.read.parquet`` reads it (types,
+    nullability, rows), its footer row count is Spark's count, and a
+    materialize run files every job it launches under the caller's job
+    group."""
+    tdf, _ = spark_fixture
+    pipe = KGPipeline(spark, fixture.entities, Settings())
+    cat = ParquetTableCatalog(str(tmp_path / "kg"))
+    counts = {}
+    in_group, started = jobs_of(lambda: counts.update(pipe.materialize(tdf, cat)))
+    assert in_group and in_group == started
+    types = set()
+    for name in GRAPH_TABLES:
+        path = cat.table_path(name)
+        got, want = cat.read_table(spark, name), spark.read.parquet(path)
+        assert got.schema == want.schema
+        assert _rows(got) == _rows(want)
+        assert counts[name] == footer_rows(path) == want.count()
+        types |= {f.dataType.typeName() for f in got.schema.fields}
+    assert {"timestamp", "integer", "double", "boolean", "string"} <= types
+    # building a read fires no job: the schema comes from the footer
+    assert jobs_of(lambda: cat.read_table(spark, "mentions")) == ([], [])
+
+
+def test_footer_reads_and_counts_of_partitions(spark, tmp_path, jobs_of):
+    """Ledger commits count rows from the footers (empty writes too),
+    reads of committed partitions fire no job, and an overwrite fires
+    exactly the jobs of its write."""
+    cat = ParquetTableCatalog(str(tmp_path / "cat"))
+    df = spark.range(50).select(
+        F.col("id").cast("int").alias("n"),
+        (F.col("id") / 3).alias("x"),
+        (F.col("id") % 2 == 0).alias("even"),
+        F.col("id").cast("string").alias("s"),
+        F.timestamp_seconds(F.col("id")).alias("ts"),
+    )
+    rec = cat.overwrite_partition(df, "t", "0")
+    assert rec.row_count == 50
+    assert cat.overwrite_partition(df.limit(0), "t", "1").row_count == 0
+    cat.create_or_replace(df.limit(0), "empty")
+    assert footer_rows(cat.table_path("empty")) == 0
+    empty = cat.read_table(spark, "empty")
+    assert empty.schema == spark.read.parquet(cat.table_path("empty")).schema
+    assert empty.columns == df.columns and empty.count() == 0
+
+    plain = spark.read.parquet(cat._partition_path("t", "0"), cat._partition_path("t", "1"))
+    got = cat.read_committed(spark, "t")
+    assert got.schema == plain.schema
+    assert _rows(got) == _rows(plain) == _rows(df)
+    assert jobs_of(lambda: cat.read_committed(spark, "t")) == ([], [])
+    assert jobs_of(lambda: cat.read_partition(spark, "t", "0")) == ([], [])
+
+    write_jobs, _ = jobs_of(
+        lambda: df.write.mode("overwrite").parquet(str(tmp_path / "bare"))
+    )
+    commit_jobs, started = jobs_of(lambda: cat.overwrite_partition(df, "t", "0"))
+    assert commit_jobs == started and len(commit_jobs) == len(write_jobs) > 0
+
+
+def test_footer_read_falls_back_to_spark_inference(spark, tmp_path, jobs_of):
+    """No direct data file (a ``part=``-partitioned directory, whose
+    partition column Spark discovers) or a footer without Spark's schema
+    (a file pyarrow wrote): the plain read runs, inference job and all."""
+    df = spark.range(6).select(
+        F.col("id"), (F.col("id") % 3).cast("int").alias("part")
+    )
+    parted = str(tmp_path / "parted")
+    df.write.partitionBy("part").parquet(parted)
+    foreign = tmp_path / "foreign"
+    foreign.mkdir()
+    pq.write_table(
+        pa.table({"a": [1, 2, 3], "b": ["x", None, "z"]}), str(foreign / "f.parquet")
+    )
+    assert b"org.apache.spark.sql.parquet.row.metadata" not in (
+        pq.read_metadata(str(foreign / "f.parquet")).metadata or {}
+    )
+    for path in (parted, str(foreign)):
+        got, want = read_parquet(spark, path), spark.read.parquet(path)
+        assert got.schema == want.schema
+        assert _rows(got) == _rows(want)
+        in_group, _ = jobs_of(lambda p=path: read_parquet(spark, p))
+        assert in_group  # the inference job the footer read avoids
+    assert "part" in read_parquet(spark, parted).columns
+
+
+def test_materialize_write_failure_reaches_caller(
+    spark, fixture, spark_fixture, tmp_path, monkeypatch
+):
+    """One of the concurrent graph writes fails: materialize re-raises
+    its error once the other writes of the round have finished."""
+    tdf, _ = spark_fixture
+    pipe = KGPipeline(spark, fixture.entities, Settings())
+
+    def boom(_):
+        raise RuntimeError("kg_nodes write failed on purpose")
+
+    def failing_nodes(self, mentions):
+        return mentions.select(F.udf(boom, "long")("entity_id").alias("n"))
+
+    monkeypatch.setattr(KGPipeline, "kg_nodes", failing_nodes)
+    cat = ParquetTableCatalog(str(tmp_path / "kg"))
+    with pytest.raises(Exception, match="kg_nodes write failed on purpose"):
+        pipe.materialize(tdf, cat)
+    # the round's other writes ran to the end
+    for name in ("kg_edges", "surface_clusters"):
+        assert footer_rows(cat.table_path(name)) > 0

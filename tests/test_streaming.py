@@ -231,6 +231,101 @@ def test_compacted_surface_clusters_without_live_delta_reads_base(
     )
 
 
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_footer_reads_equal_spark_reads_on_streamed_catalog(
+    spark, fixture, spark_fixture, tmp_path
+):
+    """Streamed ledger partitions and compacted base tables read back
+    through the footer schema exactly as plain ``spark.read.parquet``
+    reads them, and every ledger row count is Spark's count."""
+    tdf, _ = spark_fixture
+    pipe = KGPipeline(spark, fixture.entities, Settings())
+    cat = ParquetTableCatalog(str(tmp_path / "ft_cat"))
+    src = str(tmp_path / "ft_src")
+    tdf.repartition(4).write.mode("append").parquet(src)
+    incremental.stream_triples(
+        spark, pipe, src, cat, str(tmp_path / "ft_ckpt"), with_graph=True
+    )
+    for name in ("stream_triples",) + KGPipeline.DELTA_TABLES:
+        parts = sorted(cat.committed_partitions(name))
+        plain = spark.read.parquet(*[cat._partition_path(name, p) for p in parts])
+        got = cat.read_committed(spark, name)
+        assert got.schema == plain.schema
+        assert _rows(got) == _rows(plain)
+        for rec in cat.ledger(name):
+            part = cat.read_partition(spark, name, rec.partition)
+            assert rec.row_count == part.count()
+            assert part.schema == plain.schema
+
+    counts = pipe.compact_graph(cat)
+    for name in KGPipeline.BASE_TABLES:
+        got, plain = cat.read_table(spark, name), spark.read.parquet(cat.table_path(name))
+        assert got.schema == plain.schema
+        assert _rows(got) == _rows(plain)
+        assert counts[name] == plain.count()
+
+
+def test_failed_compaction_write_leaves_catalog_unchanged(
+    spark, fixture, spark_fixture, tmp_path, monkeypatch, jobs_of
+):
+    """compact_graph stages its three base tables at the same time. When
+    one staged write fails, the error reaches the caller before the
+    compaction commit point: no record is written, the bases and the
+    delta ledger stay as they were, and an unpatched rerun — every job
+    of it filed under the caller's job group — equals the one-shot
+    rebuild."""
+    tdf, _ = spark_fixture
+    convs = sorted(r.conv_id for r in tdf.select("conv_id").distinct().collect())
+    cut = convs[len(convs) // 2]
+    src = str(tmp_path / "fail_src")
+    ckpt = str(tmp_path / "fail_ckpt")
+    pipe = KGPipeline(spark, fixture.entities, Settings())
+    cat = ParquetTableCatalog(str(tmp_path / "fail_cat"))
+    tdf.filter(F.col("conv_id") < cut).repartition(2).write.mode("append").parquet(src)
+    incremental.stream_triples(spark, pipe, src, cat, ckpt, with_graph=True)
+    pipe.compact_graph(cat)
+    tdf.filter(F.col("conv_id") >= cut).repartition(2).write.mode("append").parquet(src)
+    incremental.stream_triples(spark, pipe, src, cat, ckpt, with_graph=True)
+
+    def state():
+        return (
+            {n: _rows(cat.read_table(spark, n)) for n in KGPipeline.BASE_TABLES},
+            {t: (cat.committed_partitions(t), cat.retired_partitions(t))
+             for t in KGPipeline.DELTA_TABLES},
+        )
+
+    before = state()
+
+    def boom(_):
+        raise RuntimeError("staged kg_nodes write failed on purpose")
+
+    def failing_nodes(self, catalog):
+        return self.spark.range(3).select(F.udf(boom, "long")("id").alias("n"))
+
+    with monkeypatch.context() as m:
+        m.setattr(KGPipeline, "compacted_nodes", failing_nodes)
+        with pytest.raises(Exception, match="staged kg_nodes write failed on purpose"):
+            pipe.compact_graph(cat)
+    assert not os.path.exists(KGPipeline._record_path(cat))
+    assert state() == before
+
+    in_group, started = jobs_of(lambda: pipe.compact_graph(cat))
+    assert in_group and in_group == started
+    nodes = ["entity_id", "n_mentions"]
+    assert _rows(KGPipeline.compacted_edges(spark, cat)) == _rows(
+        pipe.kg_edges(pipe.triples(tdf))
+    )
+    assert _rows(pipe.compacted_nodes(cat).select(*nodes)) == _rows(
+        pipe.kg_nodes(pipe.mentions(tdf)).select(*nodes)
+    )
+    assert _rows(pipe.compacted_surface_clusters(cat)) == _rows(
+        pipe.surface_clusters(pipe.mentions(tdf))
+    )
+
+
 def test_stream_stream_join_bounded_state(spark, spark_fixture, transcript_dir, tmp_path):
     """Turns join their conversation's registration event within the lag
     bound; a registration far in the past joins nothing (the event-time
