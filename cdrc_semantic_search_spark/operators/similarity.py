@@ -928,16 +928,20 @@ def materialize_pq_index(
     """Build + store the PQ index: ``<prefix>_codes`` (id, codes) and
     ``<prefix>_codebooks`` through the catalog. One map-only encode pass;
     after this, queries touch m bytes per candidate and the float corpus
-    only for re-rank pages."""
-    catalog.create_or_replace(
-        pq_encode(spark, corpus, id_col, vec_col, codebooks),
-        f"{prefix}_codes",
+    only for re-rank pages. Codes and codebooks land in one catalog
+    commit, so a reader never pairs codes with another build's
+    codebooks."""
+    codes, books = f"{prefix}_codes", f"{prefix}_codebooks"
+    catalog.stage(
+        {
+            codes: pq_encode(spark, corpus, id_col, vec_col, codebooks),
+            books: codebooks_to_df(spark, codebooks),
+        }
     )
-    catalog.create_or_replace(codebooks_to_df(spark, codebooks), f"{prefix}_codebooks")
-    # a rebuild retires any streamed delta generation: stale deltas were
+    # a rebuild drops any streamed delta generation: stale deltas were
     # encoded under the PREVIOUS codebooks and would override the fresh
     # base on merge-on-read, silently scoring garbage against new LUTs
-    catalog.drop_table(f"{prefix}_code_deltas")
+    catalog.commit(swap=[codes, books], drop=[f"{prefix}_code_deltas"])
 
 
 def upsert_pq_index(
@@ -959,7 +963,8 @@ def upsert_pq_index(
     ``<prefix>_code_deltas`` exist (stream_pq_upsert ran under this
     prefix), the merge base is the compacted merge-on-read view — not
     the raw codes table — and the folded delta partitions are RETIRED
-    after the swap (markers move to the retired ledger, lineage kept).
+    in the commit that swaps the new codes in (markers move to the
+    retired ledger, lineage kept).
     Without the fold, a batch upsert of an id previously touched by the
     stream would be silently shadowed by the stale delta on the next
     merge-on-read. A batch upsert therefore doubles as a compaction
@@ -979,19 +984,13 @@ def upsert_pq_index(
         existing = catalog.read_table(spark, f"{prefix}_codes")
     delta = pq_encode(spark, new_vectors, id_col, vec_col, books)
     merged = merge_upsert(existing, delta, [id_col])
-    # staging swap, NOT create_or_replace: the merged plan READS the
-    # codes table it replaces — an in-place overwrite deletes the files
-    # the write job is reading and a mid-write failure destroys the
-    # only copy of the index
-    catalog.replace_via_staging(merged, f"{prefix}_codes")
-    if streamed:
-        # folded into the base above — retire AFTER the swap: retiring
-        # first would, on a crash, leave a base missing its folded
-        # updates with the deltas gone (data loss). The crash window
-        # here (swapped but not yet retired) merely re-shadows
-        # batch-upserted ids with their pre-upsert stream values —
-        # re-running the same upsert repairs it (idempotent).
-        catalog.retire_partitions(delta_table, sorted(streamed))
+    # the merged plan READS the codes table it replaces, which the staged
+    # write leaves in place. The folded delta partitions retire in the
+    # commit that swaps the new codes in: a crash between the two is
+    # finished by the next roll-forward, never left as stale deltas
+    # shadowing the upserted ids
+    catalog.stage({f"{prefix}_codes": merged})
+    catalog.commit(swap=[f"{prefix}_codes"], retire={delta_table: sorted(streamed)})
 
 
 def topk_pq_adc_index(

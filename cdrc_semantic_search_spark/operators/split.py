@@ -117,8 +117,9 @@ def merge_upsert(target: DataFrame, updates: DataFrame, key_cols: list[str]) -> 
     Declarative shape: one full-outer join on the keys + per-column
     coalesce preferring the update side — the exact logical plan Iceberg/
     Delta MERGE compiles to before their file-level pruning; writing the
-    result through catalog.create_or_replace gives the copy-on-write
-    upsert (K1's vector-index upsert analog at table granularity).
+    result through catalog.create_or_replace (a staged write, then a
+    commit that swaps it in) gives the copy-on-write upsert (K1's
+    vector-index upsert analog at table granularity).
     Updates must be unique per key (enforce upstream); schemas must match.
     """
     if set(target.columns) != set(updates.columns):
@@ -326,8 +327,9 @@ def scd2_apply(
     the updates on the keys (closed rows never join), struct-packed
     value comparison, and a union — the logical plan Iceberg/Delta
     MERGE compiles to for the classic SCD2 WHEN MATCHED/NOT MATCHED
-    template; write through catalog.replace_via_staging for the
-    copy-on-write commit.
+    template; write through catalog.create_or_replace for the
+    copy-on-write commit (the staged write may read the history table
+    it replaces).
     """
     vt, vf = "valid_to", "valid_from"
     closed = history.filter(F.col(vt).isNotNull())

@@ -818,8 +818,9 @@ def ann_pq_index_roundtrip(spark, sf_dir):
     sample, q, c = _ann_fixture(spark, sf_dir)
     books = train_pq_codebooks(sample, m=8, k=16, seed=42)
     # pid-suffixed path: repeated harness evaluations in one process
-    # reuse it (create_or_replace overwrites), while CONCURRENT runs
-    # (pytest + check_entry) can't race on each other's swap windows
+    # reuse it (each build's commit replaces the last), while CONCURRENT
+    # runs (pytest + check_entry) never open each other's catalog — its
+    # recovery at open assumes a single writer
     root = os.path.join(
         tempfile.gettempdir(), f"pq_index_fixture_{os.getuid()}_{os.getpid()}"
     )

@@ -21,12 +21,11 @@ Plan-shape invariants (the 100-TB contract):
 
 from __future__ import annotations
 
+import json
 import logging
-from concurrent.futures import ThreadPoolExecutor
-from typing import Callable
+import os
 
 import pandas as pd
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,22 +40,14 @@ from cdrc_semantic_search_spark.sources.catalog import (
     ParquetTableCatalog,
     data_files,
     footer_rows,
+    read_parquet,
 )
 
 log = logging.getLogger(__name__)
 
-
-def _run_together(spark: SparkSession, *writes: Callable[[], None]) -> None:
-    """Run independent writes at the same time, one thread each, and
-    return once all have finished; the first failing write's exception
-    (in argument order) is re-raised. Each thread inherits the caller's
-    Spark local properties, so its jobs are filed under the caller's job
-    group. The writes' jobs share the scheduler, which fills the cores a
-    single small write leaves idle."""
-    with ThreadPoolExecutor(len(writes)) as pool:
-        done = [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]
-    for d in done:
-        d.result()
+#: files compact_graph keeps under the catalog root, next to the bases
+_GEN_MARKER = "_graph_generations.json"
+_CANON_PARAMS = "_canon_params.json"
 
 
 class KGPipeline:
@@ -473,31 +464,28 @@ class KGPipeline:
         analog: create-or-replace node/edge tables, the reference's
         src/datastore.py:80-95).
 
-        Two rounds of writes that run at the same time: ``triples`` and
-        ``mentions``; then, over the written bytes, ``kg_edges``,
-        ``kg_nodes`` and ``surface_clusters``. A failed write re-raises
-        once its round has finished. Returns per-table row counts, read
-        from the written footers."""
-        def write(df: DataFrame, name: str) -> Callable[[], None]:
-            return lambda: catalog.create_or_replace(df, name)
-
-        _run_together(
-            self.spark,
-            write(self.triples(transcripts), "triples"),
-            write(self.mentions(transcripts), "mentions"),
+        Two rounds of staged writes that run at the same time: ``triples``
+        and ``mentions``; then, over their staged bytes, ``kg_edges``,
+        ``kg_nodes`` and ``surface_clusters``. One catalog commit then
+        swaps all five in, so the catalog holds either the previous
+        graph or this one: a failed write re-raises once its round has
+        finished, and leaves every live table as it was. Returns
+        per-table row counts, read from the written footers."""
+        staged = catalog.stage(
+            {"triples": self.triples(transcripts), "mentions": self.mentions(transcripts)}
         )
-        tri_c = catalog.read_table(self.spark, "triples")
-        men_c = catalog.read_table(self.spark, "mentions")
-        _run_together(
-            self.spark,
-            write(self.kg_edges(tri_c), "kg_edges"),
-            write(self.kg_nodes(men_c), "kg_nodes"),
-            write(self.surface_clusters(men_c), "surface_clusters"),
+        tri_s = read_parquet(self.spark, staged["triples"])
+        men_s = read_parquet(self.spark, staged["mentions"])
+        catalog.stage(
+            {
+                "kg_edges": self.kg_edges(tri_s),
+                "kg_nodes": self.kg_nodes(men_s),
+                "surface_clusters": self.surface_clusters(men_s),
+            }
         )
-        return {
-            name: footer_rows(catalog.table_path(name))
-            for name in ["triples", "mentions", "kg_edges", "kg_nodes", "surface_clusters"]
-        }
+        tables = ["triples", "mentions", "kg_edges", "kg_nodes", "surface_clusters"]
+        catalog.commit(swap=tables)
+        return {name: footer_rows(catalog.table_path(name)) for name in tables}
 
     # ------------------------------------------------------------- resumable
     def run_partitioned(
@@ -684,8 +672,6 @@ class KGPipeline:
         with the same name written by materialize()/create_or_replace is
         a FULL rebuild, not a generational base — merging it with deltas
         that cover the same data would double every count."""
-        import os
-
         if not os.path.exists(KGPipeline._gen_marker_path(catalog)):
             return None
         if data_files(catalog.table_path(name)):
@@ -755,21 +741,11 @@ class KGPipeline:
 
     @staticmethod
     def _gen_marker_path(catalog: ParquetTableCatalog) -> str:
-        import os
-
-        return os.path.join(catalog.root, "_graph_generations.json")
-
-    @staticmethod
-    def _record_path(catalog: ParquetTableCatalog) -> str:
-        import os
-
-        return os.path.join(catalog.root, "_compaction.json")
+        return os.path.join(catalog.root, _GEN_MARKER)
 
     @staticmethod
     def _canon_params_path(catalog: ParquetTableCatalog) -> str:
-        import os
-
-        return os.path.join(catalog.root, "_canon_params.json")
+        return os.path.join(catalog.root, _CANON_PARAMS)
 
     def _canon_fingerprint(self) -> dict:
         """The parameters surface clustering is a deterministic function
@@ -793,113 +769,59 @@ class KGPipeline:
         into base tables and RETIRE the folded deltas, opening the next
         generation — the Iceberg rewrite+snapshot-expire lifecycle.
 
-        Protocol (single compactor at a time; roll-forward on crash):
-        1. materialize all three merged views into ``.staging`` dirs
-           (readers may merge an EXISTING base, so the write must not
-           replace a table it is reading — staged swap); the three
-           writes run at the same time;
-        2. once all three staged writes have finished, atomically record
-           ``_compaction.json`` naming the delta partitions being
-           folded — the compaction commit point (a failed staged write
-           re-raises before it: bases and ledger stay as they were);
-        3. swap staging → final, then retire the folded partitions
-           (marker moves to the retired ledger; data deleted), bump the
-           generation marker, remove the record.
-        A crash before (2) changes nothing (stale staging is rewritten
-        next time); after (2) the NEXT compact_graph or compacted read
-        rolls FORWARD — swaps are skip-if-done and retire is idempotent.
-        Between (2) and the cleanup, compacted reads RAISE (the record's
-        presence gates them) instead of serving a half-compacted state.
+        The merged views are staged at the same time (readers may merge
+        an EXISTING base, so a write must not replace a table it is
+        reading), then ONE catalog commit swaps the three bases in,
+        retires the folded delta partitions (marker moves to the retired
+        ledger; data deleted), and writes the next generation number and
+        the clustering fingerprint, both fixed in the commit record. A
+        failed staged write re-raises before the commit: bases and
+        ledger stay as they were. A crash after the commit record is
+        rolled forward by the next catalog open or commit; until then,
+        compacted reads RAISE instead of serving a half-compacted state.
         No-op when there are no live deltas and a base generation already
         exists.  Returns per-table row counts, read from the base
         tables' footers."""
-        import json
-        import os
-
-        record_path = self._record_path(catalog)
-        if os.path.exists(record_path):
-            self._finish_compaction(catalog, record_path)
-
+        catalog.roll_forward()
+        gen_path = self._gen_marker_path(catalog)
         folded = {t: sorted(catalog.committed_partitions(t)) for t in self.DELTA_TABLES}
-        if not any(folded.values()) and os.path.exists(self._gen_marker_path(catalog)):
+        if not any(folded.values()) and os.path.exists(gen_path):
             # nothing to fold — skip three full-table rewrite jobs
             return {n: footer_rows(catalog.table_path(n)) for n in self.BASE_TABLES}
-        frames = {
-            "kg_edges": self.compacted_edges(self.spark, catalog),
-            "kg_nodes": self.compacted_nodes(catalog),
-            "surface_clusters": self.compacted_surface_clusters(catalog),
-        }
-
-        def stage(df: DataFrame, name: str) -> Callable[[], None]:
-            path = catalog.table_path(name) + ".staging"
-            return lambda: df.write.mode("overwrite").parquet(path)
-
-        _run_together(self.spark, *(stage(df, n) for n, df in frames.items()))
-        tmp = record_path + ".tmp"
-        with open(tmp, "w") as f:
-            # the fingerprint travels IN the commit record: whoever rolls
-            # this compaction forward (possibly a different process with
-            # different settings) must stamp the base with the parameters
-            # that actually produced the staged frames
-            json.dump(
-                {"retire": folded, "canon_params": self._canon_fingerprint()},
-                f,
-            )
-        os.replace(tmp, record_path)  # the compaction commit point
-        self._finish_compaction(catalog, record_path)
-        return {n: footer_rows(catalog.table_path(n)) for n in self.BASE_TABLES}
-
-    @classmethod
-    def _finish_compaction(cls, catalog: ParquetTableCatalog, record_path: str) -> None:
-        """Roll a recorded compaction forward: swap any staged bases, then
-        retire the named delta partitions, bump the generation marker,
-        drop the record.  Swap-before-retire means the folded data is
-        never absent from BOTH places; the reader gate (the record's
-        existence) covers the double-present window in between."""
-        import json
-        import os
-        import shutil
-
-        with open(record_path) as f:
-            record = json.load(f)
-        folded = record["retire"]
-        for name in cls.BASE_TABLES:
-            staging = catalog.table_path(name) + ".staging"
-            if os.path.isdir(staging):
-                final = catalog.table_path(name)
-                shutil.rmtree(final, ignore_errors=True)
-                os.rename(staging, final)
-        for t, parts in folded.items():
-            catalog.retire_partitions(t, parts)
-        params = record.get("canon_params")
-        if params is not None:
-            ptmp = cls._canon_params_path(catalog) + ".tmp"
-            with open(ptmp, "w") as f:
-                json.dump(params, f)
-            os.replace(ptmp, cls._canon_params_path(catalog))
-        gen_path = cls._gen_marker_path(catalog)
-        gen = 0
+        catalog.stage(
+            {
+                "kg_edges": self.compacted_edges(self.spark, catalog),
+                "kg_nodes": self.compacted_nodes(catalog),
+                "surface_clusters": self.compacted_surface_clusters(catalog),
+            }
+        )
+        generation = 0
         if os.path.exists(gen_path):
             with open(gen_path) as f:
-                gen = json.load(f).get("generation", 0)
-        tmp = gen_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"generation": gen + 1}, f)
-        os.replace(tmp, gen_path)
-        os.remove(record_path)
+                generation = json.load(f).get("generation", 0)
+        catalog.commit(
+            swap=self.BASE_TABLES,
+            retire=folded,
+            files={
+                _GEN_MARKER: {"generation": generation + 1},
+                # the fingerprint of the settings that produced the staged
+                # bases, whoever rolls the commit forward
+                _CANON_PARAMS: self._canon_fingerprint(),
+            },
+        )
+        return {n: footer_rows(catalog.table_path(n)) for n in self.BASE_TABLES}
 
-    @classmethod
-    def _check_readable(cls, catalog: ParquetTableCatalog) -> None:
-        """Compacted reads are gated on no compaction being in flight:
-        between the compaction commit point and its cleanup, deltas and
-        bases can double-represent the folded generation."""
-        import os
-
-        if os.path.exists(cls._record_path(catalog)):
+    @staticmethod
+    def _check_readable(catalog: ParquetTableCatalog) -> None:
+        """Compacted reads are gated on no catalog commit being pending:
+        between a compaction's commit record and its roll-forward, deltas
+        and bases can double-represent the folded generation."""
+        if os.path.exists(catalog.record_path):
             raise RuntimeError(
-                "a graph compaction is in flight (or crashed mid-way) on "
-                f"{catalog.root}; call compact_graph to roll it forward "
-                "before reading the compacted graph"
+                "a catalog commit is pending (in flight, or crashed mid-way) "
+                f"on {catalog.root}; open the catalog again or call "
+                "compact_graph to roll it forward before reading the "
+                "compacted graph"
             )
 
     def compacted_surface_clusters(self, catalog: ParquetTableCatalog) -> DataFrame:
@@ -944,9 +866,6 @@ class KGPipeline:
         # clustering parameters; on mismatch (or a legacy base with no
         # stamp) fall back to the full path — always exact, since
         # `distinct` already unions the base's surfaces
-        import json
-        import os
-
         stored = None
         params_path = self._canon_params_path(catalog)
         if os.path.exists(params_path):

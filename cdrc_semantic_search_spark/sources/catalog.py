@@ -23,6 +23,27 @@ every parquet footer, and the footer holds the row count. Reads take the
 schema from the first data file's footer (no schema-inference job), and
 commits count rows from the footers of the files just written (no
 read-back job).
+
+Whole-table replaces follow one protocol, the analog of an Iceberg
+commit that replaces several tables at once:
+
+1. **stage** (:meth:`ParquetTableCatalog.stage`) writes each new table to
+   ``<name>.staging``, all at the same time; live tables are untouched,
+   so a plan may read the table it replaces, and a failed write leaves
+   the catalog as it was;
+2. **commit** (:meth:`ParquetTableCatalog.commit`) atomically writes one
+   roll-forward record, ``<root>/_commit.json``, naming the staged
+   tables to swap in, the ledger partitions to retire, the tables to
+   drop and the small JSON files to write. The record is the commit
+   point;
+3. **roll forward** (:meth:`ParquetTableCatalog.roll_forward`) carries
+   the record out and removes it. Every step is idempotent, so a crash
+   anywhere in it is finished by the next roll-forward, which runs at
+   catalog open and before the next stage or commit. At open, staged
+   tables no record names are dropped: their commit never happened.
+
+Single-writer, like the rest of this file-based catalog: recovery at
+open must not race another writer's commit in flight.
 """
 
 from __future__ import annotations
@@ -32,10 +53,13 @@ import os
 import shutil
 import time
 import logging
+from collections.abc import Sequence
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, fields
 from typing import Any
 
 import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -43,6 +67,8 @@ log = logging.getLogger("cdrc_semantic_search_spark")
 
 #: footer key under which Spark's parquet writer stores the frame's schema
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+#: suffix of a table's staged copy, next to the live table
+_STAGING = ".staging"
 
 
 def data_files(path: str) -> list[str]:
@@ -80,6 +106,13 @@ def footer_rows(path: str) -> int:
     """Rows in the data files directly under ``path``, summed from their
     footers (exact: parquet records each row group's count)."""
     return sum(pq.read_metadata(f).num_rows for f in data_files(path))
+
+
+def _write_json(path: str, content: Any) -> None:
+    """Write ``path`` atomically: a reader sees the old file or the new."""
+    with open(path + ".tmp", "w") as f:
+        json.dump(content, f)
+    os.replace(path + ".tmp", path)
 
 
 @dataclass
@@ -122,60 +155,29 @@ def _record_from_json(rec: dict) -> CommitRecord:
 class ParquetTableCatalog:
     def __init__(self, root: str):
         self.root = root
+        #: the roll-forward record of the commit in flight, if any
+        self.record_path = os.path.join(root, "_commit.json")
         os.makedirs(root, exist_ok=True)
-        self._recover_interrupted_swaps()
         # retirement markers are immutable once written, so parsed records
         # are cached per table keyed by the filename set; only files not
         # yet seen are opened (retired_partitions sits on the per-commit
         # hot path — without this, G generations × P partitions means G·P
         # file opens + JSON parses on EVERY overwrite_partition call)
         self._retired_cache: dict[str, dict[str, tuple]] = {}
-
-    def _recover_interrupted_swaps(self) -> None:
-        """Roll back any ``replace_via_staging`` swap that crashed between
-        its two renames.  The crash window leaves ``<name>__old`` (the
-        last good table) next to a MISSING ``<name>``; rolling the old
-        directory back restores the pre-replace state automatically at
-        catalog open instead of requiring hand recovery.  If ``<name>``
-        EXISTS alongside ``__old``, the swap completed and only the
-        cleanup rmtree was lost — drop the leftover.  Orphaned
-        ``__staging`` dirs (crash during the staging write) are always
-        safe to drop: the live table was never touched."""
-        try:
-            entries = os.listdir(self.root)
-        except FileNotFoundError:
-            return
-        for e in entries:
-            p = os.path.join(self.root, e)
-            if not os.path.isdir(p):
-                continue
-            if e.endswith("__old"):
-                name = e[: -len("__old")]
-                dst = os.path.join(self.root, name)
-                if os.path.exists(dst):
-                    # swap completed but the post-rename cleanup was lost:
-                    # finish ALL of replace_via_staging's postconditions,
-                    # not just the __old rmtree — the stale ledger/history
-                    # still describe the REPLACED bytes, and resume logic
-                    # would treat those partitions as committed against
-                    # the new table
-                    shutil.rmtree(p, ignore_errors=True)
-                    shutil.rmtree(self._ledger_dir(name), ignore_errors=True)
-                    shutil.rmtree(self._history_dir(name), ignore_errors=True)
-                    log.info("catalog recovery: dropped completed-swap leftover %s", e)
-                else:
-                    os.rename(p, dst)
-                    log.warning(
-                        "catalog recovery: rolled back interrupted swap %s -> %s",
-                        e, os.path.basename(dst),
-                    )
-            elif e.endswith("__staging"):
-                shutil.rmtree(p, ignore_errors=True)
-                log.info("catalog recovery: dropped orphaned staging dir %s", e)
+        if os.path.exists(self.record_path):
+            log.warning("catalog recovery: rolling forward the pending commit in %s", root)
+        self.roll_forward()
+        for e in os.listdir(root):
+            if e.endswith(_STAGING):
+                shutil.rmtree(os.path.join(root, e), ignore_errors=True)
+                log.info("catalog recovery: dropped uncommitted staged table %s", e)
 
     # ---- paths -----------------------------------------------------------
     def table_path(self, name: str) -> str:
         return os.path.join(self.root, name)
+
+    def _staging_path(self, name: str) -> str:
+        return self.table_path(name) + _STAGING
 
     def _partition_path(self, name: str, partition: str) -> str:
         return os.path.join(self.table_path(name), f"part={partition}")
@@ -196,9 +198,86 @@ class ParquetTableCatalog:
     def create_or_replace(self, df: DataFrame, name: str) -> None:
         """K2 analog: full-table replace (reference `overwrite=true`,
         /root/reference/src/datastore.py:88-95)."""
-        df.write.mode("overwrite").parquet(self.table_path(name))
-        shutil.rmtree(self._ledger_dir(name), ignore_errors=True)
-        shutil.rmtree(self._history_dir(name), ignore_errors=True)
+        # the one-table case of stage + commit
+        self.stage({name: df})
+        self.commit(swap=[name])
+
+    def stage(self, frames: dict[str, DataFrame]) -> dict[str, str]:
+        """Write each frame to its table's staged copy, one thread each,
+        all at the same time, and return the staged copies' paths (a
+        later stage may read them). Once all writes have finished,
+        the first failing write's exception (in ``frames`` order) is
+        re-raised; the live tables are untouched either way. Each thread
+        inherits the caller's Spark local properties, so its jobs are
+        filed under the caller's job group; the writes share the
+        scheduler, which fills the cores a single small write leaves
+        idle."""
+        self.roll_forward()
+        spark = next(iter(frames.values())).sparkSession
+        with ThreadPoolExecutor(len(frames)) as pool:
+            done = [
+                pool.submit(
+                    inheritable_thread_target(spark)(df.write.mode("overwrite").parquet),
+                    self._staging_path(name),
+                )
+                for name, df in frames.items()
+            ]
+        for d in done:
+            d.result()
+        return {name: self._staging_path(name) for name in frames}
+
+    def commit(
+        self,
+        swap: Sequence[str] = (),
+        retire: dict[str, list[str]] | None = None,
+        drop: Sequence[str] = (),
+        files: dict[str, Any] | None = None,
+    ) -> None:
+        """Commit staged tables and their companion changes as one unit:
+        write the roll-forward record (the commit point), then roll it
+        forward. ``swap``: staged tables that replace the live ones (the
+        replaced tables' ledgers go with them); ``retire``: table →
+        ledger partitions to retire; ``drop``: tables to drop;
+        ``files``: file name under the root → JSON content to write."""
+        self.roll_forward()
+        missing = [n for n in swap if not os.path.isdir(self._staging_path(n))]
+        if missing:
+            raise FileNotFoundError(f"no staged copy of {missing} in {self.root}")
+        record = {
+            "swap": list(swap),
+            "retire": retire or {},
+            "drop": list(drop),
+            "files": files or {},
+        }
+        _write_json(self.record_path, record)
+        self.roll_forward()
+
+    def roll_forward(self) -> None:
+        """Carry out the pending commit record, if any, then remove it.
+        Each step is idempotent, so a crash part-way is finished by the
+        next call: a swap whose staged copy is gone already happened;
+        retiring a retired partition, dropping a dropped table and
+        writing a written file change nothing."""
+        try:
+            with open(self.record_path) as f:
+                record = json.load(f)
+        except FileNotFoundError:
+            return
+        for name in record["swap"]:
+            staged = self._staging_path(name)
+            if os.path.isdir(staged):
+                shutil.rmtree(self.table_path(name), ignore_errors=True)
+                os.rename(staged, self.table_path(name))
+            # the ledger described the replaced bytes
+            shutil.rmtree(self._ledger_dir(name), ignore_errors=True)
+            shutil.rmtree(self._history_dir(name), ignore_errors=True)
+        for name, parts in record["retire"].items():
+            self.retire_partitions(name, parts)
+        for name in record["drop"]:
+            self.drop_table(name)
+        for fname, content in record["files"].items():
+            _write_json(os.path.join(self.root, fname), content)
+        os.remove(self.record_path)
 
     def drop_table(self, name: str) -> None:
         """Remove a table's data, ledger, and retirement marks entirely
@@ -208,32 +287,6 @@ class ParquetTableCatalog:
         shutil.rmtree(self.table_path(name), ignore_errors=True)
         shutil.rmtree(self._ledger_dir(name), ignore_errors=True)
         shutil.rmtree(self._retired_dir(name), ignore_errors=True)
-        shutil.rmtree(self._history_dir(name), ignore_errors=True)
-
-    def replace_via_staging(self, df: DataFrame, name: str) -> None:
-        """Full-table replace SAFE for a plan that reads the table it
-        replaces (e.g. merge-upsert of a table into itself):
-        ``create_or_replace`` would delete the directory the plan is
-        still reading — Spark fails with FAILED_READ_FILE mid-write and
-        the only copy is gone. Here the plan materializes into a staging
-        dir first, then swaps in by rename. A crash between the two
-        renames leaves ``<name>__old`` intact next to a missing table —
-        rolled back automatically by :meth:`_recover_interrupted_swaps`
-        at the next catalog open (single-writer assumption, same as the
-        rest of this file-based catalog: recovery at open must not race
-        a concurrent in-flight swap by another writer).
-        """
-        staging = self.table_path(f"{name}__staging")
-        shutil.rmtree(staging, ignore_errors=True)
-        df.write.mode("overwrite").parquet(staging)
-        dst = self.table_path(name)
-        old = dst + "__old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        os.rename(staging, dst)
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(self._ledger_dir(name), ignore_errors=True)
         shutil.rmtree(self._history_dir(name), ignore_errors=True)
 
     def retire_partitions(self, name: str, partitions: list[str]) -> None:
@@ -267,9 +320,7 @@ class ParquetTableCatalog:
                     self._retired_dir(name),
                     f"{p}.{rec.get('committed_at', retired_at):.6f}.json",
                 )
-                with open(dst + ".tmp", "w") as f:
-                    json.dump(rec, f)
-                os.replace(dst + ".tmp", dst)
+                _write_json(dst, rec)
                 os.remove(marker)
             # delete data even if the marker already moved (a crash between
             # the move and this delete must not orphan the bytes forever)
@@ -333,13 +384,8 @@ class ParquetTableCatalog:
                 self._history_dir(name),
                 f"{partition}.{prev['committed_at']:.6f}.json",
             )
-            with open(hist + ".tmp", "w") as f:
-                json.dump(prev, f)
-            os.replace(hist + ".tmp", hist)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(rec.__dict__, f)
-        os.replace(tmp, marker)  # atomic commit
+            _write_json(hist, prev)
+        _write_json(marker, rec.__dict__)  # atomic commit
         return rec
 
     # ---- reads -----------------------------------------------------------

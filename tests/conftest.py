@@ -3,12 +3,14 @@ from __future__ import annotations
 import contextlib
 import io
 import itertools
+import os
 import time
 
 import pytest
 
 from cdrc_semantic_search_spark import fixtures
 from cdrc_semantic_search_spark.session import get_spark
+from cdrc_semantic_search_spark.sources.catalog import ParquetTableCatalog
 
 
 @pytest.fixture(scope="session")
@@ -80,3 +82,23 @@ def jobs_of(spark):
         return sorted(tracker.getJobIdsForGroup(group)), list(range(first, last))
 
     return run
+
+
+@pytest.fixture
+def crash_after_commit_record(monkeypatch):
+    """Inside ``with crash_after_commit_record():`` a catalog commit stops
+    right after its roll-forward record is written, as if the process
+    died there: the record stays pending and no table is swapped. The
+    commit raises ``RuntimeError("crashed after the commit record")``."""
+
+    def crash(catalog):
+        if os.path.exists(catalog.record_path):
+            raise RuntimeError("crashed after the commit record")
+
+    @contextlib.contextmanager
+    def crashing():
+        with monkeypatch.context() as m:
+            m.setattr(ParquetTableCatalog, "roll_forward", crash)
+            yield
+
+    return crashing

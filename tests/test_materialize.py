@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -240,10 +242,16 @@ def test_footer_read_falls_back_to_spark_inference(spark, tmp_path, jobs_of):
 def test_materialize_write_failure_reaches_caller(
     spark, fixture, spark_fixture, tmp_path, monkeypatch
 ):
-    """One of the concurrent graph writes fails: materialize re-raises
-    its error once the other writes of the round have finished."""
+    """One of the concurrent graph writes fails on a catalog that holds a
+    previous run: materialize re-raises its error once the other writes
+    of the round have finished in their staged copies, nothing is
+    committed, and all five tables of the previous run stay readable and
+    unchanged."""
     tdf, _ = spark_fixture
     pipe = KGPipeline(spark, fixture.entities, Settings())
+    cat = ParquetTableCatalog(str(tmp_path / "kg"))
+    pipe.materialize(tdf, cat)
+    before = {n: _rows(cat.read_table(spark, n)) for n in GRAPH_TABLES}
 
     def boom(_):
         raise RuntimeError("kg_nodes write failed on purpose")
@@ -252,9 +260,38 @@ def test_materialize_write_failure_reaches_caller(
         return mentions.select(F.udf(boom, "long")("entity_id").alias("n"))
 
     monkeypatch.setattr(KGPipeline, "kg_nodes", failing_nodes)
-    cat = ParquetTableCatalog(str(tmp_path / "kg"))
     with pytest.raises(Exception, match="kg_nodes write failed on purpose"):
         pipe.materialize(tdf, cat)
-    # the round's other writes ran to the end
+    # the round's other writes ran to the end, in their staged copies
     for name in ("kg_edges", "surface_clusters"):
-        assert footer_rows(cat.table_path(name)) > 0
+        assert footer_rows(cat.table_path(name) + ".staging") > 0
+    assert not os.path.exists(cat.record_path)
+    assert {n: _rows(cat.read_table(spark, n)) for n in GRAPH_TABLES} == before
+
+
+def test_materialize_crash_after_commit_record_rolls_forward_at_open(
+    spark, fixture, spark_fixture, tmp_path, crash_after_commit_record
+):
+    """A crash between materialize's commit record and its swap leaves
+    the record pending: compacted reads raise in the same process, and
+    the next catalog open rolls the commit forward to the graph an
+    uninterrupted run writes."""
+    tdf, _ = spark_fixture
+    pipe = KGPipeline(spark, fixture.entities, Settings())
+    ref = ParquetTableCatalog(str(tmp_path / "ref"))
+    pipe.materialize(tdf, ref)
+    root = str(tmp_path / "kg")
+    cat = ParquetTableCatalog(root)
+    with crash_after_commit_record():
+        with pytest.raises(RuntimeError, match="crashed after the commit record"):
+            pipe.materialize(tdf, cat)
+    assert os.path.exists(cat.record_path)
+    assert not any(os.path.exists(cat.table_path(n)) for n in GRAPH_TABLES)
+    with pytest.raises(RuntimeError, match="commit is pending"):
+        KGPipeline.compacted_edges(spark, cat)
+
+    reopened = ParquetTableCatalog(root)
+    assert not os.path.exists(reopened.record_path)
+    assert not [e for e in os.listdir(root) if e.endswith(".staging")]
+    for name in GRAPH_TABLES:
+        assert _rows(reopened.read_table(spark, name)) == _rows(ref.read_table(spark, name))

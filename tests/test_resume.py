@@ -2,8 +2,15 @@
 
 from __future__ import annotations
 
+import json
+import os
+import pathlib
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
+import cdrc_semantic_search_spark
 from cdrc_semantic_search_spark.config import PipelineSettings, Settings
 from cdrc_semantic_search_spark.plans.kg_pipeline import KGPipeline
 from cdrc_semantic_search_spark.sources.catalog import ParquetTableCatalog
@@ -354,54 +361,193 @@ def test_malformed_retirement_marker_degrades_not_blocks(spark, tmp_path):
     assert rec.row_count == 2
 
 
-def test_interrupted_staging_swap_rolls_back_at_open(spark, tmp_path):
-    """replace_via_staging crash windows: (a) crash BETWEEN the two
-    renames leaves <name>__old + missing table — the next catalog open
-    must roll the old data back; (b) crash AFTER the second rename but
-    before cleanup leaves a completed swap + stale __old — open must
-    drop the leftover, never clobber the new table; (c) crash during
-    the staging write leaves an orphan __staging — dropped at open."""
-    import os as _os
-    import shutil as _shutil
-
+def test_interrupted_staging_swap_rolls_back_at_open(
+    spark, tmp_path, crash_after_commit_record
+):
+    """Recovery at catalog open, one crash window each: (a) a crash
+    mid-swap (live table removed, staged copy not yet renamed in) rolls
+    the commit forward to the new table; (b) a crash after the swap but
+    before the replaced table's ledger was dropped rolls forward to no
+    stale ledger; (c) a staged copy no record names (a crash before the
+    commit record) is dropped, and the live table is untouched."""
     root = str(tmp_path / "swapcat")
     cat = ParquetTableCatalog(root)
-    spark.range(5).selectExpr("id").write.parquet(cat.table_path("t"))
+    live, staged = cat.table_path("t"), cat.table_path("t") + ".staging"
+    cat.create_or_replace(spark.range(5).selectExpr("id"), "t")
 
-    # (a) mid-swap crash: table renamed away, staging never moved in
-    _os.rename(cat.table_path("t"), cat.table_path("t") + "__old")
-    cat2 = ParquetTableCatalog(root)
-    assert _os.path.exists(cat2.table_path("t"))
-    assert not _os.path.exists(cat2.table_path("t") + "__old")
-    assert spark.read.parquet(cat2.table_path("t")).count() == 5
+    def stale_marker():
+        os.makedirs(cat._ledger_dir("t"), exist_ok=True)
+        with open(cat._marker_path("t", "stale"), "w") as f:
+            json.dump(
+                {"table": "t", "partition": "stale", "source_snapshot": "s",
+                 "row_count": 1, "metrics": {}, "committed_at": 1.0,
+                 "status": "committed"},
+                f,
+            )
 
-    # (b) post-swap crash: new table live, stale __old AND stale ledger
-    # left behind — recovery must finish ALL of replace_via_staging's
-    # postconditions (the stale markers describe the replaced bytes)
-    import json as _json
+    def pending_replace(n):
+        with crash_after_commit_record():
+            with pytest.raises(RuntimeError, match="crashed after the commit record"):
+                cat.create_or_replace(spark.range(n).selectExpr("id"), "t")
+        assert os.path.exists(cat.record_path)
 
-    spark.range(2).selectExpr("id").write.parquet(cat.table_path("t__old"))
-    _os.makedirs(cat._ledger_dir("t"), exist_ok=True)
-    with open(cat._marker_path("t", "stale"), "w") as f:
-        _json.dump(
-            {"table": "t", "partition": "stale", "source_snapshot": "s",
-             "row_count": 1, "metrics": {}, "committed_at": 1.0,
-             "status": "committed"},
-            f,
+    def recovered(rows):
+        reopened = ParquetTableCatalog(root)
+        assert not os.path.exists(reopened.record_path)
+        assert not os.path.exists(staged)
+        assert reopened.committed_partitions("t") == set()
+        assert reopened.read_table(spark, "t").count() == rows
+
+    # (a) mid-swap crash: the live table is gone, the staged copy not in
+    stale_marker()
+    pending_replace(9)
+    shutil.rmtree(live)
+    recovered(9)
+
+    # (b) post-swap crash: new table live, stale ledger left behind
+    pending_replace(7)
+    shutil.rmtree(live)
+    shutil.move(staged, live)
+    stale_marker()
+    recovered(7)
+
+    # (c) orphaned staged copy from a crashed write, no record
+    spark.range(3).selectExpr("id").write.parquet(staged)
+    recovered(7)
+
+    # and a normal replace still round-trips
+    cat.create_or_replace(spark.range(4).selectExpr("id"), "t")
+    assert cat.read_table(spark, "t").count() == 4
+    assert not os.path.exists(cat.record_path)
+
+
+def _tree(root: str) -> dict:
+    """Every file under ``root``: JSON files by content, others by size."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(d, f)
+            if f.endswith(".json"):
+                with open(path) as fh:
+                    out[os.path.relpath(path, root)] = json.load(fh)
+            else:
+                out[os.path.relpath(path, root)] = os.path.getsize(path)
+    return out
+
+
+def test_compaction_roll_forward_is_idempotent(
+    spark, fixture, spark_fixture, tmp_path, crash_after_commit_record
+):
+    """A compaction's commit record fixes the next generation number and
+    the clustering fingerprint, so rolling the same record forward twice
+    leaves the same catalog: tables, ledgers and every marker file.
+    Compacted reads raise while the record is pending."""
+    tdf, _ = spark_fixture
+    pipe = KGPipeline(spark, fixture.entities, _settings(2))
+    cat = ParquetTableCatalog(str(tmp_path / "idem"))
+    pipe.run_partitioned(tdf, cat, with_graph=True)
+    with crash_after_commit_record():
+        with pytest.raises(RuntimeError, match="crashed after the commit record"):
+            pipe.compact_graph(cat)
+    with pytest.raises(RuntimeError, match="commit is pending"):
+        KGPipeline.compacted_edges(spark, cat)
+
+    with open(cat.record_path) as f:
+        record = f.read()
+    cat.roll_forward()
+    once = _tree(cat.root)
+    with open(cat.record_path, "w") as f:
+        f.write(record)
+    cat.roll_forward()
+    assert _tree(cat.root) == once
+
+    with open(KGPipeline._gen_marker_path(cat)) as f:
+        assert json.load(f) == {"generation": 1}
+    with open(KGPipeline._canon_params_path(cat)) as f:
+        assert json.load(f) == pipe._canon_fingerprint()
+    for t in KGPipeline.DELTA_TABLES:
+        assert cat.committed_partitions(t) == set()
+        assert cat.retired_partitions(t) == {"0", "1"}
+    key = ["subj_entity_id", "pred", "obj_entity_id", "weight"]
+    got = KGPipeline.compacted_edges(spark, cat).select(*key)
+    want = pipe.kg_edges(pipe.triples(tdf)).select(*key)
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_pq_upsert_crash_after_commit_record_rolls_forward_at_open(
+    spark, tmp_path, crash_after_commit_record
+):
+    """upsert_pq_index over streamed code deltas commits the new codes and
+    the retirement of the folded deltas in one record. A crash right
+    after the record leaves both undone; the next catalog open rolls
+    forward to what an uninterrupted upsert leaves, retired partitions
+    included."""
+    import numpy as np
+    import pandas as pd
+
+    from cdrc_semantic_search_spark.operators.similarity import (
+        materialize_pq_index,
+        train_pq_codebooks,
+        upsert_pq_index,
+    )
+    from cdrc_semantic_search_spark.streaming.incremental import stream_pq_upsert
+
+    rng = np.random.default_rng(29)
+    pts = rng.standard_normal((24, 16)).astype(np.float32)
+    books = train_pq_codebooks(pts[:20], m=4, k=8, seed=5)
+
+    def vectors(ids):
+        return spark.createDataFrame(
+            pd.DataFrame({"c_id": ids, "c_vec": [list(map(float, pts[i])) for i in ids]})
         )
-    cat3 = ParquetTableCatalog(root)
-    assert not _os.path.exists(cat3.table_path("t") + "__old")
-    assert spark.read.parquet(cat3.table_path("t")).count() == 5  # kept the LIVE one
-    assert cat3.committed_partitions("t") == set()
 
-    # (c) orphaned staging dir from a crashed write
-    spark.range(3).selectExpr("id").write.parquet(cat.table_path("t__staging"))
-    cat4 = ParquetTableCatalog(root)
-    assert not _os.path.exists(cat4.table_path("t") + "__staging")
-    assert spark.read.parquet(cat4.table_path("t")).count() == 5
+    root, ref_root = str(tmp_path / "pq"), str(tmp_path / "pq_ref")
+    cat = ParquetTableCatalog(root)
+    materialize_pq_index(spark, cat, vectors(range(20)), books)
+    stream_dir = tmp_path / "in"
+    stream_dir.mkdir()
+    pd.DataFrame(
+        {"vec_id": [0, 20], "embedding": [list(map(float, pts[i])) for i in (21, 22)]}
+    ).to_parquet(stream_dir / "w.parquet")
+    stream_pq_upsert(spark, str(stream_dir), cat, str(tmp_path / "ck"))
+    deltas = "pq_index_code_deltas"
+    streamed = cat.committed_partitions(deltas)
+    assert streamed
+    shutil.copytree(root, ref_root)
 
-    # and a normal replace_via_staging still round-trips
-    new = spark.range(9).selectExpr("id")
-    cat4.replace_via_staging(new, "t")
-    assert spark.read.parquet(cat4.table_path("t")).count() == 9
-    _shutil.rmtree(root)
+    updates = vectors([1, 20, 23])
+    with crash_after_commit_record():
+        with pytest.raises(RuntimeError, match="crashed after the commit record"):
+            upsert_pq_index(spark, cat, updates)
+    assert os.path.exists(cat.record_path)
+    assert cat.committed_partitions(deltas) == streamed
+
+    ref = ParquetTableCatalog(ref_root)
+    upsert_pq_index(spark, ref, updates)
+    reopened = ParquetTableCatalog(root)
+    assert not os.path.exists(reopened.record_path)
+    for c in (reopened, ref):
+        assert c.committed_partitions(deltas) == set()
+        assert c.retired_partitions(deltas) == streamed
+
+    def codes(c):
+        return sorted(
+            (r.c_id, tuple(r.codes)) for r in c.read_table(spark, "pq_index_codes").collect()
+        )
+
+    assert codes(reopened) == codes(ref)
+    assert len(codes(ref)) == 22
+
+
+def test_replace_protocol_has_one_home():
+    """Table renames, staged copies and the commit record belong to the
+    catalog alone: a second replace path elsewhere in the package would
+    escape its recovery at open."""
+    pkg = pathlib.Path(cdrc_semantic_search_spark.__file__).parent
+    marks = ("os.rename", ".staging", "_commit.json")
+    found = {}
+    for path in sorted(pkg.rglob("*.py")):
+        hits = [m for m in marks if m in path.read_text()]
+        if hits:
+            found[path.relative_to(pkg).as_posix()] = hits
+    assert found == {"sources/catalog.py": list(marks)}

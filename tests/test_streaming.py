@@ -309,7 +309,7 @@ def test_failed_compaction_write_leaves_catalog_unchanged(
         m.setattr(KGPipeline, "compacted_nodes", failing_nodes)
         with pytest.raises(Exception, match="staged kg_nodes write failed on purpose"):
             pipe.compact_graph(cat)
-    assert not os.path.exists(KGPipeline._record_path(cat))
+    assert not os.path.exists(cat.record_path)
     assert state() == before
 
     in_group, started = jobs_of(lambda: pipe.compact_graph(cat))
