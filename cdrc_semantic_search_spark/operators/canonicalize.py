@@ -10,17 +10,20 @@ member as canonical id.
 Both kernels run in a fixed number of Spark jobs, whatever the graph's
 diameter (contract-then-finish, Kiveris et al., SoCC 2014):
 
-* :func:`similarity_forest` — one exchange on the LSH ``(band, bucket)``
-  tags, then one ``mapInArrow`` pass that scores every bucket's pairs
-  with a vectorized left-fold cosine and unions the pairs ≥ τ in a
+* :func:`similarity_forest` — one Arrow pass embeds each batch and tags
+  every row with its LSH ``(band, bucket)``, one exchange co-locates the
+  buckets, then one Arrow pass scores every bucket's pairs with a
+  vectorized left-fold cosine and unions the pairs ≥ τ in a
   per-partition union-find. Each partition emits a spanning forest of
-  its τ-graph (≤ |V_p|−1 edges), never the pair list.
-* :func:`connected_components` — a map-only per-partition union-find
-  contracts each edge partition to a star forest, then ONE task unions
-  all the forests with the minimum id as every root. On a similarity
-  forest that task holds at most P·(|V|−1) forest edges, P the number
-  of input partitions; on raw edges, at most one row per (partition,
-  vertex).
+  its τ-graph (≤ |V_p|−1 edges), never the pair list. Rows that carry a
+  prior label (their converged cluster) enter as one vertex per old
+  cluster, and only pairs touching a new row are scored.
+* :func:`canonicalize_embedded` feeds that forest straight to the
+  one-task finish: three Python operators in all.
+* :func:`connected_components` — for raw edges: a map-only
+  per-partition union-find contracts each edge partition to a star
+  forest, then the same ONE task unions all the forests with the
+  minimum id as every root (at most one row per (partition, vertex)).
 
 The union-find is array-form (:func:`_min_roots`): each sweep hooks every
 root to the smallest root across its live edges, pointer-jumps to full
@@ -34,17 +37,22 @@ lazy until the caller's action.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import (
+    ArrayType, FloatType, IntegerType, LongType, StructField, StructType,
+)
 
 from cdrc_semantic_search_spark.functions.names import internal_col
-from cdrc_semantic_search_spark.operators.similarity import lsh_assign
+from cdrc_semantic_search_spark.operators.similarity import (
+    lsh_bucket_matrix,
+    lsh_planes,
+)
 
 #: candidate pairs scored per vectorized sweep: bounds the worker's
 #: memory on a hot bucket (three float64 temporaries of this length)
@@ -94,6 +102,34 @@ def _partition(batches: Iterator[pa.RecordBatch]) -> pa.Table | None:
     return pa.Table.from_batches(batches).combine_chunks()
 
 
+def _union(batches: Iterator[pa.RecordBatch]):
+    """The partition's edges (its two columns, in order) unioned →
+    (sorted distinct ids, root index per id), or None with no rows."""
+    t = _partition(batches)
+    if t is None:
+        return None
+    ids, (ia, ib) = _vertex_index(t.column(0), t.column(1))
+    return ids, _min_roots(ia, ib, np.arange(len(ids)))
+
+
+def _finish(edges: DataFrame) -> DataFrame:
+    """The one-task finish: every edge of ``edges`` (two columns of one
+    id type, no NULLs) unioned in ONE task → (id, component), each
+    endpoint labelled with its component minimum."""
+    id_type = edges.schema[0].dataType
+
+    def finish(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        if (found := _union(batches)) is None:
+            return
+        ids, root = found
+        yield pa.RecordBatch.from_arrays(
+            [ids, ids.take(pa.array(root))], names=["id", "component"]
+        )
+
+    schema = StructType([StructField("id", id_type), StructField("component", id_type)])
+    return edges.repartition(1).mapInArrow(finish, schema=schema)
+
+
 def connected_components(
     edges: DataFrame, src: str = "id_a", dst: str = "id_b"
 ) -> DataFrame:
@@ -110,7 +146,7 @@ def connected_components(
     minimum, plus a self row for a vertex left alone), then one
     ``repartition(1)`` task unions every forest and labels each vertex
     with its component minimum. The finish holds ≤ one row per (input
-    partition, vertex) — P·(|V|−1) on a spanning-forest input.
+    partition, vertex).
     """
     a, b = F.col(src), F.col(dst)
     id_type = (
@@ -122,19 +158,9 @@ def connected_components(
     e = edges.filter(a.isNotNull() & b.isNotNull()).select(
         a.cast(id_type).alias("a"), b.cast(id_type).alias("b")
     )
-    schema = StructType(
-        [StructField("id", id_type), StructField("component", id_type)]
-    )
-
-    def union(batches: Iterator[pa.RecordBatch]):
-        t = _partition(batches)
-        if t is None:
-            return None
-        ids, (ia, ib) = _vertex_index(t.column("a"), t.column("b"))
-        return ids, _min_roots(ia, ib, np.arange(len(ids)))
 
     def forest(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        if (found := union(batches)) is None:
+        if (found := _union(batches)) is None:
             return
         ids, root = found
         # members point at their root; a root with no member (a vertex
@@ -147,18 +173,11 @@ def connected_components(
             [ids.take(members), ids.take(pa.array(root[keep]))], names=["a", "b"]
         )
 
-    def finish(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        if (found := union(batches)) is None:
-            return
-        ids, root = found
-        yield pa.RecordBatch.from_arrays(
-            [ids, ids.take(pa.array(root))], names=["id", "component"]
+    return _finish(
+        e.mapInArrow(
+            forest, StructType([StructField("a", id_type), StructField("b", id_type)])
         )
-
-    local = e.mapInArrow(
-        forest, StructType([StructField("a", id_type), StructField("b", id_type)])
     )
-    return local.repartition(1).mapInArrow(finish, schema=schema)
 
 
 def _bucket_pairs(
@@ -229,13 +248,13 @@ def _fold_norms(cols: np.ndarray) -> np.ndarray:
 def similarity_forest(
     df: DataFrame,
     id_col: str,
-    vec_col: str,
+    embed: Callable[[pa.RecordBatch], np.ndarray],
     dim: int,
     threshold: float,
     seed: int = 42,
     n_planes: int = 16,
     n_bands: int = 4,
-    new_col: str | None = None,
+    prior_col: str | None = None,
 ) -> DataFrame:
     """→ (id_a, id_b) spanning-forest edges of the τ-graph: rows whose
     embeddings share an LSH ``(band, bucket)`` and reach cosine ≥
@@ -243,91 +262,130 @@ def similarity_forest(
     :func:`~cdrc_semantic_search_spark.operators.similarity.cosine_pairs_lsh`
     (same planes, bands and exact re-check arithmetic), in far fewer
     rows: each partition emits star edges (local minimum id, member), at
-    most |V_p|−1 of them.
+    most |V_p|−1 of them. ``embed`` maps an Arrow batch of ``df``'s rows
+    to their (rows, dim) float32 embeddings; a row with a NaN has a NULL
+    vector.
 
-    One exchange and one Arrow pass: ``lsh_assign`` tags each row once
-    per band and keeps the vector, ``repartition("band", "bucket")``
-    co-locates every bucket, and a ``mapInArrow`` scores each bucket's
-    pairs with the vectorized fold cosine (bit-identical to
-    ``functions/vector.cosine``), skipping pairs whose endpoints are
-    already joined, and unions the survivors in a per-partition
-    union-find.
+    Two Arrow passes around one exchange: the first embeds each batch
+    and tags every row once per band (``lsh_bucket_matrix``), carrying
+    the vector; ``repartition("band", "bucket")`` co-locates every
+    bucket; the second scores each bucket's pairs with the vectorized
+    fold cosine (bit-identical to ``functions/vector.cosine``), skipping
+    pairs whose endpoints are already joined, and unions the survivors
+    in a per-partition union-find.
 
-    With ``new_col`` (a boolean column), only pairs touching a row where
-    it is true are generated and scored (per-bucket work |new| ×
-    |bucket|): the delta edges that :func:`incremental_components`
-    folds into converged labels of the old rows.
+    With ``prior_col`` (a converged cluster label, NULL for a new row),
+    every row is the forest vertex ``coalesce(prior, id)``, so an old
+    cluster is one vertex, and only pairs touching a new row are scored
+    (per-bucket work |new| × |bucket|): the edges track the delta.
 
-    Bucket space sizing and NULL vectors follow ``lsh_assign``: NULL
-    vectors are dropped, and pair work is quadratic in the bucket, so
-    pick n_planes/n_bands as :func:`canonicalize_embedded` describes.
-    NULL ids are dropped too.
-
-    Every column of ``df`` rides into the bucket exchange, unread, so
-    column pruning leaves the plan below ``df`` as the caller built it: a
-    caller that reads ``df`` again (``canonicalize_embedded`` joins its
-    payload back) shares that plan's exchanges with this branch instead
-    of computing a pruned twin of them. Drop a wide column you do not
-    read again before calling.
+    Rows with a NULL id or vector are dropped inside the first pass, not
+    by a filter the optimizer would push below the caller's aggregation.
+    That pass reads every column of ``df``, so column pruning leaves the
+    plan below ``df`` as the caller built it, and a caller that reads
+    ``df`` again (``canonicalize_embedded`` joins its payload back)
+    shares its exchanges. Pair work is quadratic in the bucket: pick
+    n_planes/n_bands as :func:`canonicalize_embedded` describes.
     """
-    tagged = lsh_assign(df, vec_col, dim, n_planes, n_bands, seed)
+    planes = lsh_planes(dim, n_planes, seed)
+    keys = [id_col] + ([prior_col] if prior_col else [])
+    tagged = (
+        StructType([df.schema[c] for c in keys])
+        .add("band", IntegerType())
+        .add("bucket", LongType())
+        .add("vec", ArrayType(FloatType()))
+    )
     id_type = df.schema[id_col].dataType
     schema = StructType([StructField("id_a", id_type), StructField("id_b", id_type)])
 
+    def tag(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            batch = batch.filter(pc.is_valid(batch.column(id_col)))
+            if not batch.num_rows:
+                continue
+            vecs = np.asarray(embed(batch), dtype=np.float32)
+            if vecs.shape != (batch.num_rows, dim):
+                raise ValueError(f"embed must return a ({batch.num_rows}, {dim}) matrix")
+            valid = ~np.isnan(vecs).any(axis=1)
+            if not valid.all():
+                batch, vecs = batch.filter(pa.array(valid)), vecs[valid]
+            n = len(vecs)
+            if not n:
+                continue
+            rows = np.repeat(np.arange(n), n_bands)
+            offsets = np.arange(0, len(rows) * dim + 1, dim, dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c).take(rows) for c in keys]
+                + [
+                    pa.array(np.tile(np.arange(n_bands, dtype=np.int32), n)),
+                    pa.array(lsh_bucket_matrix(vecs, planes, n_bands).reshape(-1)),
+                    pa.ListArray.from_arrays(offsets, vecs[rows].reshape(-1)),
+                ],
+                names=tagged.names,
+            )
+
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         t = _partition(batches)
-        # NULL ids are dropped here, not by a filter the optimizer would
-        # push below the caller's aggregation (and out of the plan it
-        # shares)
-        t = None if t is None else t.filter(pc.is_valid(t.column(id_col)))
-        if t is None or not t.num_rows:
+        if t is None:
             return
-        ids, (vidx,) = _vertex_index(t.column(id_col))
-        # one row per vertex: the first of its (one per band) tag rows
-        first = np.unique(vidx, return_index=True)[1]
-        vecs = pc.list_flatten(t.column(vec_col)).to_numpy()
-        if len(vecs) != t.num_rows * dim:
-            raise ValueError(f"every {vec_col} vector must have length dim={dim}")
+        ids, (idx,) = _vertex_index(t.column(id_col))
+        # one row per id: the first of its (one per band) tag rows
+        first = np.unique(idx, return_index=True)[1]
+        vecs = pc.list_flatten(t.column("vec")).to_numpy()
         cols = vecs.reshape(-1, dim)[first].astype(np.float64).T.copy()
         norms = _fold_norms(cols)
-        is_new = (
-            t.column(new_col).to_numpy(zero_copy_only=False)[first].astype(bool)
-            if new_col
-            else None
-        )
-        parent = np.arange(len(ids))
+        if prior_col is None:
+            verts, vert, lead = ids, np.arange(len(ids)), None
+        else:
+            prior = t.column(prior_col).take(first)
+            lead = pc.is_null(prior).to_numpy(zero_copy_only=False)
+            verts, (vert,) = _vertex_index(pc.coalesce(prior, ids))
+        parent = np.arange(len(verts))
         for u, v in _bucket_pairs(
-            vidx, t.column("band").to_numpy(), t.column("bucket").to_numpy(), is_new
+            idx, t.column("band").to_numpy(), t.column("bucket").to_numpy(), lead
         ):
-            keep = parent[u] != parent[v]
-            u, v = u[keep], v[keep]
+            pu, pv = vert[u], vert[v]
+            keep = parent[pu] != parent[pv]
+            u, v, pu, pv = u[keep], v[keep], pu[keep], pv[keep]
             hit = _fold_cosine_pairs(cols, norms, u, v) >= threshold
-            parent = _min_roots(u[hit], v[hit], parent)
-        member = np.flatnonzero(parent != np.arange(len(ids)))
+            parent = _min_roots(pu[hit], pv[hit], parent)
+        member = np.flatnonzero(parent != np.arange(len(verts)))
         if len(member):
             yield pa.RecordBatch.from_arrays(
-                [ids.take(pa.array(parent[member])), ids.take(pa.array(member))],
+                [verts.take(pa.array(parent[member])), verts.take(pa.array(member))],
                 names=["id_a", "id_b"],
             )
 
-    return tagged.repartition("band", "bucket").mapInArrow(run, schema=schema)
+    return (
+        df.mapInArrow(tag, schema=tagged)
+        .repartition("band", "bucket")
+        .mapInArrow(run, schema=schema)
+    )
 
 
 def canonicalize_embedded(
     df: DataFrame,
     id_col: str,
-    vec_col: str,
+    embed: Callable[[pa.RecordBatch], np.ndarray],
     dim: int,
     threshold: float = 0.9,
     seed: int = 42,
     n_planes: int = 16,
     n_bands: int = 4,
+    prior_col: str | None = None,
 ) -> DataFrame:
     """→ (id, canonical_id, *other columns): cluster rows whose
-    embeddings reach cosine ≥ threshold through any path; canonical = min
-    id in the component. Every column of ``df`` but the id and the
-    vector rides along, so a caller gets its payload back without a
-    second join (and a second scan) of the input.
+    embeddings (``embed``, as :func:`similarity_forest` takes it) reach
+    cosine ≥ threshold through any path; canonical = min id in the
+    component. The forest goes straight to the one-task finish (three
+    Arrow passes in all), and every column of ``df`` but the id and the
+    prior rides along, so a caller gets its payload back without a
+    second scan of the input.
+
+    ``prior_col`` holds a row's label from a converged clustering of the
+    rows that have one (NULL for a new row); the labels equal clustering
+    every row from scratch, because a converged label is its cluster's
+    minimum and an old cluster gains edges only to new rows.
 
     SIZE THE BUCKET SPACE TO THE CORPUS: each band hashes to
     2^(n_planes/n_bands) buckets, and candidate generation is quadratic
@@ -339,19 +397,20 @@ def canonicalize_embedded(
     bands if the threshold is loose (scripts/inc_canon_bench.py runs
     40k+ surfaces at 48/4).
     """
-    comp = connected_components(
+    comp = _finish(
         similarity_forest(
-            df, id_col, vec_col, dim, threshold, seed=seed,
-            n_planes=n_planes, n_bands=n_bands,
+            df, id_col, embed, dim, threshold, seed=seed,
+            n_planes=n_planes, n_bands=n_bands, prior_col=prior_col,
         )
     )
-    rest = [c for c in df.columns if c not in (id_col, vec_col)]
+    rest = [c for c in df.columns if c not in (id_col, prior_col)]
     cid = internal_col(df.columns, "__cc_id")
     cc = internal_col(df.columns, "__cc_component")
     comp = comp.select(F.col("id").alias(cid), F.col("component").alias(cc))
-    return df.join(comp, F.col(id_col) == F.col(cid), "left").select(
+    label = F.col(id_col) if prior_col is None else F.coalesce(prior_col, id_col)
+    return df.join(comp, label == F.col(cid), "left").select(
         F.col(id_col).alias("id"),
-        F.coalesce(cc, id_col).alias("canonical_id"),
+        F.coalesce(cc, label).alias("canonical_id"),
         *rest,
     )
 
@@ -363,10 +422,11 @@ def incremental_components(
     dst: str = "id_b",
 ) -> DataFrame:
     """Fold a batch of NEW edges into CONVERGED labels without touching
-    the full graph — the canonicalization-maintenance kernel: at 10^12
-    mentions the component labels are a materialized table and each new
-    micro-batch of high-similarity pairs must update it in time
-    proportional to the BATCH, not the graph.
+    the full graph, for raw edge sets (the ``cc_incremental`` query):
+    each new micro-batch of edges updates a materialized label table in
+    time proportional to the BATCH, not the graph. Surface
+    canonicalization does not use it: there the old clusters enter
+    :func:`canonicalize_embedded` under their prior labels.
 
     Exactness: full-rebuild labels assign component = min reachable id.
     Converged labels are already component minima, so contracting every
@@ -374,9 +434,8 @@ def incremental_components(
     yields a component-level graph whose CC minima equal the true minima
     over the unioned edge set — ``incremental_components(cc(E1), E2) ≡
     cc(E1 ∪ E2)``, pinned in tests against randomized graphs. Only the
-    new edges' connectivity matters, so a spanning forest of them
-    (:func:`similarity_forest` with ``new_col``) gives the same labels
-    as the full pair list.
+    new edges' connectivity matters, so a spanning forest of them gives
+    the same labels as the full pair list.
 
     100-TB shape: the contracted graph has O(|new_edges|) edges —
     :func:`connected_components` runs on that, never on the full graph.
@@ -389,9 +448,10 @@ def incremental_components(
     :func:`connected_components` / this function — feeding unconverged
     labels breaks the minima-contraction argument.
 
-    Storage boundary between generations: pass ``labels`` read back from
-    a TABLE (as the catalog compaction path does), not a chain of
-    in-memory local checkpoints. A Spark local checkpoint preserves the
+    Storage boundary between generations: pass ``labels`` (or
+    :func:`canonicalize_embedded`'s prior labels) read back from a TABLE,
+    as the catalog compaction path does, not a chain of in-memory local
+    checkpoints. A Spark local checkpoint preserves the
     child plan's sizeInBytes into the LogicalRDD, so repeated
     checkpoint→join→checkpoint generations compound Catalyst's BigInt
     size estimate exponentially until query PLANNING (bignum

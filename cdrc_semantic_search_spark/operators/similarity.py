@@ -183,7 +183,6 @@ def lsh_assign(
     n_planes: int = 16,
     n_bands: int = 4,
     seed: int = 42,
-    drop_vec: bool = False,
 ) -> DataFrame:
     """Attach (band, bucket) rows per input row via random hyperplanes.
 
@@ -196,9 +195,9 @@ def lsh_assign(
     (B, dim) @ (dim, n_planes) matmul per Arrow batch (the ivf_assign
     pattern) — the previous form computed n_planes interpreted
     higher-order ``aggregate`` folds per row, which NOTES.md measured at
-    ~8× a Python loop. ``drop_vec=True`` omits the vector from the
-    output so a downstream exchange on (band, bucket) never carries the
-    embedding payload.
+    ~8× a Python loop. The vector is omitted from the output, so a
+    downstream exchange on (band, bucket) never carries the embedding
+    payload.
 
     Rows with a NULL vector are DROPPED (they cannot be bucketed; their
     cosine is NULL and could never pass a threshold re-check anyway —
@@ -210,8 +209,7 @@ def lsh_assign(
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     planes = lsh_planes(dim, n_planes, seed)
-    in_cols = [c for c in df.columns]
-    out_cols = [c for c in in_cols if not (drop_vec and c == vec_col)]
+    out_cols = [c for c in df.columns if c != vec_col]
     out_schema = StructType(
         [df.schema[c] for c in out_cols]
         + [StructField("band", IntegerType()), StructField("bucket", LongType())]
@@ -268,9 +266,7 @@ def cosine_pairs_lsh(
     spanning forest, not the pair list.
     """
     base = df.select(F.col(id_col), F.col(vec_col)).persist()
-    tagged = lsh_assign(
-        base, vec_col, dim, n_planes, n_bands, seed, drop_vec=True
-    ).persist()
+    tagged = lsh_assign(base, vec_col, dim, n_planes, n_bands, seed).persist()
     if cache_handle is not None:
         cache_handle.extend([base, tagged])
     a = tagged.select("band", "bucket", F.col(id_col).alias("id_a"))

@@ -359,28 +359,40 @@ class KGPipeline:
             .agg(F.min("entity_id").alias("entity_id"))
         )
 
-    def _cluster_surfaces(self, distinct: DataFrame) -> DataFrame:
-        """Cluster a distinct (surface, entity_id) frame: encode → one
-        LSH-bucket pass that keeps a spanning forest of the pairs ≥ τ →
-        one-task union-find → canonical surface = lexicographically
-        smallest member. canonicalize_embedded carries entity_id through
-        and similarity_forest keeps every column of its input, so the
-        forest branch and the payload join-back share one aggregation
-        exchange over the mentions, and the plan runs in a fixed number
-        of Spark jobs (5 on the perfbench kg_build input)."""
-        from cdrc_semantic_search_spark.encoder import make_encoder_udf
+    def _cluster_surfaces(
+        self, distinct: DataFrame, prior_col: str | None = None
+    ) -> DataFrame:
+        """Cluster a distinct (surface, entity_id[, prior_col]) frame: one
+        Arrow pass encodes and LSH-tags each surface → one LSH-bucket
+        pass keeps a spanning forest of the pairs ≥ τ → one-task
+        union-find → canonical surface = lexicographically smallest
+        member. ``prior_col`` names a column with each surface's label
+        from the previous generation (NULL if new; see
+        canonicalize_embedded).
+        canonicalize_embedded carries entity_id through and
+        similarity_forest reads every column of its input, so the forest
+        branch and the payload join-back share one aggregation exchange:
+        three Python operators, a fixed number of Spark jobs (5 on the
+        perfbench kg_build input)."""
+        from cdrc_semantic_search_spark.encoder import encode_texts
         from cdrc_semantic_search_spark.operators.canonicalize import (
             canonicalize_embedded,
         )
 
         enc = self.settings.encoder
-        encode = make_encoder_udf(dim=enc.embed_dim, seed=enc.seed, ngram=enc.ngram)
+        dim, seed, ngram = enc.embed_dim, enc.seed, enc.ngram
+
+        def embed(batch):
+            return encode_texts(
+                batch.column("surface").to_pylist(), dim=dim, seed=seed, ngram=ngram
+            )
+
         ps = self.settings.pipeline
-        with_vec = distinct.withColumn("vec", encode(F.col("surface")))
         return canonicalize_embedded(
-            with_vec, "surface", "vec", dim=enc.embed_dim,
+            distinct, "surface", embed, dim=dim,
             threshold=self.CANON_THRESHOLD,
-            seed=enc.seed, n_planes=ps.canon_n_planes, n_bands=ps.canon_n_bands,
+            seed=seed, n_planes=ps.canon_n_planes, n_bands=ps.canon_n_bands,
+            prior_col=prior_col,
         ).select(
             F.col("id").alias("surface"),
             F.col("canonical_id").alias("canonical_surface"),
@@ -749,10 +761,10 @@ class KGPipeline:
 
     def _canon_fingerprint(self) -> dict:
         """The parameters surface clustering is a deterministic function
-        of. The incremental patch path (``_cluster_surfaces_incremental``)
-        is exact ONLY when the base generation was clustered with the
-        same values — persisted alongside the base at compaction and
-        checked before going incremental (ADVICE r4)."""
+        of. A base generation's labels enter a compaction as prior
+        labels (``compacted_surface_clusters``), exact ONLY when the base
+        was clustered with the same values — persisted alongside the
+        base at compaction and checked before they are used (ADVICE r4)."""
         enc = self.settings.encoder
         ps = self.settings.pipeline
         return {
@@ -825,135 +837,59 @@ class KGPipeline:
             )
 
     def compacted_surface_clusters(self, catalog: ParquetTableCatalog) -> DataFrame:
-        """Canonicalization over the ledgered path: re-aggregate the
-        committed surface deltas (min entity per surface — min is
-        union-compatible) into the global distinct surface set, then run
-        the clustering ONCE over it.  Connected components are not
-        bucket-decomposable (a cluster can span buckets), so the deltas
-        make the clustering's INPUT incremental — cardinality ≪ mentions
-        — while the clustering itself is a global compaction-time step;
-        equals surface_clusters over the union of the source batches.  A
-        compacted BASE (if any) contributes its (surface, entity_id)
-        rows to the distinct set before clustering — min is
-        union-compatible, so generations compose.  With no live delta
-        over a base clustered under the current parameters, the base
-        rows are the answer as they stand."""
+        """Canonicalization over the ledgered path: the committed surface
+        deltas and the compacted BASE (if any) re-aggregate into the
+        global distinct surface set (min entity per surface — min is
+        union-compatible, so generations compose), and the clustering
+        runs ONCE over it; equals surface_clusters over the union of the
+        source batches. A base clustered under the current parameters
+        hands each old surface its label as ``prior``: only pairs
+        touching a new surface are scored and the one-task finish holds
+        only the delta's forest edges. On a parameter mismatch, or a
+        legacy base with no stamp, every prior is NULL and the union
+        clusters afresh; with no live delta over a matching base, the
+        base rows stand as they are."""
         self._check_readable(catalog)
         parts = []
         try:
             parts.append(
                 catalog.read_committed(self.spark, "surface_deltas").select(
-                    "surface", "entity_id"
+                    "surface", "entity_id", F.lit(None).cast("string").alias("prior")
                 )
             )
         except FileNotFoundError:
             pass
-        live = bool(parts)
         base = self._base_table(self.spark, catalog, "surface_clusters")
         if base is not None:
-            parts.append(base.select("surface", "entity_id"))
+            prior = F.col("canonical_surface")
+            stored = None
+            params_path = self._canon_params_path(catalog)
+            if os.path.exists(params_path):
+                with open(params_path) as f:
+                    stored = json.load(f)
+            if stored != self._canon_fingerprint():
+                log.warning(
+                    "surface_clusters base at %s was clustered with %s but "
+                    "current settings are %s — falling back to a full "
+                    "re-cluster of the union (exact, but not delta-"
+                    "proportional)", catalog.root, stored,
+                    self._canon_fingerprint(),
+                )
+                prior = F.lit(None).cast("string")
+            elif not parts:
+                # no new surface: the base labels stand unchanged
+                return base.select("surface", "canonical_surface", "entity_id")
+            parts.append(base.select("surface", "entity_id", prior.alias("prior")))
         if not parts:
             raise FileNotFoundError(
                 "no committed surface_deltas and no surface_clusters base"
             )
         allsurf = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        distinct = allsurf.groupBy("surface").agg(
-            F.min("entity_id").alias("entity_id")
-        )
-        if base is None:
-            return self._cluster_surfaces(distinct)
-        # incremental ≡ full rebuild ONLY under the base generation's
-        # clustering parameters; on mismatch (or a legacy base with no
-        # stamp) fall back to the full path — always exact, since
-        # `distinct` already unions the base's surfaces
-        stored = None
-        params_path = self._canon_params_path(catalog)
-        if os.path.exists(params_path):
-            with open(params_path) as f:
-                stored = json.load(f)
-        if stored != self._canon_fingerprint():
-            log.warning(
-                "surface_clusters base at %s was clustered with %s but "
-                "current settings are %s — falling back to a full "
-                "re-cluster of the union (exact, but not delta-"
-                "proportional)", catalog.root, stored,
-                self._canon_fingerprint(),
-            )
-            return self._cluster_surfaces(distinct)
-        if not live:
-            # no new surface: the incremental patch would hand back the
-            # base labels unchanged
-            return base.select("surface", "canonical_surface", "entity_id")
-        return self._cluster_surfaces_incremental(base, distinct)
-
-    def _cluster_surfaces_incremental(
-        self, base: DataFrame, distinct: DataFrame
-    ) -> DataFrame:
-        """Patch the previous generation's converged surface clusters with
-        only the NEW surfaces — compaction cost proportional to the delta,
-        not the accumulated surface history (at 10^12 mentions the full
-        LSH + global CC per compaction is the one step whose cost grows
-        with history; this removes it EXACTLY, not approximately).
-
-        Old-old similarity pairs are already folded into the base labels
-        (canonical_surface = converged component minimum), so the only
-        edges the union's component structure can add are pairs touching
-        a new surface: score exactly those (similarity_forest with
-        ``new_col`` — same planes/bands/threshold as the full path,
-        encoder is deterministic), keep a spanning forest of the ones ≥ τ
-        and fold it with incremental_components. A forest has the pairs'
-        connectivity, and ``incremental_components(cc(E_old), E_new) ≡
-        cc(E_old ∪ E_new)``, so the output hash-matches a from-scratch
-        rebuild — pinned in test_streaming's generation test (wave2
-        compacted over wave1's base ≡ one-shot clustering of the union).
-        Nothing is cached or checkpointed: the plan runs once, inside
-        the caller's write.
-
-        What stays linear in |all surfaces|: the re-encode + LSH re-tag
-        and the one (band, bucket) exchange of the tagged rows (at real
-        scale persist (surface, band, bucket, vec) alongside the base
-        and only the delta re-encodes) and the label-patch join (one
-        equi-join against the batch-sized contracted mapping, which AQE
-        broadcasts). What tracks the DELTA: pair scoring and the CC
-        itself — the superlinear pieces."""
-        from cdrc_semantic_search_spark.encoder import make_encoder_udf
-        from cdrc_semantic_search_spark.operators.canonicalize import (
-            incremental_components,
-            similarity_forest,
-        )
-
-        base_labels = base.select(
-            F.col("surface").alias("id"),
-            F.col("canonical_surface").alias("component"),
-        )
-        flagged = distinct.join(
-            base.select("surface", F.lit(False).alias("__old")).distinct(),
-            "surface",
-            "left",
-        ).select(
-            "surface", "entity_id", F.col("__old").isNull().alias("__is_new")
-        )
-        enc = self.settings.encoder
-        encode = make_encoder_udf(dim=enc.embed_dim, seed=enc.seed, ngram=enc.ngram)
-        ps = self.settings.pipeline
-        new_forest = similarity_forest(
-            flagged.withColumn("vec", encode(F.col("surface"))),
-            "surface",
-            "vec",
-            dim=enc.embed_dim,
-            threshold=self.CANON_THRESHOLD,
-            seed=enc.seed,
-            n_planes=ps.canon_n_planes,
-            n_bands=ps.canon_n_bands,
-            new_col="__is_new",
-        )
-        labels = incremental_components(base_labels, new_forest)
-        return distinct.join(
-            labels, distinct["surface"] == labels["id"], "left"
-        ).select(
-            "surface",
-            F.coalesce("component", "surface").alias("canonical_surface"),
-            "entity_id",
+        return self._cluster_surfaces(
+            allsurf.groupBy("surface").agg(
+                F.min("entity_id").alias("entity_id"), F.min("prior").alias("prior")
+            ),
+            prior_col="prior",
         )
 
 

@@ -1,24 +1,24 @@
-"""Incremental canonicalization bench: full recluster vs delta patch.
+"""Incremental canonicalization bench: full recluster vs prior labels.
 
 The compaction question at 10^12 mentions: when a new generation adds M
 surfaces to an S-surface history, what does re-canonicalizing cost?
 
-* **full recluster** (the pre-r4 path): LSH-pair ALL S+M surfaces and
-  run connected components over every pair — cost grows with the
-  accumulated history every compaction, forever.
-* **incremental patch** (r4): score only pairs touching a NEW surface
-  and keep a spanning forest of those ≥ τ (similarity_forest with
-  ``new_col``), fold it into the previous generation's converged labels
-  (incremental_components) — the superlinear work (pair scoring, CC)
-  tracks the DELTA; the re-tag, the bucket exchange and one label-patch
-  join stay linear in S.
+* **full recluster**: LSH-pair ALL S+M surfaces and union every pair ≥ τ
+  — pair work grows with the accumulated history every compaction.
+* **prior labels** (the path ``compacted_surface_clusters`` runs):
+  ``canonicalize_embedded`` with each old surface's converged label as
+  its ``prior`` — every old cluster is one forest vertex, only pairs
+  touching a NEW surface are scored, and the forest goes straight to the
+  one-task finish, so the superlinear work (pair scoring, CC) tracks the
+  DELTA; the encode-and-tag pass, the bucket exchange and the label
+  join-back stay linear in S.
 
 Both paths are run over the same synthetic surface corpus (stem+variant
 strings through the package's hashed-n-gram encoder, so same-stem
 variants genuinely cluster) across three growing generations, asserting
-LABEL EQUALITY every generation (incremental ≡ rebuild — the same
+LABEL EQUALITY every generation (prior labels ≡ rebuild — the same
 invariant test_streaming pins on the pipeline) and reporting wall
-seconds plus the delta forest's edge count (what reaches the CC).
+seconds plus the delta forest's edge count (what reaches the finish).
 
 Results: JSON to stdout + scripts/.inc_canon_bench.json + a BENCH.md
 section (replace-by-heading; scripts/scaling_bench.py re-appends it).
@@ -60,13 +60,13 @@ def surfaces(spark, lo: int, hi: int):
     )
 
 
-def with_vec(df):
-    from pyspark.sql import functions as F
+def embed(batch):
+    from cdrc_semantic_search_spark.encoder import encode_texts
 
-    from cdrc_semantic_search_spark.encoder import make_encoder_udf
+    return encode_texts(batch.column("surface").to_pylist(), dim=DIM, seed=42, ngram=3)
 
-    encode = make_encoder_udf(dim=DIM, seed=42, ngram=3)
-    return df.withColumn("vec", encode(F.col("surface")))
+
+ARGS = dict(dim=DIM, threshold=THRESHOLD, n_planes=N_PLANES, n_bands=N_BANDS)
 
 
 def full_recluster(all_surf):
@@ -74,35 +74,36 @@ def full_recluster(all_surf):
         canonicalize_embedded,
     )
 
-    return canonicalize_embedded(
-        with_vec(all_surf), "surface", "vec", dim=DIM, threshold=THRESHOLD,
-        n_planes=N_PLANES, n_bands=N_BANDS,
-    )
+    return canonicalize_embedded(all_surf, "surface", embed, **ARGS)
 
 
-def incremental_patch(labels, all_surf, new_surf):
+def with_prior(labels, all_surf):
+    """Every surface with its previous generation's label (NULL if new)."""
     from pyspark.sql import functions as F
 
-    from cdrc_semantic_search_spark.operators.canonicalize import (
-        incremental_components,
-        similarity_forest,
-    )
-
-    flagged = all_surf.join(
-        new_surf.select("surface", F.lit(True).alias("__is_new")),
+    return all_surf.join(
+        labels.select(F.col("id").alias("surface"), F.col("canonical_id").alias("prior")),
         "surface",
         "left",
-    ).select(
-        "surface", F.coalesce("__is_new", F.lit(False)).alias("__is_new")
     )
-    forest = similarity_forest(
-        with_vec(flagged), "surface", "vec", dim=DIM, threshold=THRESHOLD,
-        n_planes=N_PLANES, n_bands=N_BANDS, new_col="__is_new",
-    ).localCheckpoint()  # counted below and folded in: score once
-    out = incremental_components(
-        labels.select(F.col("id"), F.col("component")), forest
-    ).localCheckpoint()
-    return out, forest.count()
+
+
+def prior_labels(labels, all_surf):
+    from cdrc_semantic_search_spark.operators.canonicalize import (
+        canonicalize_embedded,
+    )
+
+    return canonicalize_embedded(
+        with_prior(labels, all_surf), "surface", embed, prior_col="prior", **ARGS
+    )
+
+
+def forest_edges(labels, all_surf) -> int:
+    from cdrc_semantic_search_spark.operators.canonicalize import similarity_forest
+
+    return similarity_forest(
+        with_prior(labels, all_surf), "surface", embed, prior_col="prior", **ARGS
+    ).count()
 
 
 def render_section(results: list[dict]) -> str:
@@ -115,32 +116,30 @@ def render_section(results: list[dict]) -> str:
     return f"""
 {MARKER} ({S_BASE:,} base surfaces, +{M_DELTA:,}/generation)
 
-Full recluster (LSH-pair everything + global CC, the pre-r4 compaction)
-vs the delta patch (a spanning forest of the pairs ≥ τ touching a new
-surface + incremental_components over the previous generation's
-labels), same corpus, labels asserted EQUAL every generation:
+Full recluster (LSH-pair everything + one-task finish) vs prior labels
+(`canonicalize_embedded` with each old surface's label from the previous
+generation as its prior: old clusters enter the forest as one vertex,
+only pairs touching a new surface are scored), same corpus, labels
+asserted EQUAL every generation:
 
-| generation | surfaces | new | full recluster sec | incremental sec | delta forest edges | labels equal |
+| generation | surfaces | new | full recluster sec | prior labels sec | delta forest edges | labels equal |
 |---|---|---|---|---|---|---|
 {rows}
 
-The patch's superlinear work (pair scoring, CC) tracks the delta; the
-full path re-scores every bucket of the history each compaction. With
-the bucket-forest kernel and 48/4 planes, pair scoring is a small share
-of either path, so both walls are set by the work that stays linear in
-history: the re-encode/re-tag, the (band, bucket) exchange of every
-tagged row and, for the patch, one AQE-broadcast label-patch join. The
-two paths cost about the same at this size. The patch saves pair work,
-which grows with bucket occupancy (hot buckets, fewer planes per band;
-not measured here), and persisting (surface, band, bucket, vec) beside
-the base would drop its re-encode.
+With prior labels the superlinear work (pair scoring, the one-task
+finish) tracks the delta; the full path re-scores every bucket of the
+history each compaction. With the bucket-forest kernel and 48/4 planes,
+pair scoring is a small share of either path, so both walls are mostly
+the work that stays linear in history: the encode-and-tag pass and the
+(band, bucket) exchange of every tagged row, plus, for prior labels, the
+join of the previous generation's labels. Generation 1 also pays the
+first start of the Python workers. Persisting (surface, band, bucket,
+vec) beside the base would drop the re-encode.
 Reproduce: `python scripts/inc_canon_bench.py`.
 """
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
     spark = session("inc-canon-bench")
 
     work = tempfile.mkdtemp(prefix="inc_canon_")
@@ -157,51 +156,36 @@ def main() -> None:
         # dominates wall time. Production is immune — each generation's
         # labels persist to the catalog and a parquet scan resets stats
         # to file size — so the bench mirrors that storage boundary.
-        base = surfaces(spark, 0, hi - M_DELTA).localCheckpoint()
-        new = surfaces(spark, hi - M_DELTA, hi).localCheckpoint()
         all_surf = surfaces(spark, 0, hi).localCheckpoint()
 
         full, full_sec = timed(lambda: full_recluster(all_surf).localCheckpoint())
 
         if labels is None:
             # generation 0 base labels: one full cluster of the base set
-            labels = full_recluster(base).select(
-                F.col("id"), F.col("canonical_id").alias("component")
-            ).localCheckpoint()
+            labels = full_recluster(surfaces(spark, 0, hi - M_DELTA)).localCheckpoint()
 
-        (patched, n_edges), inc_sec = timed(
-            lambda: incremental_patch(labels, all_surf, new)
+        patched, inc_sec = timed(
+            lambda: prior_labels(labels, all_surf).localCheckpoint()
         )
-
-        got = {
-            (r.surface, r.canonical_surface)
-            for r in all_surf.join(
-                patched, all_surf["surface"] == patched["id"], "left"
-            )
-            .select(
-                "surface",
-                F.coalesce("component", "surface").alias("canonical_surface"),
-            )
-            .collect()
-        }
+        got = {(r.id, r.canonical_id) for r in patched.collect()}
         want = {(r.id, r.canonical_id) for r in full.collect()}
         res = {
             "gen": gen,
-            "n_surfaces": all_surf.count(),
-            "n_new": new.count(),
+            "n_surfaces": hi,
+            "n_new": M_DELTA,
             "full_sec": full_sec,
             "inc_sec": inc_sec,
-            "inc_forest_edges": n_edges,
+            "inc_forest_edges": forest_edges(labels, all_surf),
             "equal": got == want,
         }
         print(f"  {res}", flush=True)
         results.append(res)
         # the production storage boundary: labels round-trip parquet
         lp = os.path.join(work, f"labels_gen{gen}")
-        patched.write.mode("overwrite").parquet(lp)
+        patched.select("id", "canonical_id").write.mode("overwrite").parquet(lp)
         labels = spark.read.parquet(lp)
 
-    assert all(r["equal"] for r in results), "incremental != full rebuild"
+    assert all(r["equal"] for r in results), "prior labels != full rebuild"
     publish("inc_canon_bench", results, MARKER, render_section(results))
     spark.stop()
 

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -1241,11 +1242,26 @@ def _clustered_vectors(seed: int, n: int = 90, dim: int = 16):
     return centres[pick] + noise * np.float32(0.25)
 
 
+def _read_vectors(col: str, dim: int):
+    """An embedding for canonicalize's operators that reads an
+    array<float> column of the batch; a NULL vector becomes a NaN row."""
+
+    def embed(batch):
+        vecs = batch.column(col)
+        out = np.full((batch.num_rows, dim), np.nan, np.float32)
+        ok = vecs.is_valid().to_numpy(zero_copy_only=False)
+        out[ok] = vecs.filter(pa.array(ok)).flatten().to_numpy().reshape(-1, dim)
+        return out
+
+    return embed
+
+
 def test_similarity_forest_matches_lsh_pairs(spark):
     """similarity_forest is a forest (per output partition: ≤ |V_p|−1
     edges, no cycle; on one partition the whole output is) whose
-    components equal cosine_pairs_lsh's on the same input; with new_col,
-    those of the pairs touching a new row."""
+    components equal cosine_pairs_lsh's on the same input; with every
+    old row under its own id as its prior label, those of the pairs
+    touching a new row."""
     mat = _clustered_vectors(11)
     dim = mat.shape[1]
     pdf = pd.DataFrame(
@@ -1255,7 +1271,10 @@ def test_similarity_forest_matches_lsh_pairs(spark):
             "new": [i % 5 == 0 for i in range(len(mat))],
         }
     )
-    df = spark.createDataFrame(pdf)
+    df = spark.createDataFrame(pdf).withColumn(
+        "prior", F.when(~F.col("new"), F.col("vid"))
+    )
+    embed = _read_vectors("vec", dim)
     args = dict(dim=dim, threshold=0.9, n_planes=8, n_bands=4)
     pairs = similarity.cosine_pairs_lsh(df, "vid", "vec", **args).collect()
     new_ids = set(pdf.loc[pdf["new"], "vid"])
@@ -1277,11 +1296,13 @@ def test_similarity_forest_matches_lsh_pairs(spark):
                     if c == cb:
                         comps[v] = ca
 
-    for new_col, want_pairs in [
+    for prior_col, want_pairs in [
         (None, pairs),
-        ("new", [r for r in pairs if r.id_a in new_ids or r.id_b in new_ids]),
+        ("prior", [r for r in pairs if r.id_a in new_ids or r.id_b in new_ids]),
     ]:
-        forest = canonicalize.similarity_forest(df, "vid", "vec", new_col=new_col, **args)
+        forest = canonicalize.similarity_forest(
+            df, "vid", embed, prior_col=prior_col, **args
+        )
         rows = forest.select(F.spark_partition_id(), "id_a", "id_b").collect()
         check_forest(rows)
         got = _uf_components([(a, b) for _, a, b in rows])
@@ -1289,7 +1310,7 @@ def test_similarity_forest_matches_lsh_pairs(spark):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "1")
     try:
-        one = canonicalize.similarity_forest(df, "vid", "vec", **args).collect()
+        one = canonicalize.similarity_forest(df, "vid", embed, **args).collect()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     check_forest([(0, r.id_a, r.id_b) for r in one])
@@ -1299,20 +1320,87 @@ def test_similarity_forest_matches_lsh_pairs(spark):
 
 
 def test_canonicalize_embedded_carries_payload_columns(spark):
-    """Columns other than the id and the vector ride through; a row with
-    a NULL vector is kept as its own canonical."""
+    """Columns other than the id ride through; a row with a NULL vector
+    is kept as its own canonical."""
     mat = _clustered_vectors(12, n=30)
     rows = [(f"s{i:02d}", list(map(float, v)), i) for i, v in enumerate(mat)]
     rows.append(("zz", None, 99))
     df = spark.createDataFrame(rows, "sid string, vec array<float>, payload int")
+    dim = mat.shape[1]
     out = canonicalize.canonicalize_embedded(
-        df, "sid", "vec", dim=mat.shape[1], threshold=0.9, n_planes=8
+        df, "sid", _read_vectors("vec", dim), dim=dim, threshold=0.9, n_planes=8
     )
-    assert out.columns == ["id", "canonical_id", "payload"]
+    assert out.columns == ["id", "canonical_id", "vec", "payload"]
     got = {r.id: (r.canonical_id, r.payload) for r in out.collect()}
     assert got["zz"] == ("zz", 99)
     assert {k: p for k, (_, p) in got.items()} == {r[0]: r[2] for r in rows}
     assert len({c for c, _ in got.values()}) < len(got)
+
+
+def _unit(v: np.ndarray) -> np.ndarray:
+    return (v / np.linalg.norm(v)).astype(np.float32)
+
+
+@pytest.mark.parametrize("partitions", ["1", None])
+def test_prior_labels_equal_clustering_from_scratch(spark, partitions):
+    """canonicalize_embedded over every row, given as prior labels the
+    clustering of the old rows alone, equals clustering every row from
+    scratch, label for label — over several seeds and random old/new
+    splits, plus no new row and every row new. Each input holds a new
+    row that bridges two old clusters (it takes the smaller label), an
+    isolated new row and a NULL vector on each side of the split; at
+    one shuffle partition and at the session default."""
+    dim = 16
+    args = dict(dim=dim, threshold=0.9, n_planes=8, n_bands=4)
+    embed = _read_vectors("vec", dim)
+
+    def cluster(rows, prior=None):
+        df = spark.createDataFrame(
+            [(i, None if v is None else list(map(float, v)), (prior or {}).get(i))
+             for i, v in rows.items()],
+            "sid string, vec array<float>, prior string",
+        )
+        out = canonicalize.canonicalize_embedded(
+            df, "sid", embed, prior_col=None if prior is None else "prior", **args
+        )
+        return {r.id: r.canonical_id for r in out.collect()}
+
+    # x1 ~ x3 and x0 ~ x2 are two old clusters 40° apart; the new y0 lies
+    # 20° from each, so it bridges them (cos 20° ≥ τ > cos 40°)
+    a, b = np.eye(dim, dtype=np.float32)[:2]
+    tilt = _unit(np.eye(dim, dtype=np.float32)[2])
+    along = lambda deg: _unit(a * np.cos(np.radians(deg)) + b * np.sin(np.radians(deg)))
+    special_old = {
+        "x1": along(0) * 4, "x3": _unit(along(0) + tilt * 0.02) * 4,
+        "x0": along(40) * 4, "x2": _unit(along(40) + tilt * 0.02) * 4,
+        "z0": None,
+    }
+    special_new = {"y0": along(20) * 4, "y9": _unit(np.ones(dim, np.float32)), "z1": None}
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if partitions:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    try:
+        for seed, share in [(31, 0.25), (32, 0.5), (33, 0.0), (33, 1.0)]:
+            mat = _clustered_vectors(seed, n=60)
+            rng = np.random.default_rng(seed)
+            is_new = rng.random(len(mat)) < share
+            old = {f"s{i:02d}": v for i, v in enumerate(mat) if not is_new[i]}
+            new = {f"s{i:02d}": v for i, v in enumerate(mat) if is_new[i]}
+            if 0.0 < share < 1.0:
+                old.update(special_old)
+                new.update(special_new)
+            rows = {**old, **new}
+            want = cluster(rows)
+            prior = cluster(old) if old else {}
+            got = cluster(rows, prior)
+            assert got == want, (seed, share)
+            if 0.0 < share < 1.0:
+                assert prior["x3"] == "x1" and prior["x2"] == "x0"
+                assert {got[k] for k in ("x0", "x1", "x2", "x3", "y0")} == {"x0"}
+                assert (got["y9"], got["z0"], got["z1"]) == ("y9", "z0", "z1")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_fold_cosine_pairs_bit_identical_to_oracle_fold():
@@ -1347,7 +1435,9 @@ def test_canonicalize_embedded_clusters_duplicates(spark):
     mat = np.vstack([base, base[0:1] * 1.001])  # row 6 ~ row 0
     pdf = pd.DataFrame({"mid": [f"m{i}" for i in range(7)], "vec": [list(map(float, v)) for v in mat]})
     df = spark.createDataFrame(pdf)
-    out = canonicalize.canonicalize_embedded(df, "mid", "vec", dim=8, threshold=0.999)
+    out = canonicalize.canonicalize_embedded(
+        df, "mid", _read_vectors("vec", 8), dim=8, threshold=0.999
+    )
     got = dict((r["id"], r["canonical_id"]) for r in out.collect())
     assert got["m6"] == "m0" and got["m0"] == "m0"
     assert got["m3"] == "m3"

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -146,6 +147,53 @@ def test_streamed_generational_compaction(spark, fixture, spark_fixture, tmp_pat
     assert clusters == want_clusters
 
 
+#: Python operators of a physical plan (Spark's node names)
+_PYTHON_OPS = re.compile(
+    r"\b(?:ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow"
+    r"|FlatMap\w*In(?:Pandas|Arrow)|AggregateInPandas|WindowInPandas)\b"
+)
+
+
+def test_surface_clustering_python_operator_and_job_budget(
+    spark, fixture, spark_fixture, tmp_path, plan_of, jobs_of
+):
+    """Canonicalization's executed plan holds three Python operators
+    (encode-and-tag, the forest pass, the one-task finish) and no pandas
+    operator, both when it clusters materialized mentions in full and
+    when a compaction clusters a live surface delta over a base; and the
+    compaction's staged write runs no more Spark jobs than the full
+    one's on the same turns."""
+    from cdrc_semantic_search_spark.sources.catalog import read_parquet
+
+    tdf, _ = spark_fixture
+    convs = sorted(r.conv_id for r in tdf.select("conv_id").distinct().collect())
+    cut = convs[len(convs) // 2]
+    pipe = KGPipeline(spark, fixture.entities, Settings())
+    cat = ParquetTableCatalog(str(tmp_path / "ops_cat"))
+    src, ckpt = str(tmp_path / "ops_src"), str(tmp_path / "ops_ckpt")
+    for wave in (tdf.filter(F.col("conv_id") < cut), tdf.filter(F.col("conv_id") >= cut)):
+        wave.repartition(4).write.mode("append").parquet(src)
+        incremental.stream_triples(spark, pipe, src, cat, ckpt, with_graph=True)
+        if not os.path.exists(KGPipeline._gen_marker_path(cat)):
+            pipe.compact_graph(cat)
+    assert cat.committed_partitions("surface_deltas")  # live over the base
+    men = str(tmp_path / "ops_mentions")
+    pipe.mentions(tdf).write.parquet(men)
+    full_cat = ParquetTableCatalog(str(tmp_path / "ops_full"))
+    clusterings = {
+        "full": (full_cat, pipe.surface_clusters(read_parquet(spark, men))),
+        "compaction": (cat, pipe.compacted_surface_clusters(cat)),
+    }
+    jobs = {}
+    for name, (target, df) in clusterings.items():
+        jobs[name], _ = jobs_of(lambda: target.stage({"surface_clusters": df}))
+        df.collect()
+        final = plan_of(df).split("== Initial Plan ==")[0]
+        ops = _PYTHON_OPS.findall(final)
+        assert len(ops) == 3 and "MapInPandas" not in ops, (name, final)
+    assert 0 < len(jobs["compaction"]) <= len(jobs["full"]), jobs
+
+
 def test_compaction_canon_param_mismatch_falls_back_to_full(
     spark, fixture, spark_fixture, tmp_path
 ):
@@ -221,7 +269,6 @@ def test_compacted_surface_clusters_without_live_delta_reads_base(
     def boom(*_a, **_k):
         raise AssertionError("re-clustered with no live surface delta")
 
-    monkeypatch.setattr(KGPipeline, "_cluster_surfaces_incremental", boom)
     monkeypatch.setattr(KGPipeline, "_cluster_surfaces", boom)
     got = pipe.compacted_surface_clusters(cat)
     assert got.columns == ["surface", "canonical_surface", "entity_id"]
