@@ -5,14 +5,13 @@ A from-scratch re-expression of the query/data-processing capabilities of
 knowledge-graph construction pipeline over Iceberg-style tables of multi-turn
 conversation transcripts:
 
-    transcripts  →  window-ordered turn assembly   (SURVEY §2.6 W5)
-                 →  mention detection              (SURVEY §2.11 D6)
+    transcripts  →  triple extraction + mention detection (SURVEY §2.11 D6)
                  →  top-k cosine entity linking    (SURVEY §2.4 J3, §2.9 V2-V5)
                  →  canonicalization (conn. comp.) (SURVEY §2.4 self-join)
                  →  kg_nodes / kg_edges materialize (SURVEY §2.2 K1/K2)
 
-Everything is DataFrame/Catalyst-first; Python touches data only through
-Arrow-batched pandas UDFs (scalar-iterator or mapInPandas) — never per-row.
+Everything is DataFrame/Catalyst-first; the KG path touches data in Python
+only through Arrow-batched ``mapInArrow`` passes — never per-row.
 """
 
 __version__ = "0.1.0"

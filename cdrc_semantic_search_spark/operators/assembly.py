@@ -15,35 +15,16 @@ Scale notes (10^12 turns):
   single 10^6-element ``collect_list`` on one task — state per group is
   bounded by ``block_size`` (stage 1) / n_blocks (stage 2). Map-side
   partial aggregation applies to both stages.
-* ``with_dialogue_context`` uses lag/lead over the same window — one
-  shuffle by conv_id, reused by every window function on it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cdrc_semantic_search_spark.functions.names import internal_col
 
 TURN_SEP = "\n"
-
-
-def with_turn_order(df: DataFrame) -> DataFrame:
-    """Attach a dense per-conversation position (sanity window; turn_idx is
-    the stable key, `rn` confirms density / exposes gaps)."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return df.withColumn("rn", F.row_number().over(w))
-
-
-def with_dialogue_context(df: DataFrame, n: int = 1) -> DataFrame:
-    """lag/lead text context for mention detection features (SURVEY §2.6)."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    out = df
-    for i in range(1, n + 1):
-        out = out.withColumn(f"prev_text_{i}", F.lag("text", i).over(w))
-        out = out.withColumn(f"next_text_{i}", F.lead("text", i).over(w))
-    return out
 
 
 def assemble_conversations(
@@ -88,17 +69,6 @@ def assemble_conversations(
             F.min("block_min_ts").alias("first_ts"),
             F.max("block_max_ts").alias("last_ts"),
         )
-    )
-
-
-def hot_conversations(df: DataFrame, threshold: int) -> DataFrame:
-    """conv_ids whose turn count exceeds ``threshold`` — drives salted
-    repartitioning for skewed conversations (SURVEY §4.1)."""
-    return (
-        df.groupBy("conv_id")
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .filter(F.col("n_turns") > threshold)
-        .select("conv_id", "n_turns")
     )
 
 

@@ -1,11 +1,11 @@
 """Deduplication operators for large-scale training-data pipelines.
 
 The reference never deduplicates (its corpus is 176 curated files), but a
-100-TB transcript/document pipeline must. Five strategies, cheapest to
-richest; each returns pair/cluster tables keyed deterministically:
+100-TB transcript/document pipeline must. Exact duplicates are one
+digest ``groupBy`` (the ``dedup_exact_groups`` query); the near-dup
+strategies here go from cheapest to richest, and each returns
+pair/cluster tables keyed deterministically:
 
-* exact           — hash-groupBy on normalized text (one shuffle on a
-                    64-bit digest, not the text bytes)
 * n-gram Jaccard  — shingle inverted index self-join, sub-quadratic
 * MinHash + LSH   — banded signature buckets, classic near-dup at scale
 * SimHash         — 64-bit fingerprint, hamming-band buckets
@@ -38,31 +38,6 @@ from cdrc_semantic_search_spark.functions.text import word_shingles
 #: ~5·10⁷ — survivable once, fatal when a degenerate key holds millions
 #: of rows. ``None`` is the explicit opt-out for exact small-corpus runs.
 DEFAULT_MAX_BUCKET = 10_000
-
-
-# --------------------------------------------------------------- exact dedup
-def exact_duplicate_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Groups of byte-identical (whitespace-normalized) texts.
-
-    Shuffles a 64-bit digest + id, not the documents: at 100 TB the
-    shuffle payload is ~16 bytes/row. Collision check is by digest only
-    (xxhash64+md5 double hash makes a false merge astronomically rare).
-    → (dup_key, n_docs, doc_ids sorted, keeper = min id).
-    """
-    norm = F.trim(F.regexp_replace(F.col(text_col), "\\s+", " "))
-    keyed = df.select(
-        F.col(id_col),
-        F.concat_ws("|", F.xxhash64(norm).cast("string"), F.md5(norm)).alias("dup_key"),
-    )
-    return (
-        keyed.groupBy("dup_key")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.array_sort(F.collect_list(id_col)).alias("doc_ids"),
-            F.min(id_col).alias("keeper"),
-        )
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 # ------------------------------------------------------------ n-gram Jaccard
@@ -300,8 +275,9 @@ def minhash_lsh_pairs(
     shuffle of the banded rows); the dropped-row count is observed on
     the first action and logged — never silent, never an eager job. Members of a skipped bucket can still pair
     through their other n_bands−1 bands; true mass-duplicates should be
-    collapsed by :func:`exact_duplicate_groups` FIRST, which is both
-    cheaper and exact for that case. Default ``DEFAULT_MAX_BUCKET``
+    collapsed by an exact digest ``groupBy`` FIRST (the
+    ``dedup_exact_groups`` query), which is both cheaper and exact for
+    that case. Default ``DEFAULT_MAX_BUCKET``
     (10k, ~5·10⁷ pairs bound per bucket); ``None`` is the explicit
     opt-out for exact runs.
 
@@ -423,8 +399,8 @@ def simhash_near_pairs(
     ``max_bucket_size``: same scale guard, default, and lazy-logging
     contract as :func:`minhash_lsh_pairs` — (band, chunk) groups larger
     than the cap are skipped (a million empty docs share simhash 0 and
-    would pair quadratically; collapse those with
-    :func:`exact_duplicate_groups` first). ``None`` = explicit opt-out
+    would pair quadratically; collapse those with an exact digest
+    ``groupBy`` first). ``None`` = explicit opt-out
     (pigeonhole completeness guarantee fully intact).
 
     An internal projection of the signatures is cached before the

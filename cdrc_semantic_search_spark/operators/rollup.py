@@ -42,44 +42,6 @@ def group_rollup(
     )
 
 
-def group_rollup_pandas(
-    df: DataFrame,
-    group_cols: list[str],
-    score_col: str,
-    text_col: str,
-    order_cols: list[str],
-    sep: str = GROUP_CONCAT_SEP,
-) -> DataFrame:
-    """Grouped-map ``applyInPandas`` twin of :func:`group_rollup` (the D4
-    shape the reference's postprocessor would naively take,
-    /root/reference/src/model.py:13-32).
-
-    Kept for API parity and as the extension point for rollups whose merge
-    logic outgrows built-ins; for the plain max+concat case PREFER
-    :func:`group_rollup` — built-ins keep map-side partial aggregation,
-    while a grouped-map UDF shuffles every row of every group to one task.
-    """
-    import pandas as pd
-
-    out_group_cols = list(group_cols)
-
-    def roll(pdf: pd.DataFrame) -> pd.DataFrame:
-        ordered = pdf.sort_values(order_cols, kind="mergesort")
-        head = {c: [pdf[c].iloc[0]] for c in out_group_cols}
-        head["score"] = [pdf[score_col].max()]
-        head["text"] = [sep.join(ordered[text_col].astype(str))]
-        head["n_chunks"] = [len(pdf)]
-        return pd.DataFrame(head)
-
-    group_ddl = ", ".join(
-        f"{c} {dict(df.dtypes)[c]}" for c in out_group_cols
-    )
-    score_type = dict(df.dtypes)[score_col]
-    return df.groupBy(*group_cols).applyInPandas(
-        roll, schema=f"{group_ddl}, score {score_type}, text string, n_chunks long"
-    )
-
-
 def distinct_count_two_phase(
     df: DataFrame, key_col: str, value_col: str, out_col: str = "n_distinct"
 ) -> DataFrame:

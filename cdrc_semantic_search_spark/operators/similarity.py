@@ -239,7 +239,6 @@ def cosine_pairs_lsh(
     n_planes: int = 16,
     n_bands: int = 4,
     seed: int = 42,
-    cache_handle: list | None = None,
 ) -> DataFrame:
     """Self-join near-neighbor pairs (id_a < id_b, cosine ≥ threshold).
 
@@ -255,20 +254,12 @@ def cosine_pairs_lsh(
     attached; at a 100-TB embedding table the shuffle would be dominated
     by redundant vector bytes.)
 
-    Two internal frames are cached: the (id, vec) base (three plan
-    branches: LSH input + both vector re-joins) and the small
-    (id, band, bucket) tag table (both self-join branches — the
-    signature matmul would otherwise run twice). Pass a list as
-    ``cache_handle`` to receive them and unpersist once the result is
-    consumed; otherwise the ContextCleaner reclaims the blocks when the
-    frames are dropped. For clustering, canonicalize.similarity_forest
-    keeps the vector through one bucket exchange instead and emits a
-    spanning forest, not the pair list.
+    For clustering, canonicalize.similarity_forest keeps the vector
+    through one bucket exchange instead and emits a spanning forest, not
+    the pair list.
     """
-    base = df.select(F.col(id_col), F.col(vec_col)).persist()
-    tagged = lsh_assign(base, vec_col, dim, n_planes, n_bands, seed).persist()
-    if cache_handle is not None:
-        cache_handle.extend([base, tagged])
+    base = df.select(F.col(id_col), F.col(vec_col))
+    tagged = lsh_assign(base, vec_col, dim, n_planes, n_bands, seed)
     a = tagged.select("band", "bucket", F.col(id_col).alias("id_a"))
     b = tagged.select("band", "bucket", F.col(id_col).alias("id_b"))
     cand = (

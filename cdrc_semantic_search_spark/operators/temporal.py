@@ -315,9 +315,7 @@ def burst_flags(
     daily: DataFrame, trailing: int = 3, num: int = 3, den: int = 2
 ) -> DataFrame:
     """The window/flag half of :func:`burst_detection` over an already
-    aggregated (key, day, cnt) frame — shared by the batch operator and
-    the streaming merge-on-read view (streaming/incremental.
-    compacted_daily_counts), so streamed ≡ batch by construction."""
+    aggregated (key, day, cnt) frame."""
     w = (
         Window.partitionBy("key")
         .orderBy("day")

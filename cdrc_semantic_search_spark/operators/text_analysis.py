@@ -127,12 +127,6 @@ def quality_gate(
     )
 
 
-def fingerprint(text_col: Column) -> Column:
-    """64-bit rolling document fingerprint: xxhash64 over the
-    whitespace-normalized text — the cheap dedup/lineage key."""
-    return F.xxhash64(F.trim(F.regexp_replace(text_col, "\\s+", " ")))
-
-
 def winnowing_fingerprints(text_col: Column, k: int = 5, window: int = 4) -> Column:
     """Winnowing (local-minima) fingerprint set over k-token shingle hashes.
 
@@ -375,8 +369,8 @@ def cooccurrence_lift(
     The (doc, token) distinct is cached — three plan branches read it
     (doc-frequency + both self-join sides). Pass a list as
     ``cache_handle`` to receive it and unpersist after consuming the
-    result (the cosine_pairs_lsh convention); otherwise the
-    ContextCleaner reclaims the blocks when references drop.
+    result; otherwise the ContextCleaner reclaims the blocks when
+    references drop.
     """
     items = df.select(
         F.col(id_col).alias("__doc"),

@@ -1300,8 +1300,7 @@ def dedup_levenshtein_blocked(spark, sf_dir):
 )
 def w7_sessionization(spark, sf_dir):
     """Batch sessionization (gap > 30 min starts a session): lag → marker
-    → running-sum session id — the batch twin of the stateful streaming
-    operator (streaming/sessionize.py), exactly oracle-checkable."""
+    → running-sum session id — exactly oracle-checkable."""
     e = load(spark, sf_dir, "events").filter("user_id < 30")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # ts is TIMESTAMP_NTZ in the parquet; go NTZ → TZ (session is UTC) → epoch

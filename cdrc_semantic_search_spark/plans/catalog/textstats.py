@@ -120,8 +120,8 @@ def ta_language_id(spark, sf_dir):
     """,
 )
 def ta_fingerprint(spark, sf_dir):
-    """Document fingerprinting — md5 over whitespace-normalized text (the
-    cross-engine-checkable twin of text_analysis.fingerprint/xxhash64)."""
+    """Document fingerprinting — md5 over whitespace-normalized text
+    (md5, unlike xxhash64, is SQL-portable, so DuckDB can check it)."""
     d = load(spark, sf_dir, "documents").filter("doc_id < 100")
     norm = F.trim(F.regexp_replace(F.col("text"), "\\s+", " "))
     return d.select("doc_id", F.md5(norm).alias("fp"))

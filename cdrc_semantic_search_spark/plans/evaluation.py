@@ -4,7 +4,7 @@ re-expressed (grid at evaluation.py:60: α ∈ {0.0, 0.75, 1.0}).
 The reference judges each retrieval with a quantized LLM; a sandboxed
 engine can do better: the fixture carries exact ground truth, so the
 judge is precision/recall of the emitted triples per α (A6 result
-accumulation → a metrics DataFrame; K6 CSV sink via sources.readers).
+accumulation → a metrics DataFrame).
 
 This is also the knob-sweep harness a production deployment uses to pick
 α / link_threshold: one broadcast index build, one extraction pass per
@@ -39,8 +39,6 @@ MODE_ALPHA_GRID: tuple[tuple[str, float], ...] = (
 
 _EFFECTIVE_ALPHA = {"sparse": 0.0, "default": 1.0}
 
-ALPHA_GRID = (0.25, 0.75, 1.0)  # legacy pure-α sweep (hybrid mode)
-
 
 def evaluate_mode_alpha_grid(
     spark: SparkSession,
@@ -72,21 +70,3 @@ def evaluate_mode_alpha_grid(
             }
         )
     return pd.DataFrame(rows)
-
-
-def evaluate_alpha_grid(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    entities_pdf: pd.DataFrame,
-    truth: pd.DataFrame,
-    alphas: tuple[float, ...] = ALPHA_GRID,
-) -> pd.DataFrame:
-    """Pure-α sweep in hybrid mode → (alpha, precision, recall, n_triples)."""
-    out = evaluate_mode_alpha_grid(
-        spark,
-        transcripts,
-        entities_pdf,
-        truth,
-        grid=tuple(("hybrid", a) for a in alphas),
-    )
-    return out[["alpha", "precision", "recall", "n_triples"]]

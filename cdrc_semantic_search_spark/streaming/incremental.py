@@ -4,18 +4,17 @@ The reference's incrementality is batch change-detection: re-ingest only
 when the remote file ledger differs (/root/reference/src/query_api.py:55-70,
 scripts/update_datastore.py:6-21). Re-expressed two ways:
 
-* ``incremental_batch_run`` — the direct analog: anti-join uncommitted
-  partitions against the commit ledger, process only those (see
-  plans/kg_pipeline.run_partitioned).
+* ``KGPipeline.run_partitioned`` — the direct analog: anti-join
+  uncommitted partitions against the commit ledger, process only those.
 * ``stream_triples`` — the Spark-native upgrade: a file-source stream over
   the transcripts directory with ``trigger(availableNow=True)`` micro-
   batches; each micro-batch runs extraction+linking via ``foreachBatch``
   and commits to the ledger catalog. Checkpointed: a crashed run resumes
   from the stream checkpoint, and per-batch ledger commits keep outputs
   idempotent (batch id = partition key).
-* ``windowed_turn_counts`` — event-time windowed aggregation with
-  watermarking (late-data policy) over the turn stream: the monitoring
-  metric stream (turns/sec, triples/min) a production deployment tails.
+
+``stream_pq_upsert`` / ``compacted_pq_codes`` keep a PQ vector index
+fresh the same way: ledgered code deltas, merged on read.
 """
 
 from __future__ import annotations
@@ -123,125 +122,6 @@ def stream_triples(
         .start()
     )
     q.awaitTermination()
-
-
-def stream_join_turns_metadata(
-    turn_stream: DataFrame,
-    meta_stream: DataFrame,
-    watermark: str = "1 hour",
-    max_lag: str = "24 hours",
-) -> DataFrame:
-    """Stream-stream INNER join: turns ⋈ per-conversation metadata events.
-
-    Both sides carry watermarks and the join predicate bounds the
-    event-time distance (turn within ``max_lag`` after its conversation's
-    registration event) — the two conditions Structured Streaming needs
-    to evict join state instead of buffering both streams forever.
-    ``meta_stream`` columns: (m_conv_id, m_ts, channel).
-    """
-    t = turn_stream.withWatermark("ts", watermark)
-    m = meta_stream.withWatermark("m_ts", watermark)
-    return t.join(
-        m,
-        F.expr(
-            f"conv_id = m_conv_id AND ts >= m_ts AND ts <= m_ts + INTERVAL {max_lag}"
-        ),
-        "inner",
-    ).drop("m_conv_id")
-
-
-def stream_dedup_exact(
-    stream_df: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact deduplication — the streaming twin of
-    operators/dedup.exact_duplicate_groups for document/turn streams.
-
-    Keys on the 64-bit whitespace-normalized fingerprint
-    (text_analysis.fingerprint) and keeps the FIRST arrival per key via
-    ``dropDuplicatesWithinWatermark``: duplicate-key state is retained
-    only within the event-time watermark, so state is bounded on an
-    unbounded stream (the batch operator's full-corpus groupBy has no
-    such bound). A duplicate arriving later than the watermark is
-    re-admitted — the standard recall/state trade every streaming
-    training-data pipeline makes; tighten with a periodic batch dedup
-    over the materialized table.
-    """
-    from cdrc_semantic_search_spark.operators.text_analysis import fingerprint
-
-    return (
-        stream_df.withColumn("__fp", fingerprint(F.col(text_col)))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["__fp"])
-        .drop("__fp")
-    )
-
-
-def enrich_turns_with_window_rate(
-    stream_df: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Windowed aggregation JOINED back to the stream, append mode —
-    chained stateful operators (agg → stream-stream join, Spark 3.4+).
-
-    Each turn is annotated with its (window, role) turn count — the
-    'how busy was this channel when this turn arrived' enrichment a
-    rate-limiter or sampling stage consumes. Both sides carry the same
-    event-time window column and watermark, so the join is a pure
-    equality join on (win, role) whose state the watermark evicts; in
-    append mode a row emits once its window is sealed on BOTH sides —
-    exactly-once semantics with bounded state on an unbounded stream.
-    """
-    win = F.window("ts", window)
-    # the raw side must carry exactly ONE event-time column into the join:
-    # the derived window inherits event-time semantics from ts, so ts
-    # itself is dropped (streams forbid two event-time columns per side)
-    turns = stream_df.withWatermark("ts", watermark).select(
-        "conv_id", "turn_idx", "role", win.alias("win")
-    )
-    counts = (
-        stream_df.withWatermark("ts", watermark)
-        .groupBy(win.alias("win"), "role")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_turns_in_window"))
-    )
-    return turns.join(counts, ["win", "role"]).select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        F.col("win.start").alias("window_start"),
-        "n_turns_in_window",
-    )
-
-
-def windowed_turn_counts(
-    stream_df: DataFrame,
-    window: str = "10 minutes",
-    slide: str | None = None,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Event-time windowed turn counts per role with a late-data watermark.
-
-    State is bounded by the watermark (Spark drops windows older than
-    max(event_time) − watermark) — the standard pattern for unbounded
-    streams at scale.
-    """
-    win = (
-        F.window("ts", window, slide) if slide else F.window("ts", window)
-    )
-    return (
-        stream_df.withWatermark("ts", watermark)
-        .groupBy(win.alias("win"), "role")
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "role",
-            "n_turns",
-        )
-    )
 
 
 def stream_pq_upsert(
@@ -358,64 +238,3 @@ def compacted_pq_codes(spark: SparkSession, catalog: ParquetTableCatalog,
         .filter(F.col("__rn") == 1)
         .select("c_id", "codes")
     )
-
-
-def stream_daily_counts(
-    spark: SparkSession,
-    input_dir: str,
-    catalog: ParquetTableCatalog,
-    checkpoint_dir: str,
-    key_col: str,
-    ts_col: str = "ts",
-    source_schema: str | None = None,
-    table: str = "daily_count_deltas",
-) -> None:
-    """Streaming maintenance of the per-(key, day) activity counts that
-    feed burst detection: each micro-batch commits its OWN (key, day,
-    cnt) rollup as a ledgered delta partition — counts are additive, so
-    merge-on-read is a SUM (not latest-wins like PQ codes), and no
-    read-modify-write of the count table happens per batch. Re-delivered
-    batches overwrite their partition idempotently.
-
-    The temporal-KG consumer: keep edge/entity activity counters fresh
-    at stream time so :func:`compacted_daily_counts` +
-    operators/temporal.burst_flags surfaces "suddenly hot" keys without
-    rescanning history.
-    """
-    snapshot = f"stream:{os.path.basename(input_dir)}"
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        daily = batch_df.groupBy(
-            F.col(key_col).alias("key"), F.to_date(F.col(ts_col)).alias("day")
-        ).agg(F.count(F.lit(1)).alias("cnt"))
-        catalog.overwrite_partition(
-            daily, table, partition=str(batch_id), source_snapshot=snapshot
-        )
-
-    schema = source_schema or f"{key_col} string, {ts_col} timestamp"
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(input_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def compacted_daily_counts(
-    spark: SparkSession,
-    catalog: ParquetTableCatalog,
-    table: str = "daily_count_deltas",
-) -> DataFrame:
-    """Merge-on-read view of the streamed daily counts: SUM across
-    committed delta partitions (additive merge — a key/day seen in many
-    batches accumulates, bit-equal to a batch rollup of the union).
-    Feed to operators/temporal.burst_flags for streamed ≡ batch bursts.
-    """
-    deltas = catalog.read_committed(spark, table)
-    return deltas.groupBy("key", "day").agg(F.sum("cnt").alias("cnt"))

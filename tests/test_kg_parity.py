@@ -127,26 +127,28 @@ def test_fused_extraction_results_unchanged_by_input_partitioning(
 
 
 def test_per_turn_text_equality_under_stable_ordering(spark, fixture, spark_fixture):
-    """input_hint invariant: after flowing through the engine's window
-    ordering, every (conv_id, turn_idx) carries byte-identical text."""
-    tdf, _ = spark_fixture
-    from cdrc_semantic_search_spark.operators.assembly import with_turn_order
+    """input_hint invariant: whatever the partitioning, each assembled
+    conversation is its turns' byte-identical text in turn_idx order."""
+    from cdrc_semantic_search_spark.operators.assembly import (
+        TURN_SEP,
+        assemble_conversations,
+    )
 
-    out = (
-        with_turn_order(tdf)
-        .select("conv_id", "turn_idx", "text", "rn")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    src = (
-        fixture.transcripts[["conv_id", "turn_idx", "text"]]
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(out[["conv_id", "turn_idx", "text"]], src)
-    # rn is dense and equals turn_idx + 1 (turn_idx is 0-based dense)
-    assert (out["rn"] == out["turn_idx"] + 1).all()
+    tdf, _ = spark_fixture
+    src = fixture.transcripts.sort_values(["conv_id", "turn_idx"]).groupby("conv_id")["text"]
+    want = pd.DataFrame({"text": src.agg(TURN_SEP.join), "n": src.size()})
+    # block_size=3 splits conversations across blocks, so the block-level
+    # concat order is checked as well as the turn-level one
+    for block_size in (1024, 3):
+        got = (
+            assemble_conversations(tdf.repartition(7), block_size=block_size)
+            .toPandas()
+            .set_index("conv_id")
+            .sort_index()
+        )
+        assert list(got.index) == list(want.index)
+        assert (got["conversation_text"] == want["text"]).all()
+        assert (got["n_turns"] == want["n"]).all()
 
 
 def test_parity_at_canonical_fixture_size(spark):
@@ -265,3 +267,31 @@ def test_edge_diff_statuses(spark):
         "C": (2, 5, "changed"),
         "D": (3, 3, "stable"),
     }
+
+
+def test_mode_alpha_grid_covers_reference_sweep(spark, fixture, spark_fixture):
+    """The reference sweeps α ∈ {0.0, 0.75, 1.0} (evaluation.py:60); the
+    engine covers those exact points as (mode, α) pairs — sparse ≡ α=0,
+    default ≡ α=1 (utils.py:30-31)."""
+    from cdrc_semantic_search_spark.plans.evaluation import evaluate_mode_alpha_grid
+
+    tdf, _ = spark_fixture
+    small = tdf.filter(F.col("conv_id") < "conv_000020")
+    truth = fixture.truth_triples[fixture.truth_triples["conv_id"] < "conv_000020"]
+    out = evaluate_mode_alpha_grid(spark, small, fixture.entities, truth)
+    assert list(out.columns) == [
+        "query_mode", "alpha", "effective_alpha", "precision", "recall", "n_triples",
+    ]
+    assert list(out["query_mode"]) == ["sparse", "hybrid", "default"]
+    assert list(out["effective_alpha"]) == [0.0, 0.75, 1.0]
+    # hybrid@0.75 is the tuned operating point — it must not trail either pure mode
+    hyb = out.set_index("query_mode")
+    assert hyb.loc["hybrid", "recall"] >= hyb.loc["sparse", "recall"] - 1e-9
+    assert (out["n_triples"] > 0).all()
+    # a pure-α sweep in hybrid mode holds the P/R gate at each point
+    hybrid = evaluate_mode_alpha_grid(
+        spark, small, fixture.entities, truth, grid=(("hybrid", 0.75), ("hybrid", 1.0))
+    )
+    assert list(hybrid["alpha"]) == [0.75, 1.0]
+    assert (hybrid["precision"] >= 0.9).all()
+    assert (hybrid["recall"] >= 0.9).all()

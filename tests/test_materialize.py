@@ -180,8 +180,8 @@ def test_footer_metadata_equals_spark_read(spark, fixture, spark_fixture, tmp_pa
 
 def test_footer_reads_and_counts_of_partitions(spark, tmp_path, jobs_of):
     """Ledger commits count rows from the footers (empty writes too),
-    reads of committed partitions fire no job, and an overwrite fires
-    exactly the jobs of its write."""
+    reads of committed partitions fire no job and skip data that has no
+    marker, and an overwrite fires exactly the jobs of its write."""
     cat = ParquetTableCatalog(str(tmp_path / "cat"))
     df = spark.range(50).select(
         F.col("id").cast("int").alias("n"),
@@ -205,6 +205,10 @@ def test_footer_reads_and_counts_of_partitions(spark, tmp_path, jobs_of):
     assert _rows(got) == _rows(plain) == _rows(df)
     assert jobs_of(lambda: cat.read_committed(spark, "t")) == ([], [])
     assert jobs_of(lambda: cat.read_partition(spark, "t", "0")) == ([], [])
+    # data that landed without its ledger marker stays invisible
+    df.write.parquet(cat._partition_path("t", "9"))
+    assert "9" not in cat.committed_partitions("t")
+    assert _rows(cat.read_committed(spark, "t")) == _rows(df)
 
     write_jobs, _ = jobs_of(
         lambda: df.write.mode("overwrite").parquet(str(tmp_path / "bare"))

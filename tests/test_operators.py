@@ -175,16 +175,19 @@ def test_lsh_pairs_subset_of_true_pairs_and_finds_clones(spark):
         assert unit[a] @ unit[b] >= 0.99 - 1e-6
 
 
+def test_cosine_pairs_lsh_leaves_nothing_cached(spark):
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    rng = np.random.default_rng(2)
+    mat = rng.standard_normal((12, 8))
+    df = spark.createDataFrame(
+        pd.DataFrame({"vid": range(12), "vec": [list(map(float, v)) for v in mat]})
+    )
+    similarity.cosine_pairs_lsh(df, "vid", "vec", dim=8, threshold=0.5).collect()
+    assert jsc.getPersistentRDDs().size() == before
+
+
 # --------------------------------------------------------------------- dedup
-def test_exact_duplicate_groups(spark):
-    rows = [(1, "hello  world"), (2, "hello world"), (3, "different"), (4, "hello world ")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = dedup.exact_duplicate_groups(df, "doc_id", "text").collect()
-    assert len(out) == 1
-    assert out[0]["doc_ids"] == [1, 2, 4]
-    assert out[0]["keeper"] == 1
-
-
 def test_ngram_jaccard_pairs(spark):
     a = "the quick brown fox jumps over the lazy dog today"
     b = "the quick brown fox jumps over the lazy dog tonight"
@@ -520,15 +523,6 @@ def test_bpe_tokens_split_runs_and_contractions(spark):
         (F.size(bpe_tokens(F.col("text"))) >= token_count(F.col("text"))).alias("ge")
     ).collect()
     assert all(r.ge for r in cmp)
-
-
-def test_fingerprint_ws_invariant(spark):
-    df = spark.createDataFrame(
-        [(1, "a  b\tc"), (2, "a b c"), (3, "a b d")], "doc_id long, text string"
-    )
-    out = df.select("doc_id", text_analysis.fingerprint(F.col("text")).alias("fp")).toPandas()
-    fp = dict(zip(out["doc_id"], out["fp"]))
-    assert fp[1] == fp[2] != fp[3]
 
 
 def test_winnowing_overlap(spark):
@@ -1441,21 +1435,6 @@ def test_canonicalize_embedded_clusters_duplicates(spark):
     got = dict((r["id"], r["canonical_id"]) for r in out.collect())
     assert got["m6"] == "m0" and got["m0"] == "m0"
     assert got["m3"] == "m3"
-
-
-def test_group_rollup_pandas_equals_builtin(spark):
-    rows = [
-        ("d1", 2, 0.5, "second"),
-        ("d1", 1, 0.9, "first"),
-        ("d1", 3, 0.1, "third"),
-        ("d2", 1, 0.1, "only"),
-    ]
-    df = spark.createDataFrame(rows, "doc string, rank int, score double, chunk string")
-    a = rollup.group_rollup(df.repartition(4), ["doc"], "score", "chunk", ["rank"])
-    b = rollup.group_rollup_pandas(df.repartition(3), ["doc"], "score", "chunk", ["rank"])
-    got_a = {tuple(r) for r in a.select("doc", "score", "text", "n_chunks").collect()}
-    got_b = {tuple(r) for r in b.select("doc", "score", "text", "n_chunks").collect()}
-    assert got_a == got_b
 
 
 def test_bigram_repetition_known_values(spark):

@@ -5,18 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cdrc_semantic_search_spark.operators.assembly import (
-    hot_conversations,
-    salted_repartition,
-)
-
-
-def test_hot_conversations_detects_skew(spark, spark_fixture):
-    tdf, _ = spark_fixture
-    hot = hot_conversations(tdf, threshold=100).toPandas()
-    # fixture guarantees ~5% hot conversations (120-600 turns)
-    assert len(hot) >= 1
-    assert (hot["n_turns"] > 100).all()
+from cdrc_semantic_search_spark.operators.assembly import salted_repartition
 
 
 def test_salted_repartition_balances_hot_conversations(spark, spark_fixture):
@@ -95,7 +84,6 @@ def test_salted_join_matches_plain_join_and_spreads_lanes(spark, plan_of):
     """Row multiset identical to the plain join for every supported join
     type; the exchange partitions on (key, lane); a hot key actually
     occupies every lane; bad args raise."""
-    import pytest as _pytest
     from pyspark.sql import functions as F
 
     from cdrc_semantic_search_spark.operators.assembly import salted_join
@@ -123,9 +111,9 @@ def test_salted_join_matches_plain_join_and_spreads_lanes(spark, plan_of):
     plan = plan_of(salted_join(fact, dim, ["k"], 8, ["row_id"]))
     assert "__lane" in plan
 
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         salted_join(fact, dim, ["k"], 0, ["row_id"])
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         salted_join(fact, dim, ["k"], 4, ["row_id"], how="right")
 
 

@@ -373,93 +373,6 @@ def test_failed_compaction_write_leaves_catalog_unchanged(
     )
 
 
-def test_stream_stream_join_bounded_state(spark, spark_fixture, transcript_dir, tmp_path):
-    """Turns join their conversation's registration event within the lag
-    bound; a registration far in the past joins nothing (the event-time
-    range predicate, not just the key match, gates the join)."""
-    tdf, _ = spark_fixture
-    stale_conv = tdf.select("conv_id").first()["conv_id"]
-    meta = (
-        tdf.groupBy("conv_id")
-        .agg(F.min("ts").alias("m_ts"))
-        # one conversation registered 90 days before its turns: outside
-        # max_lag, so its turns must NOT join
-        .withColumn(
-            "m_ts",
-            F.when(
-                F.col("conv_id") == stale_conv,
-                F.col("m_ts") - F.expr("INTERVAL 90 DAYS"),
-            ).otherwise(F.col("m_ts")),
-        )
-        .withColumn("channel", F.concat(F.lit("ch_"), F.col("conv_id")))
-        .select(F.col("conv_id").alias("m_conv_id"), "m_ts", "channel")
-    )
-    meta_dir = str(tmp_path / "meta")
-    meta.coalesce(1).write.mode("overwrite").parquet(meta_dir)
-    turn_stream = incremental.transcript_stream(spark, transcript_dir)
-    meta_stream = spark.readStream.schema(
-        "m_conv_id string, m_ts timestamp, channel string"
-    ).parquet(meta_dir)
-    joined = incremental.stream_join_turns_metadata(
-        turn_stream, meta_stream, watermark="1 hour", max_lag="30 days"
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ss_join")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ss"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("select * from ss_join")
-    n_turns = tdf.count()
-    n_stale = tdf.filter(F.col("conv_id") == stale_conv).count()
-    assert n_stale > 0
-    # every in-window turn joined; the back-dated conversation joined NOTHING
-    assert got.count() == n_turns - n_stale
-    assert got.filter(F.col("conv_id") == stale_conv).count() == 0
-    assert got.filter(F.col("channel") != F.concat(F.lit("ch_"), F.col("conv_id"))).count() == 0
-
-
-def test_stream_dedup_exact_keeps_one_per_fingerprint(spark, tmp_path):
-    """Duplicated texts (whitespace-variant) collapse to one row per
-    fingerprint within the watermark; distinct texts all survive."""
-    import datetime as dt
-
-    base = dt.datetime(2026, 1, 1, 12, 0, 0)
-    rows = [
-        (1, "alpha beta gamma", base),
-        (2, "alpha  beta\tgamma", base + dt.timedelta(minutes=1)),  # ws-dup of 1
-        (3, "delta epsilon", base + dt.timedelta(minutes=2)),
-        (4, "alpha beta gamma", base + dt.timedelta(minutes=3)),  # exact dup of 1
-        (5, "zeta eta", base + dt.timedelta(minutes=4)),
-    ]
-    src = str(tmp_path / "docs")
-    spark.createDataFrame(rows, "doc_id long, text string, ts timestamp").coalesce(
-        1
-    ).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp").parquet(src)
-    )
-    deduped = incremental.stream_dedup_exact(stream, watermark="1 hour")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt3"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("select * from dedup_stream").collect()
-    texts = sorted(r.doc_id for r in got)
-    # one survivor per fingerprint: {1,2,4} collapse to one row; 3 and 5 kept
-    assert len(got) == 3
-    assert 3 in texts and 5 in texts
-    assert len({1, 2, 4} & set(texts)) == 1
-
-
 def test_session_window_streaming_matches_batch(spark, spark_fixture, transcript_dir, tmp_path):
     """F.session_window under readStream + watermark: sessions sealed by
     the watermark match the batch session_window aggregation exactly."""
@@ -499,83 +412,6 @@ def test_session_window_streaming_matches_batch(spark, spark_fixture, transcript
     # append mode emits only watermark-sealed sessions — a subset of batch,
     # but every emitted session must match the batch result exactly
     assert got_set and got_set <= want_set
-
-
-def test_windowed_counts_with_watermark(spark, spark_fixture, transcript_dir, tmp_path):
-    stream = incremental.transcript_stream(spark, transcript_dir)
-    agg = incremental.windowed_turn_counts(stream, window="1 hour", watermark="2 hours")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("select * from win_counts")
-    # append mode emits only windows sealed by the watermark; compare those
-    batch = spark.read.parquet(transcript_dir)
-    max_ts = batch.agg(F.max("ts")).collect()[0][0]
-    want = (
-        batch.groupBy(F.window("ts", "1 hour").alias("win"), "role")
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(F.col("win.start").alias("window_start"), "role", "n_turns")
-        .filter(F.col("win.end") < F.lit(max_ts) - F.expr("INTERVAL 2 HOURS"))
-    )
-    got_set = {
-        (r["window_start"], r["role"], r["n_turns"])
-        for r in got.join(
-            want.select(F.col("window_start").alias("ws")).distinct(),
-            got["window_start"] == F.col("ws"),
-            "left_semi",
-        ).collect()
-    }
-    want_set = {(r["window_start"], r["role"], r["n_turns"]) for r in want.collect()}
-    assert want_set and want_set <= got_set
-
-
-def test_windowed_agg_join_stream_append_mode(spark, spark_fixture, transcript_dir, tmp_path):
-    """Chained stateful operators: windowed aggregation stream-stream
-    JOINED back to the raw stream under one watermark, append mode —
-    every emitted (turn, window count) row must match the batch twin."""
-    stream = incremental.transcript_stream(spark, transcript_dir)
-    joined = incremental.enrich_turns_with_window_rate(
-        stream, window="1 hour", watermark="2 hours"
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("win_join")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_wj"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("select * from win_join")
-    batch = spark.read.parquet(transcript_dir)
-    max_ts = batch.agg(F.max("ts")).collect()[0][0]
-    win = F.window("ts", "1 hour")
-    counts = batch.groupBy(win.alias("win"), "role").agg(
-        F.count(F.lit(1)).cast("long").alias("n_turns_in_window")
-    )
-    want = (
-        batch.select("conv_id", "turn_idx", "role", win.alias("win"))
-        .join(counts, ["win", "role"])
-        # only windows the watermark could have sealed are comparable
-        .filter(F.col("win.end") < F.lit(max_ts) - F.expr("INTERVAL 2 HOURS"))
-        .select(
-            "conv_id", "turn_idx", "role",
-            F.col("win.start").alias("window_start"), "n_turns_in_window",
-        )
-    )
-    want_set = {tuple(r) for r in want.collect()}
-    got_set = {tuple(r) for r in got.collect()}
-    # every sealed batch row must have been emitted...
-    assert want_set and want_set <= got_set
-    # ...and for sealed windows the stream emitted EXACTLY the batch rows
-    sealed_starts = {r[3] for r in want_set}
-    assert {r for r in got_set if r[3] in sealed_starts} == want_set
 
 
 def test_stream_pq_upsert_equals_batch_rebuild(spark, tmp_path):
@@ -783,66 +619,3 @@ def test_batch_upsert_folds_streamed_deltas(spark, tmp_path):
     want2 = topk_pq_adc(spark, q, mk(range(22), final), books, k=5).toPandas()
     got2 = topk_pq_adc_index(spark, q, catalog, k=5).toPandas()
     assert pair(got2) == pair(want2)
-
-
-def test_streamed_daily_counts_equal_batch_bursts(spark, tmp_path):
-    """Streamed per-batch (key, day) count deltas, SUM-merged on read,
-    must reproduce the batch burst_detection output exactly — including
-    keys/days split across micro-batches. Restarting on the same
-    checkpoint adds nothing."""
-    import datetime
-
-    from cdrc_semantic_search_spark.operators.temporal import (
-        burst_detection,
-        burst_flags,
-    )
-
-    rows = []
-    per_day = {1: 2, 2: 2, 3: 2, 4: 9, 5: 3, 6: 1, 7: 30}
-    for d, n in per_day.items():
-        for i in range(n):
-            rows.append(("click", datetime.datetime(2024, 1, d, 8, i % 60)))
-            if i % 2 == 0:
-                rows.append(("view", datetime.datetime(2024, 1, d, 9, i % 60)))
-    ev = spark.createDataFrame(rows, "event_type string, ts timestamp")
-    src = str(tmp_path / "ev_src")
-    # several files so maxFilesPerTrigger-less availableNow still splits
-    # day/key groups across micro-batch boundaries
-    ev.repartition(6).write.mode("overwrite").parquet(src)
-
-    cat = ParquetTableCatalog(str(tmp_path / "ev_cat"))
-    incremental.stream_daily_counts(
-        spark, src, cat, checkpoint_dir=str(tmp_path / "ev_ckpt"),
-        key_col="event_type",
-        source_schema="event_type string, ts timestamp",
-    )
-    assert len(cat.ledger("daily_count_deltas")) >= 2, "want multiple batches"
-    merged = incremental.compacted_daily_counts(spark, cat)
-    streamed = {
-        tuple(r) for r in burst_flags(merged).collect()
-    }
-    batch = {
-        tuple(r) for r in burst_detection(ev, "event_type").collect()
-    }
-    assert streamed == batch
-    n_parts = len(cat.ledger("daily_count_deltas"))
-    incremental.stream_daily_counts(
-        spark, src, cat, checkpoint_dir=str(tmp_path / "ev_ckpt"),
-        key_col="event_type",
-        source_schema="event_type string, ts timestamp",
-    )
-    assert len(cat.ledger("daily_count_deltas")) == n_parts
-    assert {tuple(r) for r in burst_flags(
-        incremental.compacted_daily_counts(spark, cat)
-    ).collect()} == batch
-
-    # a partition whose data landed but whose marker did not is invisible
-    counts = {tuple(r) for r in incremental.compacted_daily_counts(spark, cat).collect()}
-    first = sorted(cat.committed_partitions("daily_count_deltas"))[0]
-    cat.read_partition(spark, "daily_count_deltas", first).write.parquet(
-        cat._partition_path("daily_count_deltas", "999")
-    )
-    assert "999" not in cat.committed_partitions("daily_count_deltas")
-    assert {
-        tuple(r) for r in incremental.compacted_daily_counts(spark, cat).collect()
-    } == counts
