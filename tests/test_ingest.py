@@ -1,119 +1,24 @@
+"""Evaluation sweeps over the ingested fixture: precision/recall of the
+emitted triples per (query_mode, α) point against the fixture's ground
+truth."""
+
 from __future__ import annotations
 
-import json
-
-import pytest
 from pyspark.sql import functions as F
 
-from cdrc_semantic_search_spark.plans import ingest, log_mining
-from cdrc_semantic_search_spark.plans.evaluation import evaluate_alpha_grid
-from cdrc_semantic_search_spark.sources import readers
-
-CATALOGUE = [
-    {
-        "id": "ds1",
-        "title": "Deprivation Index",
-        "url": "https://example.org/ds1",
-        "notes": "<p>Rich <b>notes</b> here</p>",
-        "resources": [
-            {"name": "Data Profile", "url": "https://x/files/p1.pdf", "format": "PDF", "id": "r1", "last_modified": "2024-01-01"},
-            {"name": "Flyer 2024", "url": "https://x/files/f1.pdf", "format": "PDF", "id": "r2", "last_modified": "2024-02-01"},
-            {"name": "Raw CSV", "url": "https://x/files/d.csv", "format": "CSV", "id": "r3", "last_modified": "2024-03-01"},
-            {"name": "Profile empty url", "url": "", "format": "PDF", "id": "r4", "last_modified": "2024-03-01"},
-        ],
-    },
-    {"id": "ds2", "title": "No Resources", "url": "u", "notes": "text", "resources": None},
-    {"id": "ds3", "title": "No Notes", "url": "u", "notes": None,
-     "resources": [{"name": "profile x", "url": "https://x/p3.pdf", "format": "pdf", "id": "r5", "last_modified": "2024-04-01"}]},
-]
-
-
-@pytest.fixture(scope="module")
-def catalogue_df(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("cat")
-    path = str(d / "catalogue.json")
-    with open(path, "w") as f:
-        for rec in CATALOGUE:
-            f.write(json.dumps(rec) + "\n")
-    return readers.read_json_catalogue(spark, path)
-
-
-def test_flatten_resources_filters_and_templates(spark, catalogue_df):
-    files = ingest.flatten_resources(catalogue_df).toPandas().set_index("id")
-    # only profile/flyer resources with non-empty url survive (P1/P3)
-    assert set(files.index) == {"r1", "r2", "r5"}
-    assert files.loc["r1", "parent_id"] == "ds1"
-    assert files.loc["r1", "filename"] == "profile-r1.pdf"
-    assert files.loc["r2", "filename"] == "flyer-r2.pdf"
-    assert files.loc["r1", "url_basename"] == "p1.pdf"
-
-
-def test_notes_documents_strip_html(spark, catalogue_df):
-    notes = ingest.notes_documents(catalogue_df).toPandas().set_index("doc_id")
-    # ds3 has no notes → excluded (P2)
-    assert set(notes.index) == {"notes-ds1", "notes-ds2"}
-    assert notes.loc["notes-ds1", "text"] == "Deprivation Index\n\nRich notes here"
-
-
-def test_enrich_documents_two_hop_join(spark, catalogue_df):
-    files = ingest.flatten_resources(catalogue_df)
-    docs = spark.createDataFrame(
-        [("profile-r1",), ("notes-ds2",), ("profile-zzz",)], "doc_id string"
-    )
-    out = ingest.enrich_documents(docs, files, catalogue_df).toPandas().set_index("doc_id")
-    assert out.loc["profile-r1", "parent_id"] == "ds1"
-    assert out.loc["profile-r1", "title"] == "Deprivation Index"
-    assert out.loc["notes-ds2", "parent_id"] == "ds2"
-    assert "profile-zzz" not in out.index  # missing parent dropped (inner)
-
-
-def test_parse_catalogue_json_column(spark):
-    df = spark.createDataFrame([(json.dumps(CATALOGUE[0]),)], "js string")
-    out = readers.parse_catalogue_json(df, "js").collect()[0]
-    assert out["id"] == "ds1" and len(out["resources"]) == 4
-
-
-def test_log_mining(spark):
-    lines = [
-        'GET /search?q=retail%20data&sort_by=x HTTP/1.1',
-        'GET /search?q=retail+data HTTP/1.1',
-        'GET /other?nope=1',
-        'GET /s?search_api_fulltext=Retail%20Data&page=2',
-        'GET /s?search_api_fulltext=housing',
-    ]
-    drupal = spark.createDataFrame([(l,) for l in lines[:3]], "value string")
-    apache = spark.createDataFrame([(l,) for l in lines[3:]], "value string")
-    out = log_mining.mine_query_counts(drupal, apache).toPandas()
-    assert list(out["query"]) == ["retail data", "housing"]
-    assert list(out["n"]) == [3, 1]
-
-
-def test_readers_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    readers.write_csv(df, str(tmp_path / "c"))
-    back = readers.read_csv(spark, str(tmp_path / "c"), schema="k long, v string")
-    assert {tuple(r) for r in back.collect()} == {(1, "a"), (2, "b")}
-    readers.write_json(df, str(tmp_path / "j"))
-    back = spark.read.schema("k long, v string").json(str(tmp_path / "j"))
-    assert back.count() == 2
-
-
-def test_read_binary_dir(spark, tmp_path):
-    sub = tmp_path / "docs" / "nested"
-    sub.mkdir(parents=True)
-    (sub / "a.pdf").write_bytes(b"%PDF-fake")
-    (tmp_path / "docs" / "b.txt").write_text("hello")
-    out = readers.read_binary_dir(spark, str(tmp_path / "docs"), glob="*.pdf").collect()
-    assert len(out) == 1 and bytes(out[0]["content"]) == b"%PDF-fake"
+from cdrc_semantic_search_spark.plans.evaluation import evaluate_mode_alpha_grid
 
 
 def test_alpha_grid_evaluation(spark, fixture, spark_fixture):
+    """A pure-α sweep in hybrid mode holds the P/R gate at each point."""
     tdf, _ = spark_fixture
     small = tdf.filter(F.col("conv_id") < "conv_000020")
     truth = fixture.truth_triples[
         fixture.truth_triples["conv_id"] < "conv_000020"
     ]
-    out = evaluate_alpha_grid(spark, small, fixture.entities, truth, alphas=(0.75, 1.0))
+    out = evaluate_mode_alpha_grid(
+        spark, small, fixture.entities, truth, grid=(("hybrid", 0.75), ("hybrid", 1.0))
+    )
     assert set(out["alpha"]) == {0.75, 1.0}
     assert (out["precision"] >= 0.9).all()
     assert (out["recall"] >= 0.9).all()
@@ -123,8 +28,6 @@ def test_mode_alpha_grid_covers_reference_sweep(spark, fixture, spark_fixture):
     """The reference sweeps α ∈ {0.0, 0.75, 1.0} (evaluation.py:60); the
     engine covers those exact points as (mode, α) pairs — sparse ≡ α=0,
     default ≡ α=1 (utils.py:30-31)."""
-    from cdrc_semantic_search_spark.plans.evaluation import evaluate_mode_alpha_grid
-
     tdf, _ = spark_fixture
     small = tdf.filter(F.col("conv_id") < "conv_000020")
     truth = fixture.truth_triples[fixture.truth_triples["conv_id"] < "conv_000020"]
