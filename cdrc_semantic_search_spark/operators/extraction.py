@@ -1,14 +1,20 @@
 """Spark mention/relation extraction and entity linking over transcript turns.
 
-One ``mapInArrow`` family wrapping the pure extraction core
-(operators/extraction_core.py).  The entity catalogue and the entity index
-are broadcast once (``sc.broadcast``); each Python worker builds the alias
-automaton a single time per broadcast epoch, then streams Arrow batches
-through it.  Both operators share one worker-side linker (:class:`_Linker`):
-exact alias hits first, then a per-broadcast-epoch cache of embedding
-links filled by one batched ``_topk_blend`` call per batch for the
-surfaces it has not seen.  The Python boundary is crossed once per batch,
-with no pandas on either side of the worker.
+One worker body, :func:`extract_batch`, wraps the pure extraction core
+(operators/extraction_core.py) in a ``mapInArrow`` pass.  The entity
+catalogue and the entity index are broadcast once (``sc.broadcast``);
+each Python worker builds the alias automaton a single time per broadcast
+epoch, then streams Arrow batches through it.  The body extracts each
+turn once and links its surfaces with one worker-side linker
+(:class:`_Linker`): exact alias hits first, then a per-broadcast-epoch
+cache of embedding links filled by one batched ``_topk_blend`` call per
+batch for the surfaces it has not seen.  The Python boundary is crossed
+once per batch, with no pandas on either side of the worker.
+
+Three operators are cases of that body: ``extract_linked_triples`` and
+``extract_linked_mentions`` build one output each, and ``extract_linked``
+builds both in one tagged frame, which a caller that writes both persists
+once and projects with :func:`triple_rows` / :func:`mention_rows`.
 
 The plan is map-only: extraction, alias linking and the embedding fallback
 all run inside one Arrow stage against broadcast-only state, so the fact
@@ -25,6 +31,7 @@ from __future__ import annotations
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from cdrc_semantic_search_spark.encoder import normalize_surface
 from cdrc_semantic_search_spark.operators.extraction_core import (
@@ -59,16 +66,26 @@ def broadcast_catalogue(spark, entities_pdf: pd.DataFrame):
     return spark.sparkContext.broadcast((uuid.uuid4().hex, payload))
 
 
-MENTIONS_SCHEMA = (
-    "conv_id string, turn_idx int, ts timestamp, mention_idx int, surface string, "
-    "start int, end int, exact boolean, "
+_TURN_DDL = "conv_id string, turn_idx int, ts timestamp"
+_TRIPLE_DDL = "subj_entity_id string, pred string, obj_entity_id string, score double"
+_MENTION_DDL = (
+    "mention_idx int, surface string, start int, end int, exact boolean, "
     "entity_id string, link_score double, link_method string"
 )
+TRIPLES_SCHEMA = f"{_TURN_DDL}, {_TRIPLE_DDL}"
+MENTIONS_SCHEMA = f"{_TURN_DDL}, {_MENTION_DDL}"
+#: both outputs in one frame: ``is_triple`` tags each row, and a row is
+#: NULL in the other output's columns
+EXTRACTION_SCHEMA = f"is_triple boolean, {_TURN_DDL}, {_TRIPLE_DDL}, {_MENTION_DDL}"
 
-TRIPLES_SCHEMA = (
-    "conv_id string, turn_idx int, ts timestamp, "
-    "subj_entity_id string, pred string, obj_entity_id string, score double"
-)
+
+def _names(ddl: str) -> list[str]:
+    return [field.split()[0] for field in ddl.split(", ")]
+
+
+TRIPLE_COLUMNS = _names(TRIPLES_SCHEMA)
+MENTION_COLUMNS = _names(MENTIONS_SCHEMA)
+EXTRACTION_COLUMNS = _names(EXTRACTION_SCHEMA)
 
 # per-worker embedding-link cache, keyed by (index broadcast token, link
 # settings): normalized surface → (entity_id|None, score). Below-threshold
@@ -78,7 +95,7 @@ _LINK_CACHE: dict[tuple, dict[str, tuple[str | None, float]]] = {}
 
 
 class _Linker:
-    """Worker-side linker shared by both fused operators.
+    """Worker-side linker of :func:`extract_batch`.
 
     ``links(keys)`` maps each normalized surface to ``(entity_id|None,
     score, link_method|None)``: alias hits are ``(id, 1.0, "alias")``,
@@ -134,79 +151,114 @@ def _turn_columns(batch: pa.RecordBatch, idxs: list[int]) -> list[pa.Array]:
     ]
 
 
-def _triples_batch(batch: pa.RecordBatch, linker: _Linker) -> pa.RecordBatch:
-    pending = []  # (row, pred, subj key, obj key)
+def extract_batch(
+    batch: pa.RecordBatch, linker: _Linker, triples: bool, mentions: bool
+) -> pa.RecordBatch:
+    """The one worker body: ``extract_turn`` runs once per turn of
+    ``batch`` and the linker once per batch, over the surfaces of the
+    outputs asked for. → the triple rows (``TRIPLES_SCHEMA``), the
+    mention rows (``MENTIONS_SCHEMA``), or both in one tagged batch
+    (``EXTRACTION_SCHEMA``); the rows of an output not asked for are
+    never built.
+
+    A relation is kept when both arguments link to different entities;
+    its score is the weaker of the two link scores. Every mention is
+    kept, unlinked ones with a NULL ``entity_id`` and ``link_method``."""
     keys: set[str] = set()
+    pending = []  # (row, pred, subj key, obj key)
+    m_rows, m_idx, m_surf, m_start, m_end, m_exact, m_key = [], [], [], [], [], [], []
     for i, t in enumerate(batch.column("text").to_pylist()):
-        _, relations = extract_turn(t or "", linker.matcher)
-        for pred, subj, obj in relations:
-            s_key = normalize_surface(subj.surface)
-            o_key = normalize_surface(obj.surface)
-            keys.add(s_key)
-            keys.add(o_key)
-            pending.append((i, pred, s_key, o_key))
+        found, relations = extract_turn(t or "", linker.matcher)
+        if triples:
+            for pred, subj, obj in relations:
+                s_key = normalize_surface(subj.surface)
+                o_key = normalize_surface(obj.surface)
+                keys.add(s_key)
+                keys.add(o_key)
+                pending.append((i, pred, s_key, o_key))
+        if mentions:
+            for mi, m in enumerate(found):
+                m_rows.append(i)
+                m_idx.append(mi)
+                m_surf.append(m.surface)
+                m_start.append(m.start)
+                m_end.append(m.end)
+                m_exact.append(m.exact)
+                m_key.append(normalize_surface(m.surface))
+    keys.update(m_key)
     links = linker.links(keys)
 
-    idxs, c_s, c_p, c_o, c_sc = [], [], [], [], []
-    for i, pred, s_key, o_key in pending:
-        s_id, s_score, _ = links[s_key]
-        o_id, o_score, _ = links[o_key]
-        if s_id is not None and o_id is not None and s_id != o_id:
-            idxs.append(i)
-            c_s.append(s_id)
-            c_p.append(pred)
-            c_o.append(o_id)
-            c_sc.append(s_score if s_score < o_score else o_score)
-    return pa.RecordBatch.from_arrays(
-        [
-            *_turn_columns(batch, idxs),
-            pa.array(c_s, type=pa.string()),
-            pa.array(c_p, type=pa.string()),
-            pa.array(c_o, type=pa.string()),
-            pa.array(c_sc, type=pa.float64()),
-        ],
-        names=["conv_id", "turn_idx", "ts", "subj_entity_id", "pred", "obj_entity_id", "score"],
+    out = []
+    if triples:
+        idxs, c_s, c_p, c_o, c_sc = [], [], [], [], []
+        for i, pred, s_key, o_key in pending:
+            s_id, s_score, _ = links[s_key]
+            o_id, o_score, _ = links[o_key]
+            if s_id is not None and o_id is not None and s_id != o_id:
+                idxs.append(i)
+                c_s.append(s_id)
+                c_p.append(pred)
+                c_o.append(o_id)
+                c_sc.append(s_score if s_score < o_score else o_score)
+        out.append(pa.RecordBatch.from_arrays(
+            [
+                *_turn_columns(batch, idxs),
+                pa.array(c_s, type=pa.string()),
+                pa.array(c_p, type=pa.string()),
+                pa.array(c_o, type=pa.string()),
+                pa.array(c_sc, type=pa.float64()),
+            ],
+            names=TRIPLE_COLUMNS,
+        ))
+    if mentions:
+        linked = [links[k] for k in m_key]
+        out.append(pa.RecordBatch.from_arrays(
+            [
+                *_turn_columns(batch, m_rows),
+                pa.array(m_idx, type=pa.int32()),
+                pa.array(m_surf, type=pa.string()),
+                pa.array(m_start, type=pa.int32()),
+                pa.array(m_end, type=pa.int32()),
+                pa.array(m_exact, type=pa.bool_()),
+                pa.array([e for e, _, _ in linked], type=pa.string()),
+                pa.array([s for _, s, _ in linked], type=pa.float64()),
+                pa.array([m for _, _, m in linked], type=pa.string()),
+            ],
+            names=MENTION_COLUMNS,
+        ))
+    return out[0] if len(out) == 1 else _tagged(*out)
+
+
+def _tagged(tri: pa.RecordBatch, men: pa.RecordBatch) -> pa.RecordBatch:
+    """One ``EXTRACTION_SCHEMA`` batch: the triple rows, then the mention
+    rows, each NULL in the other's columns."""
+    cols = [pa.array([True] * tri.num_rows + [False] * men.num_rows, type=pa.bool_())]
+    for name in EXTRACTION_COLUMNS[1:]:
+        halves = [b.column(name) if name in b.schema.names else None for b in (tri, men)]
+        typ = next(h.type for h in halves if h is not None)
+        cols.append(pa.concat_arrays([
+            h if h is not None else pa.nulls(b.num_rows, typ)
+            for h, b in zip(halves, (tri, men))
+        ]))
+    return pa.RecordBatch.from_arrays(cols, names=EXTRACTION_COLUMNS)
+
+
+def _extract(
+    transcripts: DataFrame, bc_catalogue, bc_index, alpha, link_threshold, query_mode,
+    triples: bool, mentions: bool,
+) -> DataFrame:
+    """One ``mapInArrow`` pass of :func:`extract_batch` over ``transcripts``."""
+    schema = (
+        EXTRACTION_SCHEMA if triples and mentions
+        else TRIPLES_SCHEMA if triples
+        else MENTIONS_SCHEMA
     )
+    body = extract_batch  # bound on the driver; the closure ships it
 
-
-def _mentions_batch(batch: pa.RecordBatch, linker: _Linker) -> pa.RecordBatch:
-    idxs, c_mi, c_surf, c_start, c_end, c_exact, c_key = [], [], [], [], [], [], []
-    for i, t in enumerate(batch.column("text").to_pylist()):
-        mentions, _ = extract_turn(t or "", linker.matcher)
-        for mi, m in enumerate(mentions):
-            idxs.append(i)
-            c_mi.append(mi)
-            c_surf.append(m.surface)
-            c_start.append(m.start)
-            c_end.append(m.end)
-            c_exact.append(m.exact)
-            c_key.append(normalize_surface(m.surface))
-    links = linker.links(set(c_key))
-    linked = [links[k] for k in c_key]
-    return pa.RecordBatch.from_arrays(
-        [
-            *_turn_columns(batch, idxs),
-            pa.array(c_mi, type=pa.int32()),
-            pa.array(c_surf, type=pa.string()),
-            pa.array(c_start, type=pa.int32()),
-            pa.array(c_end, type=pa.int32()),
-            pa.array(c_exact, type=pa.bool_()),
-            pa.array([e for e, _, _ in linked], type=pa.string()),
-            pa.array([s for _, s, _ in linked], type=pa.float64()),
-            pa.array([m for _, _, m in linked], type=pa.string()),
-        ],
-        names=[
-            "conv_id", "turn_idx", "ts", "mention_idx", "surface", "start", "end",
-            "exact", "entity_id", "link_score", "link_method",
-        ],
-    )
-
-
-def _fused(body, schema, transcripts, bc_catalogue, bc_index, alpha, link_threshold, query_mode):
     def run(batches):
         linker = _Linker(bc_catalogue, bc_index, alpha, link_threshold, query_mode)
         for batch in batches:
-            yield body(batch, linker)
+            yield body(batch, linker, triples, mentions)
 
     return transcripts.select("conv_id", "turn_idx", "ts", "text").mapInArrow(run, schema=schema)
 
@@ -220,11 +272,10 @@ def extract_linked_triples(
     query_mode: str = "hybrid",
 ) -> DataFrame:
     """transcripts → fully linked triples (``TRIPLES_SCHEMA``) in one
-    ``mapInArrow`` pass.  A relation is kept when both arguments link to
-    different entities; its score is the weaker of the two link scores."""
-    return _fused(
-        _triples_batch, TRIPLES_SCHEMA, transcripts, bc_catalogue, bc_index,
-        alpha, link_threshold, query_mode,
+    ``mapInArrow`` pass: :func:`extract_batch` building triple rows only."""
+    return _extract(
+        transcripts, bc_catalogue, bc_index, alpha, link_threshold, query_mode,
+        triples=True, mentions=False,
     )
 
 
@@ -237,9 +288,42 @@ def extract_linked_mentions(
     query_mode: str = "hybrid",
 ) -> DataFrame:
     """transcripts → linked mentions (``MENTIONS_SCHEMA``) in one
-    ``mapInArrow`` pass: one row per extracted mention, unlinked ones
-    included (NULL ``entity_id`` and ``link_method``)."""
-    return _fused(
-        _mentions_batch, MENTIONS_SCHEMA, transcripts, bc_catalogue, bc_index,
-        alpha, link_threshold, query_mode,
+    ``mapInArrow`` pass: :func:`extract_batch` building mention rows
+    only, unlinked mentions included."""
+    return _extract(
+        transcripts, bc_catalogue, bc_index, alpha, link_threshold, query_mode,
+        triples=False, mentions=True,
     )
+
+
+def extract_linked(
+    transcripts: DataFrame,
+    bc_catalogue,
+    bc_index,
+    alpha: float,
+    link_threshold: float,
+    query_mode: str = "hybrid",
+) -> DataFrame:
+    """transcripts → triples AND mentions in one ``mapInArrow`` pass, as
+    one tagged frame (``EXTRACTION_SCHEMA``): every turn is extracted and
+    linked once for both. :func:`triple_rows` and :func:`mention_rows`
+    project it back to the two one-output schemas."""
+    return _extract(
+        transcripts, bc_catalogue, bc_index, alpha, link_threshold, query_mode,
+        triples=True, mentions=True,
+    )
+
+
+def is_tagged(df: DataFrame) -> bool:
+    """Whether ``df`` is an :func:`extract_linked` frame."""
+    return df.columns[:1] == [EXTRACTION_COLUMNS[0]]
+
+
+def triple_rows(tagged: DataFrame) -> DataFrame:
+    """The triples (``TRIPLES_SCHEMA``) of an :func:`extract_linked` frame."""
+    return tagged.filter(F.col(EXTRACTION_COLUMNS[0])).select(*TRIPLE_COLUMNS)
+
+
+def mention_rows(tagged: DataFrame) -> DataFrame:
+    """The mentions (``MENTIONS_SCHEMA``) of an :func:`extract_linked` frame."""
+    return tagged.filter(~F.col(EXTRACTION_COLUMNS[0])).select(*MENTION_COLUMNS)

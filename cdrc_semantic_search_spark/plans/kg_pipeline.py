@@ -9,11 +9,13 @@ Plan-shape invariants (the 100-TB contract):
 * the transcripts fact table is read once, never shuffled before
   extraction (mapInArrow is partition-local, so nothing repartitions
   its input);
-* triples and mentions each come from ONE map-only Arrow stage that
-  extracts and links against broadcast state (alias automaton + entity
-  index) — zero fact-side shuffles until the final aggregations, which
-  group on (entity, pred, entity) — a space orders of magnitude smaller
-  than the input; the entity-dim enrich join of kg_nodes broadcasts;
+* triples and mentions come from ONE map-only Arrow stage that extracts
+  and links against broadcast state (alias automaton + entity index); a
+  run that writes both persists the stage's tagged output once, so each
+  turn is extracted once — zero fact-side shuffles until the final
+  aggregations, which group on (entity, pred, entity) — a space orders
+  of magnitude smaller than the input; the entity-dim enrich join of
+  kg_nodes broadcasts;
 * kg_edges aggregation is a plain groupBy → partial (map-side) aggregation
   halves shuffle volume for free; hot-entity skew is AQE's problem
   (skew-join on) plus the salted two-stage option in operators/assembly.
@@ -21,19 +23,25 @@ Plan-shape invariants (the 100-TB contract):
 
 from __future__ import annotations
 
+import contextlib
 import json
 import logging
 import os
+from collections.abc import Collection
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cdrc_semantic_search_spark.config import Settings
 from cdrc_semantic_search_spark.operators.extraction import (
     broadcast_catalogue,
+    extract_linked,
     extract_linked_mentions,
     extract_linked_triples,
+    is_tagged,
+    mention_rows,
+    triple_rows,
 )
 from cdrc_semantic_search_spark.operators.linking import build_entity_index
 from cdrc_semantic_search_spark.sources.catalog import (
@@ -52,6 +60,9 @@ _CANON_PARAMS = "_canon_params.json"
 
 class KGPipeline:
     """Holds the broadcast state (catalogue + entity index) for a run."""
+
+    DELTA_TABLES = ("edge_deltas", "node_deltas", "surface_deltas")
+    BASE_TABLES = ("kg_edges", "kg_nodes", "surface_clusters")
 
     def __init__(self, spark: SparkSession, entities_pdf: pd.DataFrame, settings: Settings | None = None):
         import uuid
@@ -79,7 +90,11 @@ class KGPipeline:
         """Linked mentions table (FIXTURES.md §3 `mentions` shape): one row
         per extracted mention, unlinked ones included, from the same fused
         map-only Arrow stage as :meth:`triples`
-        (operators/extraction.extract_linked_mentions)."""
+        (operators/extraction.extract_linked_mentions). Given the tagged
+        frame of one extraction pass (see :meth:`_extraction`), it
+        projects that frame's mentions instead of extracting again."""
+        if is_tagged(transcripts):
+            return mention_rows(transcripts)
         return self._extract(extract_linked_mentions, transcripts)
 
     def triples(self, transcripts: DataFrame) -> DataFrame:
@@ -92,8 +107,33 @@ class KGPipeline:
         bounds triple confidence (alias hits score 1.0; embedding-fallback
         links carry their hybrid α·dense+(1−α)·sparse score, the
         reference's blend from config.toml:14-15 / model.py:74-78).
+        Given the tagged frame of one extraction pass (see
+        :meth:`_extraction`), it projects that frame's triples instead.
         """
+        if is_tagged(transcripts):
+            return triple_rows(transcripts)
         return self._extract(extract_linked_triples, transcripts)
+
+    @contextlib.contextmanager
+    def _extraction(self, transcripts: DataFrame, triples: bool, mentions: bool):
+        """→ (:meth:`triples`, :meth:`mentions`) of ``transcripts``, None
+        for an output not asked for. Asked for both, they are projections
+        of ONE extraction pass (operators/extraction.extract_linked)
+        persisted for the block, so each turn is extracted and linked
+        once: the first write over either output fills the cache and the
+        later ones read it. The cache is released on the way out, raised
+        or not."""
+        if not (triples and mentions):
+            yield (
+                self.triples(transcripts) if triples else None,
+                self.mentions(transcripts) if mentions else None,
+            )
+            return
+        both = self._extract(extract_linked, transcripts).persist()
+        try:
+            yield self.triples(both), self.mentions(both)
+        finally:
+            both.unpersist()
 
     def collective_mentions(
         self, transcripts: DataFrame, k: int = 3, beta: float = 0.25
@@ -476,25 +516,26 @@ class KGPipeline:
         analog: create-or-replace node/edge tables, the reference's
         src/datastore.py:80-95).
 
-        Two rounds of staged writes that run at the same time: ``triples``
-        and ``mentions``; then, over their staged bytes, ``kg_edges``,
-        ``kg_nodes`` and ``surface_clusters``. One catalog commit then
-        swaps all five in, so the catalog holds either the previous
-        graph or this one: a failed write re-raises once its round has
-        finished, and leaves every live table as it was. Returns
-        per-table row counts, read from the written footers."""
-        staged = catalog.stage(
-            {"triples": self.triples(transcripts), "mentions": self.mentions(transcripts)}
-        )
-        tri_s = read_parquet(self.spark, staged["triples"])
-        men_s = read_parquet(self.spark, staged["mentions"])
-        catalog.stage(
-            {
-                "kg_edges": self.kg_edges(tri_s),
-                "kg_nodes": self.kg_nodes(men_s),
-                "surface_clusters": self.surface_clusters(men_s),
-            }
-        )
+        One extraction pass serves every table (:meth:`_extraction`): the
+        staged ``triples`` write runs it and fills its cache; then four
+        staged writes run at the same time — ``mentions``, ``kg_nodes``
+        and ``surface_clusters`` over the cached mentions, ``kg_edges``
+        over the staged triples' bytes. One catalog commit then swaps all
+        five in, so the catalog holds either the previous graph or this
+        one: a failed write re-raises once its round has finished, and
+        leaves every live table as it was. Returns per-table row counts,
+        read from the written footers."""
+        with self._extraction(transcripts, triples=True, mentions=True) as (tri, men):
+            staged = catalog.stage({"triples": tri})
+            tri_s = read_parquet(self.spark, staged["triples"])
+            catalog.stage(
+                {
+                    "mentions": men,
+                    "kg_edges": self.kg_edges(tri_s),
+                    "kg_nodes": self.kg_nodes(men),
+                    "surface_clusters": self.surface_clusters(men),
+                }
+            )
         tables = ["triples", "mentions", "kg_edges", "kg_nodes", "surface_clusters"]
         catalog.commit(swap=tables)
         return {name: footer_rows(catalog.table_path(name)) for name in tables}
@@ -523,11 +564,11 @@ class KGPipeline:
         because merge(f(A), f(B)) ≡ f(A ∪ B) (see merge_edge_deltas).
         A crash between the triples commit and its delta commits leaves
         that bucket in the resume set; re-running overwrites the deltas
-        in place, so edges are never double-counted.  The edge delta is
-        derived by reading BACK the committed triples partition (not by
-        re-running extraction), so delta lineage is exactly the committed
-        bytes; the node delta re-extracts mentions for its bucket — at
-        production scale the two extractions fuse into one pass.
+        in place, so edges are never double-counted.  Each bucket goes
+        through :meth:`commit_batch`: one extraction pass yields both its
+        triples and the mentions its node and surface deltas count, and
+        the edge delta is derived by reading BACK the committed triples
+        partition, so delta lineage is exactly the committed bytes.
 
         Lineage consistency on resume: a bucket's deltas must derive from
         triples of the SAME source_snapshot as the current run.  If the
@@ -582,99 +623,103 @@ class KGPipeline:
                 todo_by_table[t] |= stale
         todo = [p for p in all_parts if any(p in todo_by_table[t] for t in tables)]
         with_bucket = transcripts.withColumn("__bucket", bucket)
-        ran = []
-        from pyspark.sql import Observation
-
         for part in todo:
-            sub = with_bucket.filter(F.col("__bucket") == int(part)).drop("__bucket")
-            if part in todo_by_table["triples"]:
-                n_turns = sub.count()
-                # Observation rides the write actions — score/link-quality
-                # lineage lands in the ledger with NO extra job (A6 analog)
-                obs = Observation(f"triples_part_{part}")
-                tri = self.triples(sub).observe(
-                    obs,
-                    F.count(F.lit(1)).alias("triple_count"),
-                    F.round(F.avg("score"), 6).alias("avg_link_score"),
-                    F.round(F.min("score"), 6).alias("min_link_score"),
-                )
-                # ledger row_count == triple_count; lineage carries the turn count
+            self.commit_batch(
+                catalog,
+                with_bucket.filter(F.col("__bucket") == int(part)).drop("__bucket"),
+                part,
+                source_snapshot,
+                triples=part in todo_by_table["triples"],
+                deltas=[t for t in tables[1:] if part in todo_by_table[t]],
+            )
+        return todo
+
+    def commit_batch(
+        self,
+        catalog: ParquetTableCatalog,
+        transcripts: DataFrame,
+        partition: str,
+        source_snapshot: str,
+        table: str = "triples",
+        triples: bool = True,
+        deltas: Collection[str] = (),
+    ) -> None:
+        """Commit one batch of ``transcripts`` as ``partition``: its triples
+        to ``table`` (skipped when ``triples`` is False), then the graph
+        deltas named in ``deltas`` (:meth:`commit_graph_deltas`). The one
+        implementation behind both the batch path (run_partitioned) and
+        the streaming path (streaming.incremental.stream_triples).
+
+        Each turn is extracted once: when the triples and the node or
+        surface deltas are all due, they come from one extraction pass,
+        persisted for the batch (:meth:`_extraction`). Observations ride
+        the triples write and land in its ledger record with no extra
+        job: ``turn_count`` counts the batch's input rows, and
+        ``triple_count`` / ``avg_link_score`` / ``min_link_score``
+        describe its triples (A6 analog). An empty batch commits empty
+        partitions, with a ``turn_count`` of 0."""
+        if triples:
+            turns = Observation()
+            transcripts = transcripts.observe(turns, F.count(F.lit(1)).alias("turn_count"))
+        mentions = bool({"node_deltas", "surface_deltas"} & set(deltas))
+        with self._extraction(transcripts, triples, mentions) as (tri, men):
+            if triples:
+                links = Observation()
                 catalog.overwrite_partition(
-                    tri,
-                    "triples",
-                    part,
+                    tri.observe(
+                        links,
+                        F.count(F.lit(1)).alias("triple_count"),
+                        F.round(F.avg("score"), 6).alias("avg_link_score"),
+                        F.round(F.min("score"), 6).alias("min_link_score"),
+                    ),
+                    table,
+                    partition,
                     source_snapshot=source_snapshot,
-                    metrics={"turn_count": n_turns},
-                    metrics_fn=lambda o=obs: o.get,
+                    metrics_fn=lambda: {**turns.get, **links.get},
                 )
-            if with_graph:
+            if deltas:
                 self.commit_graph_deltas(
-                    catalog,
-                    part,
-                    source_snapshot,
-                    sub,
-                    edges=part in todo_by_table["edge_deltas"],
-                    nodes=part in todo_by_table["node_deltas"],
-                    surfaces=part in todo_by_table["surface_deltas"],
+                    catalog, partition, source_snapshot, men, table, deltas
                 )
-            ran.append(part)
-        return ran
 
     def commit_graph_deltas(
         self,
         catalog: ParquetTableCatalog,
         partition: str,
         source_snapshot: str,
-        transcripts_batch: DataFrame,
+        mentions: DataFrame | None,
         triples_table: str = "triples",
-        edges: bool = True,
-        nodes: bool = True,
-        surfaces: bool = True,
+        deltas: Collection[str] = DELTA_TABLES,
     ) -> None:
-        """Commit one partition's edge/node/surface DELTAS — the single
-        shared implementation behind both the batch path (run_partitioned)
-        and the streaming path (streaming.incremental.stream_triples), so
-        the table names, derive-from-committed-bytes rule, and metrics
-        shape can never drift apart.
+        """Commit one partition's edge/node/surface DELTAS (the tables
+        named in ``deltas``) at the same time, through one
+        ``overwrite_partitions`` call, so the table names,
+        derive-from-committed-bytes rule, and metrics shape can never
+        drift apart between the batch and streaming paths
+        (:meth:`commit_batch`).
 
         Edge deltas derive from the COMMITTED triples partition (exact
         lineage); node deltas are the slim mentioned-entities-only counts
-        (``mention_counts``); surface deltas are the distinct normalized
-        surface forms (``surface_forms``) — all three re-aggregate at
-        compaction to exactly the full-batch result by their merge
-        algebras.  The batch's mention extraction is persisted across the
-        node and surface commits so it runs once, not per table."""
-        if edges:
+        (``mention_counts``) and surface deltas the distinct normalized
+        surface forms (``surface_forms``) of the batch's ``mentions``
+        (None when neither is due) — all three re-aggregate at compaction
+        to exactly the full-batch result by their merge algebras. Each
+        table commits on its own, so a failed write leaves only its own
+        partition uncommitted, for the next run to redo."""
+        frames = {}
+        if "edge_deltas" in deltas:
             tri_c = catalog.read_partition(self.spark, triples_table, partition)
-            catalog.overwrite_partition(
-                self.kg_edges(tri_c),
-                "edge_deltas",
-                partition,
-                source_snapshot=source_snapshot,
-                metrics={"derived_from": f"{triples_table}/{partition}"},
-            )
-        if nodes or surfaces:
-            men = self.mentions(transcripts_batch)
-            if nodes and surfaces:
-                men = men.persist()  # two write actions read it
-            try:
-                if nodes:
-                    catalog.overwrite_partition(
-                        self.mention_counts(men),
-                        "node_deltas",
-                        partition,
-                        source_snapshot=source_snapshot,
-                    )
-                if surfaces:
-                    catalog.overwrite_partition(
-                        self.surface_forms(men),
-                        "surface_deltas",
-                        partition,
-                        source_snapshot=source_snapshot,
-                    )
-            finally:
-                if nodes and surfaces:
-                    men.unpersist()
+            frames["edge_deltas"] = self.kg_edges(tri_c)
+        if "node_deltas" in deltas:
+            frames["node_deltas"] = self.mention_counts(mentions)
+        if "surface_deltas" in deltas:
+            frames["surface_deltas"] = self.surface_forms(mentions)
+        catalog.overwrite_partitions(
+            frames,
+            partition,
+            source_snapshot=source_snapshot,
+            metrics={"edge_deltas": {"derived_from": f"{triples_table}/{partition}"}},
+        )
 
     @staticmethod
     def _base_table(spark: SparkSession, catalog: ParquetTableCatalog, name: str):
@@ -745,8 +790,6 @@ class KGPipeline:
             raise FileNotFoundError("no committed node_deltas and no kg_nodes base")
         return fresh
 
-    DELTA_TABLES = ("edge_deltas", "node_deltas", "surface_deltas")
-    BASE_TABLES = ("kg_edges", "kg_nodes", "surface_clusters")
     #: cosine threshold for surface canonicalization — part of the
     #: clustering fingerprint, so full and incremental paths must share it
     CANON_THRESHOLD = 0.85

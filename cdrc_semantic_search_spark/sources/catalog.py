@@ -48,12 +48,13 @@ open must not race another writer's commit in flight.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import time
 import logging
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, fields
 from typing import Any
@@ -152,6 +153,19 @@ def _record_from_json(rec: dict) -> CommitRecord:
     )
 
 
+def _at_once(spark: SparkSession, calls: Sequence[Callable[[], Any]]) -> None:
+    """Run each call on its own thread, all at the same time, then
+    re-raise the first failure (in ``calls`` order) once every call has
+    finished. Each thread inherits the caller's Spark local properties,
+    so its jobs are filed under the caller's job group; the calls share
+    the scheduler, which fills the cores a single small write leaves
+    idle."""
+    with ThreadPoolExecutor(len(calls)) as pool:
+        done = [pool.submit(inheritable_thread_target(spark)(call)) for call in calls]
+    for d in done:
+        d.result()
+
+
 class ParquetTableCatalog:
     def __init__(self, root: str):
         self.root = root
@@ -203,27 +217,16 @@ class ParquetTableCatalog:
         self.commit(swap=[name])
 
     def stage(self, frames: dict[str, DataFrame]) -> dict[str, str]:
-        """Write each frame to its table's staged copy, one thread each,
-        all at the same time, and return the staged copies' paths (a
-        later stage may read them). Once all writes have finished,
-        the first failing write's exception (in ``frames`` order) is
-        re-raised; the live tables are untouched either way. Each thread
-        inherits the caller's Spark local properties, so its jobs are
-        filed under the caller's job group; the writes share the
-        scheduler, which fills the cores a single small write leaves
-        idle."""
+        """Write each frame to its table's staged copy, all at the same
+        time (:func:`_at_once`), and return the staged copies' paths (a
+        later stage may read them). Once all writes have finished, the
+        first failing write's exception (in ``frames`` order) is
+        re-raised; the live tables are untouched either way."""
         self.roll_forward()
-        spark = next(iter(frames.values())).sparkSession
-        with ThreadPoolExecutor(len(frames)) as pool:
-            done = [
-                pool.submit(
-                    inheritable_thread_target(spark)(df.write.mode("overwrite").parquet),
-                    self._staging_path(name),
-                )
-                for name, df in frames.items()
-            ]
-        for d in done:
-            d.result()
+        _at_once(next(iter(frames.values())).sparkSession, [
+            functools.partial(df.write.mode("overwrite").parquet, self._staging_path(name))
+            for name, df in frames.items()
+        ])
         return {name: self._staging_path(name) for name in frames}
 
     def commit(
@@ -387,6 +390,28 @@ class ParquetTableCatalog:
             _write_json(hist, prev)
         _write_json(marker, rec.__dict__)  # atomic commit
         return rec
+
+    def overwrite_partitions(
+        self,
+        frames: dict[str, DataFrame],
+        partition: str,
+        source_snapshot: str = "",
+        metrics: dict[str, dict[str, Any]] | None = None,
+    ) -> None:
+        """:meth:`overwrite_partition` of one ``partition`` in each table of
+        ``frames``, all at the same time (:func:`_at_once`); ``metrics``
+        maps a table to its ledger metrics. Each table commits on its
+        own: a failed write leaves its partition as it was and the other
+        tables commit theirs. Once all have finished, the first failure
+        (in ``frames`` order) is re-raised."""
+        metrics = metrics or {}
+        _at_once(next(iter(frames.values())).sparkSession, [
+            functools.partial(
+                self.overwrite_partition, df, name, partition,
+                source_snapshot=source_snapshot, metrics=metrics.get(name),
+            )
+            for name, df in frames.items()
+        ])
 
     # ---- reads -----------------------------------------------------------
     def read_table(self, spark: SparkSession, name: str) -> DataFrame:

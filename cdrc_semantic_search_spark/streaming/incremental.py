@@ -41,6 +41,18 @@ def transcript_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
+def _last_checkpointed_batch(checkpoint_dir: str) -> int:
+    """The newest batch id in the stream checkpoint's commit log, -1 if
+    none. Spark runs micro-batches in id order and logs each one's commit
+    after its ``foreachBatch`` returns, so every id up to this one is
+    done; the log purges its oldest entries, so only the newest counts."""
+    try:
+        names = os.listdir(os.path.join(checkpoint_dir, "commits"))
+    except FileNotFoundError:
+        return -1
+    return max((int(n) for n in names if n.isdigit()), default=-1)
+
+
 def stream_triples(
     spark: SparkSession,
     pipeline: KGPipeline,
@@ -54,35 +66,42 @@ def stream_triples(
 
     Each micro-batch commits partition ``batch_id`` to the ledger with
     row/turn counts — re-delivered batches overwrite idempotently rather
-    than append twice (exactly-once effect on the table).
+    than append twice (exactly-once effect on the table). The turn count
+    comes from an Observation that rides the triples write, so a batch
+    runs no counting job; a batch with no rows commits empty partitions.
 
     ``with_graph=True`` additionally commits the batch's
     edge/node/surface DELTAS (same log-structured scheme as
-    ``KGPipeline.run_partitioned``): the merge algebra
-    (merge(f(A), f(B)) ≡ f(A ∪ B)) makes the compacted graph independent
-    of how the stream happened to micro-batch the turns, so
+    ``KGPipeline.run_partitioned``, through the same
+    ``KGPipeline.commit_batch``): one extraction pass per batch feeds
+    the triples and the node and surface deltas, and once the triples
+    are committed the three deltas commit at the same time. The merge
+    algebra (merge(f(A), f(B)) ≡ f(A ∪ B)) makes the compacted graph
+    independent of how the stream happened to micro-batch the turns, so
     ``compacted_edges``/``compacted_nodes``/``compacted_surface_clusters``
     over a streamed catalog equal the one-shot batch rebuild (asserted
     in tests/test_streaming.py).
 
     Torn batches self-heal: a crash inside ``process`` leaves the batch
-    un-checkpointed, so availableNow re-delivers it and the idempotent
-    partition overwrites repair every table.  What CANNOT self-heal is a
-    catalog whose triples batches were committed WITHOUT some delta
-    table (e.g. written before with_graph, or by an older build) — the
-    source files are checkpointed away and node/surface deltas need the
-    original batch rows.  That state is detected up front and raises
-    rather than silently compacting an incomplete graph.
+    out of the checkpoint's commit log, so availableNow re-delivers it
+    and the idempotent partition overwrites repair every table.  What
+    CANNOT self-heal is a batch the commit log records whose triples
+    were committed WITHOUT some delta table (e.g. written before
+    with_graph, or by an older build) — the source files are
+    checkpointed away and node/surface deltas need the original batch
+    rows.  That state is detected up front and raises rather than
+    silently compacting an incomplete graph.
     """
     if with_graph:
-        done = catalog.committed_partitions(table)
+        last = _last_checkpointed_batch(checkpoint_dir)
+        done = {p for p in catalog.committed_partitions(table) if int(p) <= last}
         gaps = {
             t: sorted(
                 done
                 - catalog.committed_partitions(t)
                 - catalog.retired_partitions(t)  # folded into a base by compaction
             )
-            for t in ("edge_deltas", "node_deltas", "surface_deltas")
+            for t in KGPipeline.DELTA_TABLES
         }
         gaps = {t: ps for t, ps in gaps.items() if ps}
         if gaps:
@@ -94,25 +113,13 @@ def stream_triples(
                 "complete compacted graph."
             )
 
+    snapshot = f"stream:{os.path.basename(input_dir)}"
+    deltas = KGPipeline.DELTA_TABLES if with_graph else ()
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        n_turns = batch_df.count()
-        if n_turns == 0:
-            return
-        snapshot = f"stream:{os.path.basename(input_dir)}"
-        tri = pipeline.triples(batch_df)
-        catalog.overwrite_partition(
-            tri,
-            table,
-            partition=str(batch_id),
-            source_snapshot=snapshot,
-            metrics={"turn_count": n_turns},
+        pipeline.commit_batch(
+            catalog, batch_df, str(batch_id), snapshot, table=table, deltas=deltas
         )
-        if with_graph:
-            # shared implementation with the batch path — see
-            # KGPipeline.commit_graph_deltas for the lineage rules
-            pipeline.commit_graph_deltas(
-                catalog, str(batch_id), snapshot, batch_df, triples_table=table
-            )
 
     q = (
         transcript_stream(spark, input_dir)

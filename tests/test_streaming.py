@@ -619,3 +619,99 @@ def test_batch_upsert_folds_streamed_deltas(spark, tmp_path):
     want2 = topk_pq_adc(spark, q, mk(range(22), final), books, k=5).toPandas()
     got2 = topk_pq_adc_index(spark, q, catalog, k=5).toPandas()
     assert pair(got2) == pair(want2)
+
+
+def _graph(spark, pipe, cat):
+    """The compacted graph of a streamed catalog, as comparable row sets."""
+    return (
+        _rows(KGPipeline.compacted_edges(spark, cat)),
+        _rows(pipe.compacted_nodes(cat)),
+        _rows(pipe.compacted_surface_clusters(cat)),
+    )
+
+
+def test_torn_streamed_batch_heals_on_the_next_run(
+    spark, fixture, spark_fixture, tmp_path, monkeypatch
+):
+    """A batch whose node-delta write fails after its triples committed is
+    not in the checkpoint's commit log: the next run takes it again, the
+    up-front gap check lets it through, and the compacted graph equals
+    the one-shot batch rebuild."""
+    tdf, _ = spark_fixture
+    pipe = KGPipeline(spark, fixture.entities, Settings())
+    cat = ParquetTableCatalog(str(tmp_path / "torn_cat"))
+    src, ckpt = str(tmp_path / "torn_src"), str(tmp_path / "torn_ckpt")
+    tdf.repartition(2).write.parquet(src)
+
+    def boom(_):
+        raise RuntimeError("node delta write failed on purpose")
+
+    def failing_counts(mentions):
+        return mentions.select(F.udf(boom, "long")("entity_id").alias("n_mentions"))
+
+    with monkeypatch.context() as m:
+        m.setattr(KGPipeline, "mention_counts", staticmethod(failing_counts))
+        with pytest.raises(Exception, match="node delta write failed on purpose"):
+            incremental.stream_triples(spark, pipe, src, cat, ckpt, with_graph=True)
+    assert cat.committed_partitions("stream_triples") == {"0"}
+    assert cat.committed_partitions("node_deltas") == set()
+    # the other two deltas ran at the same time and committed
+    assert cat.committed_partitions("edge_deltas") == {"0"}
+    assert cat.committed_partitions("surface_deltas") == {"0"}
+    assert not os.path.exists(os.path.join(ckpt, "commits", "0"))
+
+    incremental.stream_triples(spark, pipe, src, cat, ckpt, with_graph=True)
+    for t in ("stream_triples",) + KGPipeline.DELTA_TABLES:
+        assert cat.committed_partitions(t) == {"0"}, t
+    assert _graph(spark, pipe, cat) == (
+        _rows(pipe.kg_edges(pipe.triples(tdf))),
+        _rows(pipe.kg_nodes(pipe.mentions(tdf))),
+        _rows(pipe.surface_clusters(pipe.mentions(tdf))),
+    )
+
+
+def test_checkpointed_batch_without_deltas_is_refused(
+    spark, fixture, spark_fixture, tmp_path
+):
+    """A batch the checkpoint records as done, committed without graph
+    deltas, cannot heal: Spark will not deliver it again, so a later
+    with_graph run refuses rather than compact an incomplete graph."""
+    tdf, _ = spark_fixture
+    pipe = KGPipeline(spark, fixture.entities, Settings())
+    cat = ParquetTableCatalog(str(tmp_path / "gap_cat"))
+    src, ckpt = str(tmp_path / "gap_src"), str(tmp_path / "gap_ckpt")
+    tdf.repartition(2).write.parquet(src)
+    incremental.stream_triples(spark, pipe, src, cat, ckpt)
+    assert cat.committed_partitions("stream_triples") == {"0"}
+    with pytest.raises(ValueError, match="graph deltas missing"):
+        incremental.stream_triples(spark, pipe, src, cat, ckpt, with_graph=True)
+
+
+def test_zero_row_micro_batch_commits_empty_partitions(
+    spark, fixture, spark_fixture, tmp_path
+):
+    """A landed file with no rows is a micro-batch of zero turns: it
+    commits an empty partition in all four tables, with a turn count of
+    0, the compacted graph stays as it was, and the next run's gap check
+    passes."""
+    tdf, _ = spark_fixture
+    pipe = KGPipeline(spark, fixture.entities, Settings())
+    cat = ParquetTableCatalog(str(tmp_path / "empty_cat"))
+    src, ckpt = str(tmp_path / "empty_src"), str(tmp_path / "empty_ckpt")
+    tdf.repartition(2).write.parquet(src)
+    incremental.stream_triples(spark, pipe, src, cat, ckpt, with_graph=True)
+    pipe.compact_graph(cat)
+    before = _graph(spark, pipe, cat)
+
+    tdf.limit(0).write.mode("append").parquet(src)
+    incremental.stream_triples(spark, pipe, src, cat, ckpt, with_graph=True)
+    recs = {
+        t: {r.partition: r for r in cat.ledger(t)}["1"]
+        for t in ("stream_triples",) + KGPipeline.DELTA_TABLES
+    }
+    assert {t: r.row_count for t, r in recs.items()} == dict.fromkeys(recs, 0)
+    assert recs["stream_triples"].metrics["turn_count"] == 0
+
+    pipe.compact_graph(cat)
+    assert _graph(spark, pipe, cat) == before
+    incremental.stream_triples(spark, pipe, src, cat, ckpt, with_graph=True)
